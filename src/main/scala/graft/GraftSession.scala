@@ -20,13 +20,24 @@ import org.apache.spark.sql.SparkSession
   *    fact-side shuffles must survive key skew without manual salting.
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local parallelism: `SPARK_GRAFT_CPUS`, read and checked once;
+    * 32 when unset. */
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A positive integer, or a failure that names the variable — a bad
+    * value must not reach `local[...]` or a bench JSON line. */
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => 32
+    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
 
   def apply(appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

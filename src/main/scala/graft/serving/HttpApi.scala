@@ -12,6 +12,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JsonSchemas
 
 import graft.catalog.{EntityCatalog, EntitySpec}
 import graft.sinks.DocumentSink
@@ -62,6 +63,8 @@ final class HttpApi(
     outDir: String,
     runTs: String = graft.operators.Denormalize.RunTs,
     maxHits: Int = 1000) {
+
+  import HttpApi._
 
   private val mapper = new ObjectMapper()
   @volatile private var server: HttpServer = _
@@ -170,17 +173,36 @@ final class HttpApi(
     })
   }
 
+  @volatile private var pool: java.util.concurrent.ExecutorService = _
+
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4))
+    val bound = server.getAddress.getPort
+    val threads = java.util.concurrent.Executors.defaultThreadFactory()
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    pool = java.util.concurrent.Executors.newFixedThreadPool(4,
+      (r: Runnable) => {
+        val t = threads.newThread(r)
+        t.setName(s"graft-http-$bound-${n.incrementAndGet()}")
+        t
+      })
+    server.setExecutor(pool)
     server.start()
-    server.getAddress.getPort
+    bound
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop the server and shut down its request threads (they are not
+    * daemons: left running, they would keep the JVM alive), waiting a
+    * bounded time for in-flight requests. */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
+    }
+  }
 
   // -------------------------------------------------------------------
   // Routing
@@ -1954,38 +1976,29 @@ final class HttpApi(
   /** POST /{entity} — validate + default + lineage, then upsert into the
     * entity's document index (reference `add_*`: prepare_entity_data →
     * index, src/routes/ticket_routes.py:98-137). Missing id → minted
-    * uuid (src/utils.py:99-111). */
+    * uuid (src/utils.py:99-111). The document derives through the SAME
+    * [[deriveDocs]] the bulk endpoint's index action uses. */
   private def insertOne(ex: HttpExchange, spec: EntitySpec,
                         req: JsonNode): Unit = {
     if (!req.isObject) {
       respond(ex, 400, """{"error": "expected a JSON object"}"""); return
     }
-    val raw = bodyDf(req)
-    val withId =
-      if (raw.columns.contains(spec.idCol)) raw
-      else raw.withColumn(spec.idCol, lit(null).cast("string"))
-    val defaulted = EntityCatalog.defaulted(withId, spec)
-    val missing = spec.requiredCols.filterNot(defaulted.columns.contains)
-    if (missing.nonEmpty) {
-      respond(ex, 400, s"""{"error": "missing required fields: ${
-        missing.mkString(", ")}"}""")
-      return
+    deriveDocs(spec, Seq((None, req)),
+        index(spec.name).map(_.schema)).head match {
+      case Left(MissingFields(missing)) =>
+        respond(ex, 400, s"""{"error": "missing required fields: ${
+          missing.mkString(", ")}"}""")
+      case Left(NullRequired) =>
+        respond(ex, 400, """{"error": "validation failed"}""")
+      case Left(u: Unparsable) =>
+        respond(ex, 400, mapper.createObjectNode()
+          .put("error", u.reason).toString)
+      case Right((row, schema)) =>
+        DocumentSink.upsert(spark.createDataFrame(
+          java.util.Arrays.asList(row), schema), s"$outDir/${spec.name}")
+        val id = row.getAs[Any](schema.fieldIndex("document_id"))
+        respond(ex, 201, s"""{"result": "created", "document_id": "$id"}""")
     }
-    val docs = EntityCatalog.pipeline(defaulted, spec, runTs)
-      .withColumn("document_id",
-        col(s"${spec.name}_${spec.idCol}").cast("string"))
-    // pin the (≤1-row) result before writing: uuid() defaulting is
-    // nondeterministic per evaluation, so re-running the plan for the
-    // write would mint a DIFFERENT id than the one we return
-    val out = docs.collect()
-    if (out.isEmpty) {
-      respond(ex, 400, """{"error": "validation failed"}"""); return
-    }
-    val pinned = spark.createDataFrame(
-      java.util.Arrays.asList(out: _*), docs.schema)
-    DocumentSink.upsert(pinned, s"$outDir/${spec.name}")
-    val id = out.head.getAs[Any]("document_id")
-    respond(ex, 201, s"""{"result": "created", "document_id": "$id"}""")
   }
 
   /** POST /{entity}/batch — bulk insert with the reference's per-item
@@ -2021,10 +2034,17 @@ final class HttpApi(
   // src/es_connector.py:51-74): ndjson action/source line pairs over
   // index/create/update/delete, applied IN ORDER with per-item status
   // slots — a failing item never fails the request wholesale. The
-  // 100 TB shape: per-item work is request-bounded driver validation;
-  // the expensive store rewrite batches to ONE upsert + ONE delete
-  // swap per touched entity, never one swap per item.
+  // cost follows the entities and document schemas a request touches,
+  // not its action count: index/create sources derive in one Spark job
+  // per (entity, inferred document schema) ([[deriveDocs]]), the
+  // in-order walk is driver work over request-bounded probes, and each
+  // touched entity's net upserts and deletes land as ONE delta
+  // generation ([[DocumentSink.write]]).
   // -------------------------------------------------------------------
+
+  /** A pinned stored document and its row schema. */
+  private type Doc = (org.apache.spark.sql.Row,
+                      org.apache.spark.sql.types.StructType)
 
   private final case class BulkAct(op: String, entity: String,
                                    id: Option[String],
@@ -2086,31 +2106,96 @@ final class HttpApi(
     acts.toSeq
   }
 
-  /** Validate + default + pipeline ONE bulk source doc (insertOne's
-    * exact path, with an explicit `_id` landing in the entity id
-    * column), pinned to a Row. Left = the per-item error reason. */
-  private def bulkDoc(spec: EntitySpec, id: Option[String],
-                      src: JsonNode)
-      : Either[String, (org.apache.spark.sql.Row,
-                        org.apache.spark.sql.types.StructType)] = {
-    val raw0 = bodyDf(src)
-    val raw = id match {
-      case Some(v) => raw0.withColumn(spec.idCol, lit(v))
-      case None if raw0.columns.contains(spec.idCol) => raw0
-      case None => raw0.withColumn(spec.idCol, lit(null).cast("string"))
+  /** Validate + default + pipeline an entity's source documents into
+    * pinned stored documents, one result per source in input order;
+    * `(id, source)` carries an explicit `_id` that lands in the entity
+    * id column. Per-document semantics are those of reading each
+    * source alone with `spark.read.json`: every document keeps the
+    * schema Spark infers for it by itself (inferred here on the
+    * driver, [[JsonSchemas.inferOne]]), and the documents are derived
+    * in ONE Spark job per distinct inferred schema — never merged
+    * across schemas, so an integral and a fractional value of one
+    * field stay LONG and DOUBLE. Required keys are checked from each
+    * schema (no job), null required values are a validity column (no
+    * filter, so each collected row maps back to its source), and the
+    * collect pins minted uuids before any write. Where the store's
+    * `line` already holds a derived column, the value is cast to the
+    * stored type, so a request's generations never disagree with the
+    * line on a column's type (parquet schema merge fails on that);
+    * a value the cast turns to null is the document's
+    * [[Unparsable]]. */
+  private def deriveDocs(spec: EntitySpec,
+                         srcs: Seq[(Option[String], JsonNode)],
+                         line: Option[org.apache.spark.sql.types.StructType])
+      : Seq[Either[Underived, Doc]] = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    val texts = srcs.map(_._2.toString)
+    val schemas = texts.map(JsonSchemas.inferOne(spark, _))
+    val out = new Array[Either[Underived, Doc]](srcs.size)
+    srcs.indices.groupBy(schemas).foreach { case (schema, idxs) =>
+      val missing = spec.requiredCols
+        .filterNot((schema.fieldNames :+ spec.idCol).contains)
+      if (missing.nonEmpty)
+        idxs.foreach(i => out(i) = Left(MissingFields(missing)))
+      else {
+        // each source rides an envelope with its explicit `_id`, so the
+        // override is a column and never a key of the document
+        val env = spark.read
+          .schema(StructType(Seq(StructField("id", StringType),
+            StructField("doc", schema))))
+          .json(spark.createDataset(idxs.map { i =>
+            val e = mapper.createObjectNode()
+            srcs(i)._1.foreach(e.put("id", _))
+            e.set[JsonNode]("doc", srcs(i)._2)
+            e.toString
+          })(Encoders.STRING))
+        val fields = schema.fieldNames.toSeq.map { f =>
+          (if (f == spec.idCol) coalesce(col("id"),
+             col("doc").getField(f).cast("string"))
+           else col("doc").getField(f)).as(f)
+        }
+        val raw = env.select((
+          if (schema.fieldNames.contains(spec.idCol)) fields
+          else fields :+ col("id").as(spec.idCol)): _*)
+        val docs = EntityCatalog.documents(
+            EntityCatalog.defaulted(raw, spec), spec, runTs)
+          .withColumn("document_id",
+            col(s"${spec.name}_${spec.idCol}").cast("string"))
+        val stored = line.map(_.fields.map(f => f.name -> f.dataType).toMap)
+          .getOrElse(Map.empty)
+        val recast = docs.schema.fields.toSeq.collect {
+          case f if stored.get(f.name).exists(_ != f.dataType) =>
+            val to = stored(f.name)
+            f.name -> (if (Cast.canTryCast(f.dataType, to))
+              col(f.name).try_cast(to) else lit(null).cast(to))
+        }
+        val docCols = docs.columns.toSeq.map(c => recast
+          .collectFirst { case (`c`, v) => v }.getOrElse(col(c)).as(c))
+        // validity and cast failures read the UNCAST columns; the check
+        // struct's name cannot collide with a namespaced document column
+        val checks = spec.requiredCols
+          .map(c => col(s"${spec.name}_$c").isNotNull).reduce(_ && _) +:
+          recast.map { case (c, v) => col(c).isNotNull && v.isNull }
+        val rows = docs
+          .select(docCols :+ struct(checks: _*).as("_check"): _*)
+          .collect()
+        val docSchema = docs.select(docCols: _*).schema
+        require(rows.length == idxs.size, "one derived row per source")
+        idxs.zip(rows).foreach { case (i, r) =>
+          val check = r.getStruct(r.length - 1)
+          out(i) =
+            if (!check.getBoolean(0)) Left(NullRequired)
+            else recast.indices.find(j => check.getBoolean(j + 1)) match {
+              case Some(j) =>
+                Left(Unparsable(recast(j)._1, stored(recast(j)._1)))
+              case None => Right((org.apache.spark.sql.Row.fromSeq(
+                r.toSeq.init), docSchema))
+            }
+        }
+      }
     }
-    val defaulted = EntityCatalog.defaulted(raw, spec)
-    val missing = spec.requiredCols.filterNot(defaulted.columns.contains)
-    if (missing.nonEmpty)
-      return Left(s"missing required fields: ${missing.mkString(", ")}")
-    val docs = EntityCatalog.pipeline(defaulted, spec, runTs)
-      .withColumn("document_id",
-        col(s"${spec.name}_${spec.idCol}").cast("string"))
-    // pin before any write: uuid() defaulting is nondeterministic per
-    // evaluation (insertOne's contract)
-    val out = docs.collect()
-    if (out.isEmpty) Left("validation failed (null required field)")
-    else Right((out.head, docs.schema))
+    out.toSeq
   }
 
   /** Shallow-merge an update's `doc` fields into the stored row — ES
@@ -2255,23 +2340,28 @@ final class HttpApi(
                    raw: String): Unit = writeLock.synchronized {
     val t0 = System.nanoTime()
     val acts = parseBulk(defaultIndex, raw)
-    type Doc = (org.apache.spark.sql.Row,
-                org.apache.spark.sql.types.StructType)
     val byEntity = acts.groupBy(_.entity)
+    // each touched entity's resolved store line, read once: its schema
+    // types the derived documents, its rows are the probe
+    val line = byEntity.keys.filter(EntityCatalog.entities.contains)
+      .map(e => e -> index(e)).toMap
     // PHASE 1 — derive every index/create action's pinned document
     // up front (validate/default/pipeline; side-effect-free), so the
     // store probe below sees DERIVED ids too: a create whose id rides
     // the SOURCE body (no explicit _id) must still 409 against an
     // existing doc, and an index must report created vs updated
-    // truthfully. Keyed by action position (several actions may share
-    // an id).
-    val derived: Map[Int, Either[String, Doc]] =
-      acts.zipWithIndex.collect {
-        case (a, i) if (a.op == "index" || a.op == "create") &&
-            EntityCatalog.entities.contains(a.entity) =>
-          i -> bulkDoc(EntityCatalog.entities(a.entity), a.id,
-            a.source.get)
-      }.toMap
+    // truthfully. One [[deriveDocs]] call per entity — one Spark job
+    // per distinct document schema, not per action. Keyed by action
+    // position (several actions may share an id).
+    val derived: Map[Int, Either[Underived, Doc]] =
+      acts.zipWithIndex.filter { case (a, _) =>
+        (a.op == "index" || a.op == "create") &&
+          EntityCatalog.entities.contains(a.entity)
+      }.groupBy(_._1.entity).flatMap { case (entity, group) =>
+        group.map(_._2).zip(deriveDocs(EntityCatalog.entities(entity),
+          group.map { case (a, _) => (a.id, a.source.get) },
+          line(entity).map(_.schema)))
+      }
     def derivedId(i: Int): Option[String] = derived.get(i).flatMap {
       case Right((row, schema)) => Some(String.valueOf(
         row.getAs[Any](schema.fieldIndex("document_id"))))
@@ -2289,7 +2379,7 @@ final class HttpApi(
         case (a, i) if a.entity == entity =>
           a.id.orElse(derivedId(i))
       }.flatten.distinct
-      if (ids.nonEmpty) index(entity).foreach { df =>
+      if (ids.nonEmpty) line(entity).foreach { df =>
         val rows = df.filter(col("document_id").isin(ids: _*)).collect()
         rows.foreach { r =>
           val id = String.valueOf(r.getAs[Any]("document_id"))
@@ -2370,9 +2460,15 @@ final class HttpApi(
         case Some(spec) => a.op match {
           case "index" | "create" =>
             derived(ai) match {
-              case Left(reason) =>
+              case Left(MissingFields(missing)) =>
                 errItem(a.id.getOrElse(""), 400, "validation_exception",
-                  reason)
+                  s"missing required fields: ${missing.mkString(", ")}")
+              case Left(NullRequired) =>
+                errItem(a.id.getOrElse(""), 400, "validation_exception",
+                  "validation failed (null required field)")
+              case Left(u: Unparsable) =>
+                errItem(a.id.getOrElse(""), 400,
+                  "mapper_parsing_exception", u.reason)
               case Right(doc) =>
                 val id = String.valueOf(
                   doc._1.getAs[Any](doc._2.fieldIndex("document_id")))
@@ -2419,9 +2515,11 @@ final class HttpApi(
         }
       }
     }
-    // batch-apply the NET effect: per entity, one upsert per distinct
-    // row schema (new inserts vs merged store rows may differ) and one
-    // delete swap — the store rewrite cost is O(entities touched),
+    // batch-apply the NET effect: per entity, ONE store write — its
+    // upserts (one frame per distinct row schema, since new documents
+    // and merged store rows may differ, unioned by name) and the
+    // tombstones of its deleted stored ids land as one delta
+    // generation, so the store rewrite cost is O(entities touched),
     // not O(items)
     for ((entity, _) <- byEntity
          if EntityCatalog.entities.contains(entity)) {
@@ -2430,15 +2528,15 @@ final class HttpApi(
       val upserts = touched.collect { case (_, Some(d)) => d }.toSeq
       val deletes = touched.collect {
         case (id, None) if storedIds((entity, id)) => id }.toSeq
-      upserts.groupBy(_._2).foreach { case (schema, docs) =>
-        val df = spark.createDataFrame(
-          java.util.Arrays.asList(docs.map(_._1): _*), schema)
-        DocumentSink.upsert(df, s"$outDir/$entity")
-      }
-      if (deletes.nonEmpty) {
+      if (upserts.nonEmpty || deletes.nonEmpty) {
         import spark.implicits._
-        DocumentSink.deleteByIds(
-          deletes.toDF("document_id"), s"$outDir/$entity")
+        DocumentSink.write(
+          upserts.groupBy(_._2).map { case (schema, docs) =>
+            spark.createDataFrame(
+              java.util.Arrays.asList(docs.map(_._1): _*), schema)
+          }.reduceOption(_.unionByName(_, allowMissingColumns = true)),
+          Option.when(deletes.nonEmpty)(deletes.toDF("document_id")),
+          s"$outDir/$entity")
       }
     }
     // persist version metadata AFTER the data swap (metadata trails
@@ -2701,5 +2799,22 @@ final class HttpApi(
     ex.sendResponseHeaders(status, payload.length.toLong)
     val os = ex.getResponseBody
     try os.write(payload) finally os.close()
+  }
+}
+
+object HttpApi {
+
+  /** Why a source document derived no stored document: a required key
+    * absent from the source, a required value null, or a value the
+    * store's mapped column type cannot hold (ES answers that one with
+    * `mapper_parsing_exception`). */
+  private sealed trait Underived
+  private final case class MissingFields(fields: Seq[String])
+      extends Underived
+  private case object NullRequired extends Underived
+  private final case class Unparsable(field: String,
+      dataType: org.apache.spark.sql.types.DataType) extends Underived {
+    def reason: String =
+      s"failed to parse field [$field] of type [${dataType.simpleString}]"
   }
 }

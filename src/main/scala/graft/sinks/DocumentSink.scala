@@ -442,7 +442,7 @@ object DocumentSink {
   }
 
   /** Does ANY generation of the store exist (base or delta)? The
-    * cheap existence test upsert's bootstrap decision needs —
+    * cheap existence test [[write]]'s bootstrap decision needs —
     * [[readOpt]] answers the same question but builds the whole
     * resolved-line plan to do it. */
   private def storeExists(spark: org.apache.spark.sql.SparkSession,
@@ -513,64 +513,99 @@ object DocumentSink {
   }
 
   /** How many of `ids` exist in the store's line as of just BEFORE
-    * delta generation `belowSeq` — the count upsert's `replaced` and
-    * deleteByIds' `deleted` contracts need, computed AFTER the new
-    * generation landed (the batch may be a lazy plan over the line,
-    * so nothing can be counted before the append evaluates it) by
-    * reading only the PRIOR generations plus the id-restricted base. */
+    * delta generation `belowSeq` — the count [[write]]'s doc-count
+    * contract needs, computed AFTER the new generation landed (a
+    * side may be a lazy plan over the line, so nothing can be counted
+    * before the append evaluates it) by reading only the PRIOR
+    * generations plus the id-restricted base. */
   private def idsInLineCount(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: Seq[String], belowSeq: Long): Long =
     idsInLineFrame(spark, path, ids, belowSeq).count()
 
-  /** Upsert by `document_id`: replace existing docs sharing an id
-    * with the incoming batch (REST per-record re-sync semantics,
-    * src/routes/ticket_routes.py:91-96). O(request): the batch lands
-    * as ONE delta generation ([[appendDelta]] — which also EVALUATES
-    * a batch that is a lazy plan over the current line, e.g.
-    * update_by_query's rewrite, before anything moves). The count
-    * contract (docs after merge) rides an id-list-bounded probe of
-    * the pre-append line ([[idsInLineFrame]]): since round 18 the
-    * base written by bootstrap/compaction is hive-BUCKETED on
-    * `pmod(hash(document_id), buckets)`, so the probe's scan prunes
-    * to the request ids' buckets at PLANNING time — the columnar
-    * point lookup ES does internally, O(request) instead of
-    * O(base-scan) per API write (plan-pinned in DocumentSinkSpec).
-    * The adjacent search index delta-updates from the landed
-    * generation's stable files (a crash in between leaves the index
-    * one consistent snapshot behind, never ahead). */
-  def upsert(batch: DataFrame, path: String): Long = {
-    val spark = batch.sparkSession
-    require(!batch.columns.contains("_op") &&
-      !batch.columns.contains("_seq") &&
-      !batch.columns.contains("_bucket"),
-      "_op/_seq/_bucket are reserved store column names")
-    if (!storeExists(spark, path)) {
-      // bootstrap: the batch IS the store — a base write, BUCKETED
-      // (this store takes API writes by definition of this call)
-      return save(batch, path, bucketByDocId = true)
+  /** Land one request's net effect on the store at `path`: `upserts`
+    * replace-or-insert by `document_id` (REST per-record re-sync
+    * semantics, src/routes/ticket_routes.py:91-96), `deletes` (the
+    * single `document_id` column) drop ids. O(request): both sides
+    * land as ONE delta generation with mixed `_op` values, written as
+    * one file when both are given (they are then one request's net
+    * effect, e.g. a `_bulk`'s for one entity) ([[appendDelta]] — which also EVALUATES a side that is a lazy
+    * plan over the current line, e.g. update_by_query's rewrite,
+    * before anything moves); [[readOpt]]'s latest-`_seq` rule resolves
+    * it; an id on both sides is deleted. Then, once per call: one
+    * id-list-bounded probe of the pre-append line over every landed
+    * id ([[idsInLineFrame]] — on the hive-BUCKETED base written by
+    * bootstrap/compaction it prunes to the ids' buckets at PLANNING
+    * time, so the count costs O(request), plan-pinned in
+    * DocumentSinkSpec), giving count = prev − |existing ∩ (U ∪ D)| +
+    * |U|; one mapping/meta sidecar rewrite; one delta update of the
+    * adjacent search index from the landed generation's stable files
+    * (a crash in between leaves the index one consistent snapshot
+    * behind, never ahead); one compaction check. Returns the store's
+    * doc count after the write. A store that does not exist yet is
+    * bootstrapped from the upserts (a BUCKETED base write — this
+    * store takes API writes by definition of this call). */
+  def write(upserts: Option[DataFrame], deletes: Option[DataFrame],
+            path: String): Long = {
+    upserts.foreach(b => require(!b.columns.contains("_op") &&
+      !b.columns.contains("_seq") && !b.columns.contains("_bucket"),
+      "_op/_seq/_bucket are reserved store column names"))
+    val spark = (upserts ++ deletes).headOption.map(_.sparkSession)
+      .getOrElse(throw new IllegalArgumentException(
+        "write needs upserts or deletes"))
+    // an id on both sides is DELETED (SearchIndex.upsert's rule), so
+    // the landed generation never holds two ops for one id
+    val ups = upserts.map(u => deletes.fold(u)(d => u.join(
+      broadcast(d.select("document_id")), Seq("document_id"), "left_anti")))
+    if (!storeExists(spark, path)) ups match {
+      case Some(b) => return save(b, path, bucketByDocId = true)
+      case None =>
+        throw new IllegalStateException(s"no document store at $path")
     }
     val fs = hadoopFs(spark, path)
     val deltaRoot = new org.apache.hadoop.fs.Path(s"$path/data_delta")
     val prevTotal = metaDocCount(spark, path)
     val seq = (deltaGens(fs, deltaRoot) :+ 0L).max + 1
-    val bCount = appendDelta(
-      batch.withColumn("_op", lit("upsert"))
+    val sides = ups.map(_.withColumn("_op", lit("upsert"))).toSeq ++
+      deletes.map(_.select("document_id").distinct()
+        .withColumn("_op", lit("delete")))
+    val gen = sides.reduce(_.unionByName(_, allowMissingColumns = true))
+    // one file: the tombstones cost rows in it rather than a file of
+    // their own, all-null but for the id
+    val rows = appendDelta(
+      (if (sides.size == 1) gen else gen.coalesce(1))
         .withColumn("_seq", lit(seq)),
       path, seq)
     val landed = spark.read.parquet(
       s"$path/data_delta/" + f"delta-$seq%06d")
-    val idList = landed.select("document_id").distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSeq
-    val replaced = idsInLineCount(spark, path, idList, belowSeq = seq)
-    val n = prevTotal - replaced + bCount
+    val ops = landed.select("document_id", "_op").distinct().collect()
+      .map(r => (String.valueOf(r.get(0)), r.getString(1)))
+    val deleted = ops.collect { case (id, "delete") => id }.toSeq
+    val written = ops.collect { case (id, "upsert") => id }.toSeq
+    val existing = idsInLineCount(spark, path, written ++ deleted,
+      belowSeq = seq)
+    // upsert rows, not distinct ids: a batch repeating an id counts
+    // each row, as the upsert contract always has
+    val n = prevTotal - existing + (rows - deleted.size)
+    // the mapping sidecar tracks the RESOLVED line's schema — which,
+    // per the union-by-name decision on [[readOpt]], RETAINS a
+    // column whose last carrier was just deleted (ES: a mapping
+    // never loses fields)
     writeSidecar(s"$path/_mapping.json",
       mappingJson(read(spark, path).schema))
     writeSidecar(s"$path/_meta.json",
       s"""{"doc_count": $n, "mode": "overwrite"}""")
     val idxPath = s"$path/_search_index"
     if (SearchIndex.exists(idxPath))
-      SearchIndex.upsert(landed.drop("_op", "_seq"), idxPath)
+      SearchIndex.upsert(
+        // a tombstone-only generation carries no document columns:
+        // the index's field list comes from the line's (empty) frame
+        if (written.isEmpty) read(spark, path).limit(0)
+        else landed.filter(col("_op") === "upsert").drop("_op", "_seq"),
+        if (deleted.isEmpty) None
+        else Some(landed.filter(col("_op") === "delete")
+          .select("document_id")),
+        idxPath)
     else if (SearchIndex.staleVersion(idxPath)) {
       // a PRE-CURRENT-VERSION index (retired token grammar) no longer
       // `exists` — rebuild it from the current line with its own
@@ -583,50 +618,17 @@ object DocumentSink {
     n
   }
 
-  /** Delete-by-ids — `_delete_by_query`'s storage half: land the ids
-    * as a TOMBSTONE delta generation (O(request), like [[upsert]])
-    * and subtract them from the adjacent search index through the
-    * SAME integer-delta machinery replaced docs use
-    * ([[SearchIndex.upsert]] with a deletes frame). Returns the count
-    * AFTER deletion. `ids` must be the single `document_id` column. */
-  def deleteByIds(ids: DataFrame, path: String): Long = {
-    val spark = ids.sparkSession
-    val fs = hadoopFs(spark, path)
-    val deltaRoot = new org.apache.hadoop.fs.Path(s"$path/data_delta")
-    val prevTotal = metaDocCount(spark, path)
-    val seq = (deltaGens(fs, deltaRoot) :+ 0L).max + 1
-    appendDelta(
-      ids.select("document_id").distinct()
-        .withColumn("_op", lit("delete"))
-        .withColumn("_seq", lit(seq)),
-      path, seq)
-    val landed = spark.read.parquet(
-      s"$path/data_delta/" + f"delta-$seq%06d")
-    val idList = landed.select("document_id")
-      .collect().map(r => String.valueOf(r.get(0))).toSeq
-    val deleted = idsInLineCount(spark, path, idList, belowSeq = seq)
-    val n = prevTotal - deleted
-    // the mapping sidecar tracks the RESOLVED line's schema — which,
-    // per the union-by-name decision on [[readOpt]], RETAINS a
-    // column whose last carrier was just deleted (ES: a mapping
-    // never loses fields); the rewrite here keeps the sidecar in
-    // lockstep with whatever the line answers
-    writeSidecar(s"$path/_mapping.json",
-      mappingJson(read(spark, path).schema))
-    writeSidecar(s"$path/_meta.json",
-      s"""{"doc_count": $n, "mode": "overwrite"}""")
-    val idxPath = s"$path/_search_index"
-    if (SearchIndex.exists(idxPath))
-      SearchIndex.upsert(read(spark, path).limit(0),
-        Some(landed.select("document_id")), idxPath)
-    else if (SearchIndex.staleVersion(idxPath)) {
-      val meta = SearchIndex.readMeta(idxPath)
-      SearchIndex.build(read(spark, path), meta.fields, meta.idCol,
-        idxPath, meta.analyzer, meta.custom, meta.searchAnalyzer)
-    }
-    compactStoreIfNeeded(spark, path)
-    n
-  }
+  /** Upsert by `document_id` — [[write]] with no deletes. */
+  def upsert(batch: DataFrame, path: String): Long =
+    write(Some(batch), None, path)
+
+  /** Delete-by-ids — `_delete_by_query`'s storage half: [[write]]
+    * with no upserts, so the ids land as a TOMBSTONE generation and
+    * leave the adjacent search index through the same integer-delta
+    * machinery replaced docs use. Returns the count AFTER deletion.
+    * `ids` must be the single `document_id` column. */
+  def deleteByIds(ids: DataFrame, path: String): Long =
+    write(None, Some(ids), path)
 
   /** Count verification (reference: src/es_connector.py:76-83) —
     * counts the RESOLVED line (base ∪ deltas). */

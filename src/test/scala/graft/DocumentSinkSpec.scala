@@ -451,4 +451,66 @@ class DocumentSinkSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!p2.contains("Join"), p2.take(1000))
   }
+
+  test("write lands upserts and tombstones as ONE mixed generation: " +
+    "the resolved line, the _meta count, the adjacent search index " +
+    "and a later compaction all see both sides") {
+    val path = Files.createTempDirectory("graft-sink-mixed").toString
+    def doc(rows: (Long, String)*) = DocumentSink.withDocId(
+      rows.toDF("id", "v"), BareId("id"))
+    DocumentSink.save(doc(1L -> "alpha", 2L -> "beta", 3L -> "gamma",
+      4L -> "delta", 5L -> "window"), path)
+    graft.sinks.SearchIndex.build(DocumentSink.read(spark, path),
+      Seq("v"), "document_id", s"$path/_search_index")
+    // upsert 2 (replace) and 6 (new); delete 3 (stored) and 9 (never
+    // stored); an id on both sides (4) is deleted
+    val n = DocumentSink.write(
+      Some(doc(2L -> "window beta", 6L -> "window", 4L -> "kept?")),
+      Some(Seq("3", "9", "4").toDF("document_id")), path)
+    // prev 5 − existing∩(U∪D) {2, 3, 4} + |U| {2, 6} = 4
+    assert(n == 4)
+    val meta = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$path/_meta.json")))
+    assert(meta.contains("\"doc_count\": 4"), meta)
+    val gens = new java.io.File(s"$path/data_delta").listFiles()
+      .map(_.getName).filter(_.startsWith("delta-"))
+    assert(gens.length == 1, gens.mkString(", "))
+    val ops = spark.read.parquet(s"$path/data_delta/${gens.head}")
+      .select("document_id", "_op").as[(String, String)].collect().toSet
+    assert(ops == Set("2" -> "upsert", "6" -> "upsert",
+      "3" -> "delete", "9" -> "delete", "4" -> "delete"))
+    def line(): Seq[(Long, String)] = DocumentSink.read(spark, path)
+      .orderBy("id").select("id", "v").as[(Long, String)].collect().toSeq
+    val expected = Seq(1L -> "alpha", 2L -> "window beta",
+      5L -> "window", 6L -> "window")
+    assert(line() == expected)
+    assert(DocumentSink.count(spark, path) == 4)
+    // the maintained index ranks exactly like one rebuilt from the line
+    val reb = Files.createTempDirectory("graft-sink-mixed-reb").toString
+    graft.sinks.SearchIndex.build(DocumentSink.read(spark, path),
+      Seq("v"), "document_id", reb)
+    def ranked(p: String) = graft.sinks.SearchIndex.ranked(spark, p,
+      "window delta gamma", Seq("v")).collect().map(_.toString).toSeq
+    assert(ranked(s"$path/_search_index") == ranked(reb))
+    assert(ranked(reb).size == 3)
+    // one-sided calls keep their contracts on top of the mixed line
+    assert(DocumentSink.deleteByIds(Seq("6").toDF("document_id"),
+      path) == 3)
+    assert(DocumentSink.upsert(doc(7L -> "x"), path) == 4)
+    // compaction folds across the mixed generation (three generations
+    // exist; the threshold-th write folds): the deleted ids stay gone,
+    // the replaced one keeps its latest value
+    val more = DocumentSink.StoreCompactThreshold - 3
+    (100 until 100 + more).foreach { i =>
+      DocumentSink.upsert(doc(i.toLong -> s"v$i"), path)
+    }
+    val deltaDir = new java.io.File(s"$path/data_delta")
+    assert(!deltaDir.exists || deltaDir.listFiles().isEmpty,
+      "threshold write must have compacted")
+    val folded = line()
+    assert(folded.take(3) == Seq(1L -> "alpha", 2L -> "window beta",
+      5L -> "window"))
+    assert(!folded.exists(r => Set(3L, 4L, 6L, 9L)(r._1)))
+    assert(DocumentSink.count(spark, path) == 4 + more)
+  }
 }

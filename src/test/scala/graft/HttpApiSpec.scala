@@ -18,19 +18,43 @@ class HttpApiSpec extends SparkSpec
   private lazy val port = api.start()
   private val client = HttpClient.newHttpClient()
 
+  /** A second server whose output directory holds a customer store
+    * synced the way `EntityCatalog.syncAll` writes it (typed columns,
+    * `{id}_{runTs}` document ids) and no other store. */
+  private lazy val syncedOut = {
+    val out =
+      java.nio.file.Files.createTempDirectory("graft-http-synced").toString
+    val spec = graft.catalog.EntityCatalog.entities("customer")
+    val docs = graft.catalog.EntityCatalog.documents(
+      graft.sources.Tables(spark, srcDir, "customer"), spec,
+      graft.operators.Denormalize.RunTs)
+    graft.sinks.DocumentSink.validatedWrite(docs, s"$out/customer",
+      spec.requiredCols.map(c => s"customer_$c"),
+      fieldTypes = graft.catalog.EntityCatalog.fieldTypes(docs.schema, spec))
+    out
+  }
+  private lazy val synced = new HttpApi(spark, srcDir, syncedOut)
+  private lazy val syncedPort = synced.start()
+
   override protected def afterAll(): Unit = {
-    api.stop(); super.afterAll()
+    api.stop(); synced.stop(); super.afterAll()
   }
 
-  private def get(path: String): HttpResponse[String] =
+  private def get(path: String): HttpResponse[String] = getAt(port, path)
+
+  private def getAt(p: Int, path: String): HttpResponse[String] =
     client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$path"))
         .GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
   private def post(path: String, body: String): HttpResponse[String] =
+    postAt(port, path, body)
+
+  private def postAt(p: Int, path: String,
+                     body: String): HttpResponse[String] =
     client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$path"))
         .header("Content-Type", "application/json")
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
@@ -1493,6 +1517,167 @@ class HttpApiSpec extends SparkSpec
     val dn = om.readTree(d.body())
     assert(dn.get("_version").asLong == 4, d.body())
     assert(dn.get("_primary_term").asLong == 1)
+  }
+
+  test("_bulk index of a new customer and partial update of a synced " +
+    "customer in one store leave it readable: derived columns take the " +
+    "store's types, and a value the stored type cannot hold is that " +
+    "item's mapper_parsing_exception") {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val syncedId = s"1_${graft.operators.Denormalize.RunTs}"
+    val r = postAt(syncedPort, "/_bulk", Seq(
+      """{"index": {"_index": "customer"}}""",
+      """{"c_custkey": 990001, "c_name": "new", "c_nationkey": 3, """ +
+        """"c_acctbal": 1.5, "c_mktsegment": "X"}""",
+      s"""{"update": {"_index": "customer", "_id": "$syncedId"}}""",
+      """{"doc": {"customer_c_name": "renamed"}}""",
+      """{"index": {"_index": "customer", "_id": "not-a-key"}}""",
+      """{"c_name": "bad id"}""").mkString("\n"))
+    assert(r.statusCode() == 200, r.body())
+    val items = om.readTree(r.body()).get("items")
+    assert(items.get(0).get("index").get("status").asInt == 201, r.body())
+    assert(items.get(1).get("update").get("status").asInt == 200, r.body())
+    val bad = items.get(2).get("index")
+    assert(bad.get("status").asInt == 400, r.body())
+    assert(bad.get("error").get("type").asText ==
+      "mapper_parsing_exception", r.body())
+    assert(bad.get("error").get("reason").asText
+      .contains("customer_c_custkey"), r.body())
+    val fresh = getAt(syncedPort, "/customer/990001")
+    assert(fresh.statusCode() == 200, fresh.body())
+    assert(fresh.body().contains("\"customer_c_name\":\"new\""))
+    val updated = getAt(syncedPort, s"/customer/$syncedId")
+    assert(updated.statusCode() == 200, updated.body())
+    assert(updated.body().contains("\"customer_c_name\":\"renamed\""))
+    val base = spark.read.parquet(s"$syncedOut/customer/data").schema
+    val line = graft.sinks.DocumentSink.read(spark, s"$syncedOut/customer")
+    Seq("customer_c_custkey", "customer_c_nationkey").foreach { c =>
+      assert(line.schema(c).dataType == base(c).dataType, c)
+    }
+  }
+
+  test("_bulk parity across document shapes: an integral and a " +
+    "fractional s_acctbal, a missing optional field, a null required " +
+    "field and a minted id keep each document's own schema and ES " +
+    "item slots") {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val r = postAt(syncedPort, "/supplier/_bulk", Seq(
+      """{"index": {}}""",
+      """{"s_suppkey": 1, "s_name": "int", "s_acctbal": 100, "s_phone": "p1"}""",
+      """{"index": {}}""",
+      """{"s_suppkey": 2, "s_name": "frac", "s_acctbal": 12.5, "s_phone": "p2"}""",
+      """{"create": {}}""",
+      """{"s_suppkey": 3, "s_name": "nophone", "s_acctbal": 7.25}""",
+      """{"index": {}}""",
+      """{"s_suppkey": 4, "s_name": null, "s_acctbal": 1.0, "s_phone": "p4"}""",
+      """{"index": {}}""",
+      """{"s_name": "minted", "s_acctbal": 2.5, "s_phone": "p5"}""")
+      .mkString("\n"))
+    assert(r.statusCode() == 200, r.body())
+    val items = om.readTree(r.body()).get("items")
+    val slots = (0 until items.size).map { i =>
+      val n = items.get(i).fields().next().getValue
+      (n.get("status").asInt, Option(n.get("result")).map(_.asText),
+        Option(n.get("_version")).map(_.asLong),
+        Option(n.get("_seq_no")).map(_.asLong))
+    }
+    assert(slots == Seq(
+      (201, Some("created"), Some(1L), Some(0L)),
+      (201, Some("created"), Some(1L), Some(1L)),
+      (201, Some("created"), Some(1L), Some(2L)),
+      (400, None, None, None),
+      (201, Some("created"), Some(1L), Some(3L))), r.body())
+    assert(items.get(3).get("index").get("error").get("reason").asText ==
+      "validation failed (null required field)")
+    val minted = items.get(4).get("index").get("_id").asText
+    assert(minted.length == 36, minted)
+    val line = graft.sinks.DocumentSink.read(spark, s"$syncedOut/supplier")
+    val types = line.schema.fields.map(f => f.name -> f.dataType.simpleString)
+      .toMap
+    assert(types == Map("supplier_s_suppkey" -> "string",
+      "supplier_s_name" -> "string", "supplier_s_acctbal" -> "double",
+      "supplier_s_phone" -> "string", "table" -> "string",
+      "document_id" -> "string", "indexed_at" -> "timestamp"), types)
+    val rows = line.collect().map { row =>
+      (row.getAs[String]("document_id"),
+        (row.getAs[String]("supplier_s_name"),
+          row.getAs[Double]("supplier_s_acctbal"),
+          Option(row.getAs[String]("supplier_s_phone"))))
+    }.toMap
+    assert(rows == Map(
+      "1" -> (("int", 100.0, Some("p1"))),
+      "2" -> (("frac", 12.5, Some("p2"))),
+      "3" -> (("nophone", 7.25, None)),
+      minted -> (("minted", 2.5, Some("p5")))), rows)
+    assert(getAt(syncedPort, s"/supplier/$minted").statusCode() == 200)
+  }
+
+  /** Counts Spark jobs; [[drained]] waits until every event posted
+    * before the call has been delivered (a marker job's start). */
+  private final class JobCounter
+      extends org.apache.spark.scheduler.SparkListener {
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    private val marks = new java.util.concurrent.atomic.AtomicInteger()
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty("graft.spec.mark") != null))
+        marks.incrementAndGet()
+      else jobs.incrementAndGet()
+    def drained(): Int = {
+      val m = marks.get
+      val sc = spark.sparkContext
+      sc.setLocalProperty("graft.spec.mark", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.mark", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (marks.get == m && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(marks.get > m, "listener bus did not drain")
+      jobs.get
+    }
+  }
+
+  test("_bulk runs a fixed number of Spark jobs per entity and document " +
+    "schema: 40 index actions run no more jobs than 4") {
+    def batch(from: Int, n: Int) = (from until from + n).flatMap(i => Seq(
+      """{"index": {"_index": "region"}}""",
+      s"""{"r_regionkey": $i, "r_name": "r$i", "r_comment": "c"}"""))
+      .mkString("\n")
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      def jobs(body: String): Int = {
+        val before = counter.drained()
+        val r = postAt(syncedPort, "/_bulk", body)
+        assert(r.statusCode() == 200 && !r.body().contains("\"errors\": true"),
+          r.body())
+        counter.drained() - before
+      }
+      // the store's base, then its first delta generation: the two
+      // measured requests meet the same store layout (base + deltas),
+      // and each replaces one base document, so their id probes both
+      // reach a non-empty base bucket
+      jobs(batch(500000, 4))
+      jobs(batch(550000, 4))
+      val four = jobs(batch(500000, 1) + "\n" + batch(600000, 3))
+      val forty = jobs(batch(500001, 1) + "\n" + batch(700000, 39))
+      info(s"Spark jobs: 4 index actions $four, 40 index actions $forty")
+      assert(forty <= four, s"40 actions ran $forty jobs, 4 ran $four")
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  test("stop() shuts down the request threads start() created") {
+    val other = new HttpApi(spark, srcDir,
+      java.nio.file.Files.createTempDirectory("graft-http-stop").toString)
+    val p = other.start()
+    assert(getAt(p, "/health").statusCode() == 200)
+    import scala.jdk.CollectionConverters._
+    val threads = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith(s"graft-http-$p-"))
+    assert(threads.nonEmpty, "no request thread of the server found")
+    other.stop()
+    threads.foreach(_.join(10000))
+    assert(threads.forall(!_.isAlive),
+      threads.filter(_.isAlive).map(_.getName).mkString(", "))
   }
 
   private def put(path: String, body: String): HttpResponse[String] =
