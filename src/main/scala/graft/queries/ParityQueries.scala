@@ -1073,7 +1073,7 @@ object ParityQueries {
 
     // DSL BM25 scoring parity (round 9): match/multi_match clauses in a
     // replayed ES body now rank with REAL BM25 — the same
-    // Search.rankedAll machinery /search rank=bm25 runs — so a
+    // serving.Ranking kernel /search rank=bm25 runs — so a
     // reference client gets ES's ranking order, not an occurrence
     // approximation. best_fields must + a scored should over a second
     // field; the oracle recomputes both clauses' BM25 from scratch.
@@ -3917,7 +3917,7 @@ object ParityQueries {
       |        FROM lineitem JOIN part ON l_partkey = p_partkey) q
       |  GROUP BY l_orderkey""")
 
-  /** Per-field BM25 CTE set (suffix `$i`) mirroring Search.rankedScores
+  /** Per-field BM25 CTE set (suffix `$i`) mirroring serving.Ranking
     * over one field: per-field dl/avgdl/df — ES scores each field of a
     * multi_match with that field's own statistics. `sc$i` holds the RAW
     * per-field score (rounding happens once, after the combine).
@@ -3958,7 +3958,7 @@ object ParityQueries {
 
   /** N-field combine over `sc$sfx` CTEs: full-outer-join chain in field
     * order with COALESCEd ids, fixed-order sum (or greatest), rounded
-    * ONCE — exactly Search.rankedFields' combine. Returns the SELECT
+    * ONCE — exactly serving.Ranking.combine. Returns the SELECT
     * (no WITH, no ORDER BY) producing (doc_id, score). */
   private def bm25CombineSql(sfxs: Seq[String],
                              bestFields: Boolean,
@@ -3966,7 +3966,7 @@ object ParityQueries {
     val bs = if (boosts.isEmpty) sfxs.map(_ => None) else boosts
     val parts = sfxs.zip(bs).map { case (s, b) =>
       val raw = s"COALESCE(sc$s.s_$s, CAST(0.0 AS DOUBLE))"
-      // mirrors Search.rankedFields: boost multiplies the RAW per-field
+      // mirrors serving.Ranking.combine: boost multiplies the RAW per-field
       // score (a single double ×) before the fixed-order combine
       b.map(x => s"($raw * CAST($x AS DOUBLE))").getOrElse(raw)
     }

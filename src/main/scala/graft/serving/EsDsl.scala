@@ -92,7 +92,7 @@ import org.apache.spark.sql.functions._
   *
   * Scoring model — ES parity: `match`/`multi_match` clauses score with
   * REAL BM25, through the exact machinery `/search rank=bm25` uses
-  * ([[Search.rankedAll]] — same expression tree, fixed-order float
+  * (the one [[Ranking]] kernel — same formulas, fixed-order float
   * sums, one rounding), so a replayed reference body ranks identically
   * to ES's Lucene BM25 shape and bit-identically to this engine's own
   * ranked endpoint. Filter-context clauses (term/terms/range/exists/
@@ -328,7 +328,7 @@ object EsDsl {
 
     /** Match-family clauses QUEUED for the one shared scoring pass
       * ([[Search.rankedAllMulti]]) — replaces round 9's
-      * one-`rankedAll`-frame-per-clause design, where a bool with K
+      * one-scored-frame-per-clause design, where a bool with K
       * match clauses cost K corpus scans + K shuffled joins (the
       * adjudicated scale weakness). All clauses now ride 2 scans and
       * ONE join regardless of K, with bit-identical scores (each
@@ -484,8 +484,8 @@ object EsDsl {
     /** Queue a BM25 score clause for `query` over `fields`; returns
       * the per-row score column (0.0 where the clause matched
       * nothing). Bit-identical to `/search rank=bm25` by construction
-      * — the shared pass evaluates [[Search.rankedAll]]'s expression
-      * tree per clause. */
+      * — the shared pass runs the one [[Ranking]] combiner per
+      * clause. */
     def bm25Score(query: String, fields: Seq[(String, Double)],
                   bestFields: Boolean,
                   analyzer: String = "standard"): Column = {
@@ -530,13 +530,11 @@ object EsDsl {
       val fi = phbFields.indexOf(field)
       val dl = graft.functions.TextFunctions.analyzerTokenCount(
         col(field))
-      val idfSum = terms.map { t =>
-        val d = col(s"__phb_df_${phbTerms.indexOf((field, t))}")
-        log(lit(1.0) + (col("__phb_n") - d + 0.5) / (d + 0.5))
+      val idfSum = terms.map { t => Ranking.bm25Idf(col("__phb_n"),
+        col(s"__phb_df_${phbTerms.indexOf((field, t))}"))
       }.reduce(_ + _)
-      Search.round4(idfSum * ((pf * 2.2) /
-        (pf + lit(1.2) * (lit(0.25) +
-          lit(0.75) * dl / col(s"__phb_avgdl_$fi")))))
+      Search.round4(idfSum *
+        Ranking.bm25Saturation(pf, dl, col(s"__phb_avgdl_$fi")))
     }
 
     /** Cross-fields BM25 (ES `multi_match type=cross_fields` —
@@ -560,16 +558,14 @@ object EsDsl {
         val dfs = fields.map { case (f, _) =>
           col(s"__phb_df_${phbTerms.indexOf((f, t))}") }
         val dfMax = if (dfs.size == 1) dfs.head else greatest(dfs: _*)
-        val idf = log(lit(1.0) +
-          (col("__phb_n") - dfMax + 0.5) / (dfMax + 0.5))
+        val idf = Ranking.bm25Idf(col("__phb_n"), dfMax)
         val parts = fields.map { case (f, b) =>
           val fi = phbFields.indexOf(f)
           val tf = Search.substrCount(Search.tokenNorm(col(f)), s" $t ")
           val dl = graft.functions.TextFunctions.analyzerTokenCount(
             col(f))
-          val raw = idf * ((tf * 2.2) /
-            (tf + lit(1.2) * (lit(0.25) +
-              lit(0.75) * dl / col(s"__phb_avgdl_$fi"))))
+          val raw = idf *
+            Ranking.bm25Saturation(tf, dl, col(s"__phb_avgdl_$fi"))
           if (b == 1.0) raw else raw * b
         }
         val best = if (parts.size == 1) parts.head

@@ -280,7 +280,7 @@ final class HttpApi(
         case ("POST", entity :: rest) =>
           EntityCatalog.entities.get(resolveIndex(entity)) match {
             case None =>
-              respond(ex, 404, s"""{"error": "unknown entity '$entity'"}""")
+              notFound(ex, "unknown entity", entity)
             case Some(spec) => rest match {
               case Nil            => insertOne(ex, spec, body(ex))
               case "batch" :: Nil => insertBatch(ex, spec, body(ex))
@@ -902,7 +902,7 @@ final class HttpApi(
         s"${if (unknown.size == 1) "" else "s"}: ${unknown.mkString(", ")}")
     val index = resolveIndex(textOr(req, "index", "*"))
     if (dslTarget(index).isEmpty) {
-      respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+      notFound(ex, "unknown index", index)
       return
     }
     val node = mapper.createObjectNode()
@@ -1090,7 +1090,7 @@ final class HttpApi(
         val index = resolveIndex(c.get("index").asText)
         dslTarget(index) match {
           case None =>
-            respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+            notFound(ex, "unknown index", index)
           case Some((df, ties)) =>
             try {
               val body = c.get("body")
@@ -1264,7 +1264,7 @@ final class HttpApi(
     val index = resolveIndex(textOr(req, "index", "*"))
     dslTarget(index) match {
       case None =>
-        respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+        notFound(ex, "unknown index", index)
       case Some((df, ties)) =>
         try {
           val n = EsDsl.countFrame(df, req, ties, Some(dslTarget _),
@@ -1374,7 +1374,7 @@ final class HttpApi(
     val index = resolveIndex(textOr(req, "index", "*"))
     dslTarget(index) match {
       case None =>
-        respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+        notFound(ex, "unknown index", index)
       case Some((df, ties)) =>
         try {
           EsDsl.countFrame(df, req, ties, Some(dslTarget _),
@@ -1406,7 +1406,7 @@ final class HttpApi(
       val index = resolveIndex(textOr(req, "index", "*"))
       dslTarget(index) match {
         case None =>
-          respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+          notFound(ex, "unknown index", index)
         case Some((df, _)) =>
           val pats: Seq[String] = Option(req.get("fields")) match {
             case None => Seq("*")
@@ -1634,7 +1634,7 @@ final class HttpApi(
         auxBad("_mget needs a concrete index (ids are per-table)")
       dslTarget(index) match {
         case None =>
-          respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+          notFound(ex, "unknown index", index)
         case Some((df, ties)) =>
           val idsN = Option(req.get("ids")).filter(_.isArray)
             .getOrElse(auxBad("_mget needs an \"ids\" array"))
@@ -1675,7 +1675,7 @@ final class HttpApi(
       if (id.isEmpty) auxBad("_termvectors needs \"id\"")
       dslTarget(index) match {
         case None =>
-          respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+          notFound(ex, "unknown index", index)
         case Some((df, ties)) =>
           val stringCols = df.schema.fields.collect {
             case f if f.dataType ==
@@ -1747,7 +1747,7 @@ final class HttpApi(
         .getOrElse(auxBad("_explain needs \"query\""))
       dslTarget(index) match {
         case None =>
-          respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+          notFound(ex, "unknown index", index)
         case Some((df, ties)) =>
           val built = mapper.createObjectNode()
           built.set[com.fasterxml.jackson.databind.node.ObjectNode](
@@ -1824,7 +1824,7 @@ final class HttpApi(
       val index = resolveIndex(textOr(req, "index", "*"))
       dslTarget(index) match {
         case None =>
-          respond(ex, 404, s"""{"error": "unknown index '$index'"}""")
+          notFound(ex, "unknown index", index)
         case Some((df, ties)) =>
           try {
             // ?scroll-style cursoring: a body carrying "scroll" opens
@@ -1997,7 +1997,8 @@ final class HttpApi(
         DocumentSink.upsert(spark.createDataFrame(
           java.util.Arrays.asList(row), schema), s"$outDir/${spec.name}")
         val id = row.getAs[Any](schema.fieldIndex("document_id"))
-        respond(ex, 201, s"""{"result": "created", "document_id": "$id"}""")
+        respond(ex, 201, s"""{"result": "created", "document_id": ${
+          mapper.writeValueAsString(String.valueOf(id))}}""")
     }
   }
 
@@ -2594,7 +2595,7 @@ final class HttpApi(
   private def listDocs(ex: HttpExchange, entity: String): Unit =
     index(entity) match {
       case None =>
-        respond(ex, 404, s"""{"error": "no synced index for '$entity'"}""")
+        notFound(ex, "no synced index for", entity)
       case Some(df) =>
         val query = Option(ex.getRequestURI.getQuery)
         val limit = query
@@ -2612,7 +2613,7 @@ final class HttpApi(
   private def getDoc(ex: HttpExchange, entity: String, id: String): Unit =
     index(entity) match {
       case None =>
-        respond(ex, 404, s"""{"error": "no synced index for '$entity'"}""")
+        notFound(ex, "no synced index for", entity)
       case Some(df) =>
         val rows = df.filter(col("document_id") === id).toJSON.collect()
         if (rows.isEmpty)
@@ -2650,7 +2651,8 @@ final class HttpApi(
       EntityCatalog.entities.contains(target)
     if (!known) auxBad(s"unknown alias target '$target'")
     aliasStore.put(alias, target)
-    respond(ex, 200, s"""{"acknowledged": true, "alias": "$alias"}""")
+    respond(ex, 200, s"""{"acknowledged": true, "alias": ${
+      mapper.writeValueAsString(alias)}}""")
   }
 
   private def listAliases(ex: HttpExchange): Unit = {
@@ -2662,7 +2664,7 @@ final class HttpApi(
   private def deleteAlias(ex: HttpExchange, alias: String): Unit =
     if (aliasStore.remove(alias) != null)
       respond(ex, 200, """{"acknowledged": true}""")
-    else respond(ex, 404, s"""{"error": "unknown alias '$alias'"}""")
+    else notFound(ex, "unknown alias", alias)
 
   /** POST /{entity}/update_by_query — ES `_update_by_query`:
     * `{"query": {...}, "script": "ctx._source.f = <expr>"}` mutates
@@ -2792,6 +2794,15 @@ final class HttpApi(
 
   private def textOr(node: JsonNode, field: String, dflt: String): String =
     Option(node.get(field)).map(_.asText()).getOrElse(dflt)
+
+  /** 404 whose message names a request-controlled `name` — escaped
+    * inside the JSON string, so a quote in a path or body cannot break
+    * the body out of it. */
+  private def notFound(ex: HttpExchange, what: String, name: String): Unit = {
+    val q = mapper.writeValueAsString(name)
+    respond(ex, 404,
+      s"""{"error": "$what '${q.substring(1, q.length - 1)}'"}""")
+  }
 
   private def respond(ex: HttpExchange, status: Int, json: String): Unit = {
     val payload = json.getBytes(StandardCharsets.UTF_8)

@@ -125,7 +125,7 @@ object Search {
     * table)` in the (score desc, document_id asc, table asc) order the
     * cross-index modes share. The third key matters: `document_id`
     * values (`{id}_{runTs}`) can collide ACROSS entities. */
-  private def afterPredicate3(
+  private[graft] def afterPredicate3(
       after: Option[(Double, String, String)]): Column =
     after.map { case (s, id, tbl) =>
       (col("score") < s) || (col("score") === s &&
@@ -153,11 +153,18 @@ object Search {
     * ES's real scorer: every entity index is scored with ITS OWN
     * per-index, per-field statistics (exactly what ES does when a
     * multi_match spans indexes — IDF is index-local), then hits merge
-    * into one global top-k. Per-entity scoring is [[bm25Fields]] /
-    * [[tfidfFields]] over that entity's string fields; a per-branch
-    * top-`limit` bounds each union leg (sound: a hit outside its own
-    * branch's top-k cannot enter the global top-k), so the union is
-    * k·|entities| rows, never corpus-sized. */
+    * into one global top-k.
+    *
+    * ONE shared pass over the union document view, not 2 scans per
+    * entity: every (entity, field) pair is a fid of [[Ranking.scan]]
+    * whose token/dl contributions are GATED on the row's `table`
+    * (shared lineage columns stay index-local), per-entity n/avgdl and
+    * every pair's df ride one statistics aggregate, and each entity's
+    * score is its own leg of one [[Ranking.combine]] clause, selected
+    * by the `table` group key. Numerically identical to scoring each
+    * entity alone — the oracle is shared verbatim. `only` restricts
+    * the wildcard to a comma-list's entity subset — same per-index
+    * statistics, fewer stacked branches. */
   def acrossIndexesRanked(spark: SparkSession, srcDir: String,
                           runTs: String, query: String, limit: Int = 100,
                           bestFields: Boolean = false,
@@ -165,25 +172,7 @@ object Search {
                           after: Option[(Double, String, String)] = None,
                           only: Seq[String] = Nil)
       : DataFrame = {
-    import org.apache.spark.sql.types.StringType
     import graft.catalog.EntityCatalog
-    import graft.functions.TextFunctions.{analyzerTokenCount => tokenCount}
-    // ONE shared pass over the union document view — the per-entity
-    // legs STACK exactly like a bool's clauses do in rankedAllMulti:
-    // every (entity, field) pair is a fid whose token/dl contributions
-    // are GATED on the row's `table` (shared lineage columns stay
-    // index-local), per-entity n/avgdl ride one conditional stats
-    // aggregate, and each entity's score is its own fixed-order
-    // conditional sum — so the wildcard costs 2 passes over the union
-    // view TOTAL instead of 2 scans × E entities (the round-10 shape,
-    // adjudicated the remaining scale weakness). Numerically identical
-    // to scoring each entity alone: a doc's group holds only its own
-    // entity's fids, foreign pairs contribute exact-0.0 adds (and
-    // scores are non-negative, so best_fields' greatest is unchanged),
-    // stats divisions are the same exact-integer-sum ÷ count, and
-    // rounding happens once — the oracle is shared verbatim.
-    // `only` restricts the wildcard to a comma-list's entity subset —
-    // same per-index statistics, fewer stacked branches
     val specs = entitySubset(only)
     // each entity's document pipeline is built ONCE and serves both
     // the union frame and the field-list derivation (building a
@@ -196,127 +185,17 @@ object Search {
     // entity-major (entity, field) pairs, schema order within entity —
     // the per-entity path's exact field order (ONE derivation shared
     // with the index builder and the coverage check)
-    val pairs: Seq[(String, String)] = specDocs.flatMap {
-      case (spec, docs) =>
-        searchableDocFields(docs.schema).map(spec.name -> _)
+    val fields = specDocs.flatMap { case (spec, docs) =>
+      searchableDocFields(docs.schema).map(f =>
+        Ranking.ScanField(spec.name, f, col(f)))
     }
-    val entityIdx = specs.map(_.name).zipWithIndex.toMap
-    def gate(e: String): Column = col("table") === e
-    val terms =
-      graft.functions.TextFunctions.analyzeText(query).distinct.toArray
-    // codegen'd contains-any prefilter (rankedAll's): a NULL foreign
-    // column never passes; shared-column false positives die at the
-    // gated token filter below
-    val anyTerm = pairs.map(_._2).distinct.flatMap(f =>
-        terms.map(t => lower(col(f)).contains(lit(t))))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val structs = pairs.zipWithIndex.map { case ((e, f), i) =>
-      struct(lit(i).as("fid"),
-        when(gate(e), if (bm25) tokenCount(col(f)) else lit(0))
-          .as("dl"),
-        when(gate(e),
-          graft.functions.TextFunctions.analyzerTokens(col(f)))
-          .as("toks"))
-    }
-    val stacked = union.filter(anyTerm)
-      .select(col("table"), col("document_id"),
-        explode(array(structs: _*)).as("fs"))
-      .select(col("table"), col("document_id"),
-        col("fs.fid").as("fid"), col("fs.dl").as("dl"),
-        explode(col("fs.toks")).as("term"))
-      .filter(col("term").isin(terms.toSeq: _*))
-    // shared statistics: one aggregate computes every entity's n and
-    // every pair's sumdl (exact integer sums — the identical division
-    // the per-entity aggregate performed)
-    val nCols = specs.map(sp =>
-      sum(when(gate(sp.name), lit(1L))).as(s"n_${entityIdx(sp.name)}"))
-    // r19 (de-skew): every (field, term) document frequency rides the
-    // SAME shared statistics aggregate via TokenDlHits (one tokenizer
-    // pass yields dl + the distinct matched term indices), gated per
-    // entity like n/sumdl — replacing the count(*) OVER (PARTITION BY
-    // fid, term) window that placed every matching doc of a hot term
-    // in ONE partition with a sort (no AQE skew handling on window
-    // exchanges). df_t = entity docs whose field token-list contains
-    // the term ≡ the old tf-group row count (foreign rows are gated
-    // out exactly as their gated token arrays vanished at the explode).
-    // the struct is GATED (a foreign row's null struct contributes
-    // nothing to sumdl — sum skips null ≡ the old when-gated
-    // tokenCount's +0 — nor to df: array_contains(null, j) is null and
-    // the conditional count skips) and evaluated ONCE per row in a
-    // PROJECTION below the aggregate, so the k df aggs + sumdl all
-    // reference an attribute — codegen subexpression elimination never
-    // gets a vote on how many tokenizer passes a row pays
-    val tsOf = pairs.indices.map(i => col(s"__ts_$i"))
-    val pre = union.select(col("table") +:
-      pairs.zipWithIndex.map { case ((e, f), i) =>
-        when(gate(e), graft.functions.ArrayExpressions
-          .tokenDlHits(col(f), terms.toSeq)).as(s"__ts_$i") }: _*)
-    val dfAggs = for (i <- pairs.indices; j <- terms.indices) yield
-      sum(when(array_contains(tsOf(i).getField("hits"), j), 1L))
-        .as(s"df_${i}_$j")
-    val statsAggs: Seq[Column] =
-      (if (bm25) nCols ++ pairs.indices.map { i =>
-        sum(tsOf(i).getField("dl")).as(s"sumdl_$i") }
-      else nCols) ++ dfAggs
-    val statsWide = pre.agg(statsAggs.head, statsAggs.tail: _*)
-    lazy val stats = statsWide.select(explode(array((for {
-        (((e, _), i)) <- pairs.zipWithIndex
-        (t, j) <- terms.zipWithIndex.toSeq
-      } yield {
-        val n = col(s"n_${entityIdx(e)}")
-        struct(lit(i).as("fid"), lit(t).as("term"), n.as("n"),
-          (if (bm25) col(s"sumdl_$i").cast("double") / n
-           else lit(0.0)).as("avgdl"),
-          col(s"df_${i}_$j").as("df_t"))
-      }): _*)).as("s"))
-      .select(col("s.fid").as("fid"), col("s.term").as("term"),
-        col("s.n").as("n"), col("s.avgdl").as("avgdl"),
-        col("s.df_t").as("df_t"))
-    // ONE pass over the matching docs (r18): a fid's group holds ONE
-    // entity's rows (foreign entities' gated token arrays are null and
-    // vanish at the explode), document_id is unique within an entity,
-    // and dl is functionally dependent on (table, document_id, fid) —
-    // the tf aggregation needs no df bookkeeping; the stats broadcast
-    // carries it.
-    val grouped =
-      if (bm25)
-        stacked.groupBy(col("table"), col("document_id"), col("fid"),
-            col("dl"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      else stacked.groupBy(col("table"), col("document_id"), col("fid"),
-          col("term"))
-        .agg(count(lit(1)).as("tf"))
-    val withStats =
-      if (terms.isEmpty)
-        grouped.withColumn("df_t", lit(0L)).withColumn("n", lit(0L))
-          .withColumn("avgdl", lit(0.0))
-      else grouped.join(broadcast(stats), Seq("fid", "term"))
-    val idf: Column =
-      if (bm25)
-        log(lit(1.0) + (col("n") - col("df_t") + 0.5) /
-          (col("df_t") + 0.5))
-      else (col("n") + 1.0) / (col("df_t") + 1.0)
-    val perTerm: Column =
-      if (bm25)
-        idf * ((col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) +
-            lit(0.75) * col("dl") / col("avgdl"))))
-      else col("tf") * idf
-    val parts = pairs.indices.map { i =>
-      terms.toSeq.map(t =>
-          coalesce(sum(when(col("term") === t && col("fid") === i,
-            perTerm)), lit(0.0)))
-        .reduce(_ + _)
-    }
-    val combined =
-      if (parts.size == 1) parts.head
-      else if (bestFields) greatest(parts: _*)
-      else parts.reduce(_ + _) // entity-major pair order; foreign
-                               // pairs add exact 0.0
-    withStats
-      .groupBy(col("table"), col("document_id"))
-      .agg(round4(combined).as("score"))
-      .select(col("table"), col("document_id"), col("score"))
+    val terms = graft.functions.TextFunctions.analyzeText(query).distinct
+    val clause = Ranking.Clause("score", specs.map(sp =>
+      Ranking.Leg(sp.name, terms, fields.indices
+        .filter(fields(_).table == sp.name).map((_, 1.0)))), bestFields)
+    Ranking.combine(Ranking.scan(union, col("table"), col("document_id"),
+        fields, Seq(clause), bm25), bm25, Seq(clause))
+      .select(col("table"), col("id").as("document_id"), col("score"))
       .filter(afterPredicate3(after))
       .orderBy(col("score").desc, col("document_id"), col("table"))
       .limit(limit)
@@ -401,31 +280,19 @@ object Search {
   /** Wildcard PHRASE over the entity indexes (`data_lake_*` with
     * `multi_match type=phrase`): every entity's positional postings are
     * probed independently ([[graft.sinks.SearchIndex.phrase]]), hits
-    * merge into one global top-k under the shared 3-key order. Phrase
-    * scores are per-branch occurrence counts — no index-local
-    * statistics — so the merge is a plain top-k; the per-branch `limit`
-    * bound is sound for the same reason as [[acrossIndexesRanked]]'s.
-    * Scan-path twin: [[phrase]] over each entity's pipeline documents
-    * (SearchIndexSpec pins the equality). */
+    * merge into one global top-k ([[mergeBranches]]). Phrase scores
+    * are per-branch occurrence counts — no index-local statistics — so
+    * the merge is a plain top-k. Scan-path twin: [[phrase]] over each
+    * entity's pipeline documents (SearchIndexSpec pins the equality). */
   def acrossIndexesPhraseIndexed(spark: SparkSession, indexRoot: String,
                                  phraseQuery: String, limit: Int = 100,
                                  after: Option[(Double, String, String)] =
                                    None, slop: Int = 0,
-                                  only: Seq[String] = Nil): DataFrame = {
-    import graft.catalog.EntityCatalog
-    val branches = entitySubset(only)
-      .map { spec =>
-        val branchAfter = after.map { case (s, id, _) => (s, id: Any) }
-        val inclusive = after.exists { case (_, _, t) => spec.name > t }
-        graft.sinks.SearchIndex.phrase(spark, s"$indexRoot/${spec.name}",
-          phraseQuery, Nil, limit, Map.empty, branchAfter, inclusive, slop)
-          .select(lit(spec.name).as("table"), col("document_id"),
-            col("score"))
-      }
-    branches.reduce(_.unionByName(_))
-      .orderBy(col("score").desc, col("document_id"), col("table"))
-      .limit(limit)
-  }
+                                  only: Seq[String] = Nil): DataFrame =
+    mergeBranches(only, limit, after) { (entity, branchAfter, inclusive) =>
+      graft.sinks.SearchIndex.phrase(spark, s"$indexRoot/$entity",
+        phraseQuery, Nil, limit, Map.empty, branchAfter, inclusive, slop)
+    }
 
   /** Wildcard `operator=and` / `minimum_should_match` over the entity
     * indexes — [[graft.sinks.SearchIndex.minShould]] per branch, global
@@ -439,21 +306,11 @@ object Search {
                                     limit: Int = 100,
                                     after: Option[(Double, String, String)] =
                                       None,
-                                  only: Seq[String] = Nil): DataFrame = {
-    import graft.catalog.EntityCatalog
-    val branches = entitySubset(only)
-      .map { spec =>
-        val branchAfter = after.map { case (s, id, _) => (s, id: Any) }
-        val inclusive = after.exists { case (_, _, t) => spec.name > t }
-        graft.sinks.SearchIndex.minShould(spark, s"$indexRoot/${spec.name}",
-          query, Nil, minMatch, limit, Map.empty, branchAfter, inclusive)
-          .select(lit(spec.name).as("table"), col("document_id"),
-            col("score"))
-      }
-    branches.reduce(_.unionByName(_))
-      .orderBy(col("score").desc, col("document_id"), col("table"))
-      .limit(limit)
-  }
+                                  only: Seq[String] = Nil): DataFrame =
+    mergeBranches(only, limit, after) { (entity, branchAfter, inclusive) =>
+      graft.sinks.SearchIndex.minShould(spark, s"$indexRoot/$entity",
+        query, Nil, minMatch, limit, Map.empty, branchAfter, inclusive)
+    }
 
   /** Wildcard `fuzziness` over the entity indexes — each entity's
     * vocabulary expands the query terms independently
@@ -466,22 +323,32 @@ object Search {
                                   None, prefixLength: Int = 0,
                                 maxExpansions: Option[Int] = None,
                                 transpositions: Boolean = true,
-                                  only: Seq[String] = Nil): DataFrame = {
-    import graft.catalog.EntityCatalog
-    val branches = entitySubset(only)
-      .map { spec =>
-        val branchAfter = after.map { case (s, id, _) => (s, id: Any) }
-        val inclusive = after.exists { case (_, _, t) => spec.name > t }
-        graft.sinks.SearchIndex.fuzzy(spark, s"$indexRoot/${spec.name}",
-          query, Nil, fuzziness, limit, Map.empty, branchAfter, inclusive,
-          prefixLength, maxExpansions, transpositions)
+                                  only: Seq[String] = Nil): DataFrame =
+    mergeBranches(only, limit, after) { (entity, branchAfter, inclusive) =>
+      graft.sinks.SearchIndex.fuzzy(spark, s"$indexRoot/$entity",
+        query, Nil, fuzziness, limit, Map.empty, branchAfter, inclusive,
+        prefixLength, maxExpansions, transpositions)
+    }
+
+  /** One probe per entity of `only` (all when empty), merged into one
+    * global top-k under the shared 3-key cursor order. Each branch
+    * gets the cursor as (score, id), inclusive of that id when its
+    * entity sorts after the cursor's table; the per-branch `limit`
+    * bound is sound because a hit outside its own branch's top-k
+    * cannot enter the global one. */
+  private def mergeBranches(only: Seq[String], limit: Int,
+                            after: Option[(Double, String, String)])(
+      probe: (String, Option[(Double, Any)], Boolean) => DataFrame)
+      : DataFrame =
+    entitySubset(only).map { spec =>
+        probe(spec.name, after.map { case (s, id, _) => (s, id: Any) },
+          after.exists { case (_, _, t) => spec.name > t })
           .select(lit(spec.name).as("table"), col("document_id"),
             col("score"))
       }
-    branches.reduce(_.unionByName(_))
+      .reduce(_.unionByName(_))
       .orderBy(col("score").desc, col("document_id"), col("table"))
       .limit(limit)
-  }
 
   /** Sync-time index build for every catalog entity — the write-time
     * moment the reference's ES builds its inverted indexes. One index
@@ -523,7 +390,7 @@ object Search {
     */
   def tfidf(df: DataFrame, query: String, textCol: String, idCol: String,
             limit: Int = 100): DataFrame =
-    rankedRetrieval(df, query, textCol, idCol, limit, bm25 = false)
+    rankedPage(df, query, Seq(textCol), idCol, limit, bm25 = false)
 
   /** BM25 ranked retrieval — [[tfidf]] plus the two ingredients ES's
     * actual scorer (`multi_match` executes Lucene BM25) adds on top of
@@ -537,17 +404,14 @@ object Search {
     * score(doc) = Σ_t idf_t · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
     * idf_t = ln(1 + (N − df_t + 0.5)/(df_t + 0.5))   (Lucene's form)
     *
-    * k1 = 1.2, b = 0.75 enter the plan as literals (Lucene defaults).
-    * The ln is safe for the oracle here for the same reason as
-    * LanguageModel's: both engines take ln of the identical double and
-    * the final score is floor-rounded to the 1e-4 grid. Same
-    * inverted-probe shape and oracle-ability as [[tfidf]]: one
+    * The formulas are [[Ranking.bm25Idf]] / [[Ranking.bm25Saturation]].
+    * Same inverted-probe shape and oracle-ability as [[tfidf]]: one
     * prefiltered explode, tiny broadcast stats, top-k. The corpus
     * statistics (N, avgdl) are one extra tiny aggregate over the scan —
     * the numbers ES keeps precomputed per index. */
   def bm25(df: DataFrame, query: String, textCol: String, idCol: String,
            limit: Int = 100): DataFrame =
-    rankedRetrieval(df, query, textCol, idCol, limit, bm25 = true)
+    rankedPage(df, query, Seq(textCol), idCol, limit, bm25 = true)
 
   /** Multi-field BM25 — TRUE `multi_match` semantics over a fields LIST
     * (reference: src/search_api.py:22-30 passes several fields; ES
@@ -558,18 +422,17 @@ object Search {
     * `best_fields`). Optional per-field `boosts` multiply a field's
     * score before combining (ES `field^boost`).
     *
-    * Shape at scale: each field contributes one prefiltered
-    * inverted-probe pass (query-term-sized after the scan filter); the
-    * combine is a full-outer join of HITS-sized frames — never
-    * corpus-sized. Float determinism: per-field scores are the same
-    * fixed-order sums as single-field, fields combine in caller order,
-    * rounding happens once after the combine. */
+    * Shape at scale: the fields STACK into one explode (one scan
+    * carries every field's tokens, tagged `fid`) and the cross-field
+    * combine is conditional sums inside ONE final per-doc aggregation
+    * ([[Ranking]]) — 2 scans and 3 shuffles whatever the field count,
+    * no per-field joins. Rounding happens once after the combine. */
   def bm25Fields(df: DataFrame, query: String, fields: Seq[String],
                  idCol: String, limit: Int = 100,
                  bestFields: Boolean = false,
                  boosts: Map[String, Double] = Map.empty,
                  after: Option[(Double, Any)] = None): DataFrame =
-    rankedFields(df, query, fields, idCol, limit, bm25 = true,
+    rankedPage(df, query, fields, idCol, limit, bm25 = true,
       bestFields, boosts, after)
 
   /** Multi-field tf·idf — [[tfidf]] per field, combined like
@@ -579,7 +442,7 @@ object Search {
                   bestFields: Boolean = false,
                   boosts: Map[String, Double] = Map.empty,
                   after: Option[(Double, Any)] = None): DataFrame =
-    rankedFields(df, query, fields, idCol, limit, bm25 = false,
+    rankedPage(df, query, fields, idCol, limit, bm25 = false,
       bestFields, boosts, after)
 
   /** Round to the 1e-4 grid — the last step of every ranked scorer, so
@@ -587,145 +450,23 @@ object Search {
   private[graft] def round4(c: Column): Column =
     floor(c * 10000.0 + 0.5).cast("double") / 10000.0
 
-  /** Multi-field ranked retrieval in ONE pass over the corpus: fields
-    * STACK into a single explode (one scan carries every field's
-    * tokens, tagged `fid`), per-(field, term) df and per-field dl/avgdl
-    * ride the same shared aggregates, and the cross-field combine is
-    * conditional sums inside ONE final per-doc aggregation — no
-    * per-field corpus scans, no full-outer joins (the naive
-    * k-independent-pipelines form costs 2k scans and a k-way join; this
-    * is 2 scans and 3 shuffles regardless of k). Numerically identical
-    * to scoring each field alone and combining: every per-(field, term)
-    * contribution is a single row, so conditional sums add the same
-    * doubles in the same fixed (field, term) order the oracle spells. */
-  private def rankedFields(df: DataFrame, query: String,
-                           fields: Seq[String], idCol: String, limit: Int,
-                           bm25: Boolean, bestFields: Boolean,
-                           boosts: Map[String, Double],
-                           after: Option[(Double, Any)] = None,
-                           afterInclusive: Boolean = false): DataFrame =
-    rankedAll(df, query, fields, idCol, bm25, bestFields, boosts)
-      .filter(afterPredicate(after, col(idCol), afterInclusive))
+  /** One ranked page over a plain frame: [[Ranking.rankFrame]] with
+    * one clause over `fields`, then the cursor and the
+    * (score desc, id) top-k. */
+  private def rankedPage(df: DataFrame, query: String,
+                         fields: Seq[String], idCol: String, limit: Int,
+                         bm25: Boolean, bestFields: Boolean = false,
+                         boosts: Map[String, Double] = Map.empty,
+                         after: Option[(Double, Any)] = None): DataFrame = {
+    val clause = Ranking.single("score",
+      graft.functions.TextFunctions.analyzeText(query).distinct,
+      fields.indices.map(i => (i, boosts.getOrElse(fields(i), 1.0))),
+      bestFields)
+    Ranking.rankFrame(df, idCol, fields.map(f => f -> col(f)),
+        Seq(clause), bm25)
+      .filter(afterPredicate(after, col(idCol)))
       .orderBy(col("score").desc, col(idCol))
       .limit(limit)
-
-  /** The (id, score) frame of [[rankedFields]] BEFORE pagination: one
-    * row per doc matching ≥1 query term as an exact token, carrying the
-    * rounded combined score — no cursor, no order, no limit. The ES-DSL
-    * translator ([[EsDsl]]) joins these frames back to table rows so DSL
-    * `match`/`multi_match` clauses score with the exact BM25 machinery
-    * `/search rank=bm25` uses — same expression tree, same fixed-order
-    * float sums, same one-time rounding, so DSL and /search rankings are
-    * bit-identical on the same query. */
-  private[graft] def rankedAll(df: DataFrame, query: String,
-                               fields: Seq[String], idCol: String,
-                               bm25: Boolean, bestFields: Boolean,
-                               boosts: Map[String, Double]): DataFrame = {
-    import graft.functions.TextFunctions.{analyzerTokenCount => tokenCount}
-    require(fields.nonEmpty, "at least one field to rank")
-    val terms =
-      graft.functions.TextFunctions.analyzeText(query).distinct.toArray
-    val anyTerm = fields.flatMap(f =>
-        terms.map(t => lower(col(f)).contains(lit(t))))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    // one scan: stack every field's (dl, token array), then explode
-    // tokens; a NULL field contributes nothing (its token array is null)
-    val stacked = df.filter(anyTerm)
-      .select(col(idCol), explode(array(fields.zipWithIndex.map {
-        case (f, i) => struct(lit(i).as("fid"),
-          (if (bm25) tokenCount(col(f)) else lit(0)).as("dl"),
-          graft.functions.TextFunctions.analyzerTokens(col(f))
-            .as("toks"))
-      }: _*)).as("fs"))
-      .select(col(idCol), col("fs.fid").as("fid"), col("fs.dl").as("dl"),
-        explode(col("fs.toks")).as("term"))
-      .filter(col("term").isin(terms.toSeq: _*))
-    // shared corpus statistics: ONE full-scan aggregate computes every
-    // field's n/avgdl (the numbers ES precomputes per index) AND — r19
-    // — every (field, term) document frequency, riding the same
-    // tokenizer pass (TokenDlHits: dl + distinct matched term indices
-    // in one spans walk). df_t = docs whose field token-list contains
-    // the term ≡ the tf-group row count the old count(*) OVER
-    // (PARTITION BY fid, term) window produced — but skew-free: the
-    // window placed every matching doc of a hot term in ONE partition
-    // with a sort (no AQE skew handling on window exchanges). The
-    // reshaped stats broadcast is ≤ |fields| × |query terms| rows. On
-    // the tf·idf path the stats pass now tokenizes to carry df (it
-    // previously only counted rows — the window carried df there).
-    // the struct is evaluated ONCE per row in a projection below the
-    // aggregate (the df aggs + avgdl reference an attribute, so codegen
-    // subexpression elimination never gets a vote on how many tokenizer
-    // passes a row pays)
-    val tsOf = fields.indices.map(i => col(s"__ts_$i"))
-    val pre = df.select(fields.zipWithIndex.map { case (f, i) =>
-      graft.functions.ArrayExpressions.tokenDlHits(col(f), terms.toSeq)
-        .as(s"__ts_$i") }: _*)
-    val dfAggs = for (i <- fields.indices; j <- terms.indices) yield
-      sum(when(array_contains(tsOf(i).getField("hits"), j), 1L))
-        .as(s"df_${i}_$j")
-    val statsAggs =
-      if (bm25)
-        fields.indices.map(i =>
-          (sum(tsOf(i).getField("dl")).cast("double") / count(lit(1)))
-            .as(s"avgdl_$i")) ++ dfAggs
-      else dfAggs
-    val statsWide = pre.agg(count(lit(1)).as("n"), statsAggs: _*)
-    // lazy: with zero analyzed terms the explode(array()) would not
-    // resolve, and the empty-terms branch below never consumes it
-    lazy val stats = statsWide.select(explode(array((for {
-        i <- fields.indices; (t, j) <- terms.zipWithIndex.toSeq
-      } yield struct(lit(i).as("fid"), lit(t).as("term"),
-        col("n").as("n"),
-        (if (bm25) col(s"avgdl_$i") else lit(0.0)).as("avgdl"),
-        col(s"df_${i}_$j").as("df_t"))): _*)).as("s"))
-      .select(col("s.fid").as("fid"), col("s.term").as("term"),
-        col("s.n").as("n"), col("s.avgdl").as("avgdl"),
-        col("s.df_t").as("df_t"))
-    // ONE pass over the matching docs (r18): each (doc, fid[, dl],
-    // term) group is one row and ids are unique within a field's
-    // corpus, so the tf aggregation needs no df bookkeeping at all —
-    // the stats broadcast carries it.
-    val grouped =
-      if (bm25)
-        stacked.groupBy(col(idCol), col("fid"), col("dl"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      else stacked.groupBy(col(idCol), col("fid"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-    val withStats =
-      if (terms.isEmpty)
-        // no analyzed terms: grouped is empty (isin over nothing);
-        // supply the schema the scorer below expects
-        grouped.withColumn("df_t", lit(0L)).withColumn("n", lit(0L))
-          .withColumn("avgdl", lit(0.0))
-      else grouped.join(broadcast(stats), Seq("fid", "term"))
-    val idf: Column =
-      if (bm25)
-        log(lit(1.0) + (col("n") - col("df_t") + 0.5) /
-          (col("df_t") + 0.5))
-      else (col("n") + 1.0) / (col("df_t") + 1.0)
-    val perTerm: Column =
-      if (bm25)
-        idf * ((col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) +
-            lit(0.75) * col("dl") / col("avgdl"))))
-      else col("tf") * idf
-    // per-field score: fixed-order term sum of single-row conditionals
-    // (each (doc, fid, term) group is one row after the tf aggregation)
-    def fieldScore(i: Int): Column = {
-      val raw = terms.toSeq.map(t =>
-          coalesce(sum(when(col("term") === t && col("fid") === i,
-            perTerm)), lit(0.0)))
-        .reduce(_ + _)
-      boosts.get(fields(i)).map(b => raw * b).getOrElse(raw)
-    }
-    val parts = fields.indices.map(fieldScore)
-    val combined =
-      if (parts.size == 1) parts.head
-      else if (bestFields) greatest(parts: _*)
-      else parts.reduce(_ + _) // fixed field order — float + isn't assoc.
-    withStats
-      .groupBy(col(idCol))
-      .agg(round4(combined).as("score"))
   }
 
   /** One match-family clause of an ES-DSL body, queued by
@@ -746,23 +487,19 @@ object Search {
     * index-side tokens and statistics stay standard. */
   private[graft] final case class RankField(key: String, expr: Column)
 
-  /** EVERY match-family clause of one DSL body scored in ONE pass —
-    * the multi-clause generalization of [[rankedAll]]: all clauses'
-    * fields stack into a single tokenize+explode scan (tagged `fid`
-    * over the request's interned field list), one shared stats
-    * aggregate carries every field's n/avgdl, per-(field, term) df
-    * rides one aggregation of the shared stack, and each clause's
-    * score is its own fixed-order conditional sum inside ONE final
+  /** EVERY match-family clause of one DSL body scored in ONE pass:
+    * all clauses' fields stack into a single tokenize+explode scan
+    * (tagged `fid` over the request's interned field list), one shared
+    * stats aggregate carries every field's n/avgdl/df, and each
+    * clause's score is its own [[Ranking.Clause]] inside ONE final
     * per-doc aggregation — so a bool with K match clauses costs 2
-    * corpus scans and one score join TOTAL, not 2K scans and K joins
-    * (the round-9 design this replaces; the per-clause scan was the
-    * one adjudicated scale weakness). Numerically identical to
-    * scoring each clause alone with [[rankedAll]]: every
-    * (doc, field, term) contribution is a single row after the tf
-    * aggregation, each clause's conditional sums add the same doubles
-    * in the same fixed (field, term) order, and rounding happens once
-    * per clause — a clause the doc doesn't match sums to the same
-    * 0.0 its absent join row coalesced to before.
+    * corpus scans and one score join TOTAL, not 2K scans and K joins.
+    * Numerically identical to scoring each clause alone: each clause
+    * adds the same doubles in the same fixed (field, term) order and
+    * rounds once — a clause the doc doesn't match sums to 0.0. The
+    * prefilter ORs every clause's (field, term) probes; that is safe
+    * for english clauses too, whose query-side STEMS match standard
+    * tokens by equality, and a token is a substring of the raw text.
     *
     * `fieldExprs` = (key, expression) in first-use order — a key is a
     * plain column name or a derived combined-fields concat; `clauses`
@@ -770,219 +507,12 @@ object Search {
   private[graft] def rankedAllMulti(df: DataFrame, idCol: String,
                                     fieldExprs: Seq[RankField],
                                     clauses: Seq[RankClause]): DataFrame = {
-    import graft.functions.TextFunctions.{analyzerTokenCount => tokenCount}
-    require(clauses.nonEmpty, "at least one clause to rank")
-    require(fieldExprs.nonEmpty, "at least one field to rank")
     val fidOf = fieldExprs.map(_.key).zipWithIndex.toMap
-    val exprOf = fieldExprs.map(f => f.key -> f.expr).toMap
-    val allTerms = clauses.flatMap(_.terms).distinct
-    // codegen'd contains-any prefilter: clause order, fields outer,
-    // terms inner (each clause's rankedAll shape, OR-folded across
-    // clauses; duplicate (field, term) probes dropped first-wins) — a
-    // doc matching NO clause's terms as substrings can't token-match
-    // any clause, so it skips tokenize+explode entirely. Safe for
-    // english clauses too: their terms are query-side STEMS matched
-    // by token equality against standard tokens, and any token equal
-    // to the stem is a substring of the raw text.
-    val seen = scala.collection.mutable.Set[(String, String)]()
-    val probes = for {
-      c <- clauses; (f, _) <- c.fields; t <- c.terms
-      if seen.add((f, t))
-    } yield lower(exprOf(f)).contains(lit(t))
-    val anyTerm = probes.reduceOption(_ || _).getOrElse(lit(false))
-    val stacked = df.filter(anyTerm)
-      .select(col(idCol), explode(array(fieldExprs.zipWithIndex.map {
-        case (rf, i) => struct(lit(i).as("fid"),
-          tokenCount(rf.expr).as("dl"),
-          graft.functions.TextFunctions.analyzerTokens(rf.expr)
-            .as("toks"))
-      }: _*)).as("fs"))
-      .select(col(idCol), col("fs.fid").as("fid"), col("fs.dl").as("dl"),
-        explode(col("fs.toks")).as("term"))
-      .filter(col("term").isin(allTerms: _*))
-    // ONE full-scan aggregate for every interned field's n/avgdl —
-    // clause-independent (n is the corpus count; avgdl is a property
-    // of the field), so clauses sharing a field share its statistics.
-    // r19 (de-skew): every (field, term) document frequency rides the
-    // SAME aggregate via TokenDlHits (one tokenizer pass yields dl +
-    // the distinct matched term indices), replacing the count(*) OVER
-    // (PARTITION BY fid, term) window that placed every matching doc
-    // of a hot term in ONE partition with a sort (no AQE skew handling
-    // on window exchanges). df_t = docs whose field token-list contains
-    // the term ≡ the old tf-group row count; a (fid, term) group
-    // requires the token in that field, which implies the prefilter
-    // admitted the row — so df_t equals the per-clause value.
-    // evaluated ONCE per row in a projection below the aggregate (see
-    // rankedAll)
-    val tsOf = fieldExprs.indices.map(i => col(s"__ts_$i"))
-    val pre = df.select(fieldExprs.zipWithIndex.map { case (rf, i) =>
-      graft.functions.ArrayExpressions.tokenDlHits(rf.expr, allTerms)
-        .as(s"__ts_$i") }: _*)
-    val dfAggs = for (i <- fieldExprs.indices; j <- allTerms.indices)
-      yield sum(when(array_contains(tsOf(i).getField("hits"), j), 1L))
-        .as(s"df_${i}_$j")
-    val statsWide = pre.agg(count(lit(1)).as("n"),
-      fieldExprs.indices.map { i =>
-        (sum(tsOf(i).getField("dl")).cast("double") / count(lit(1)))
-          .as(s"avgdl_$i") } ++ dfAggs: _*)
-    lazy val stats = statsWide.select(explode(array((for {
-        i <- fieldExprs.indices; (t, j) <- allTerms.zipWithIndex
-      } yield struct(lit(i).as("fid"), lit(t).as("term"),
-        col("n").as("n"), col(s"avgdl_$i").as("avgdl"),
-        col(s"df_${i}_$j").as("df_t"))): _*)).as("s"))
-      .select(col("s.fid").as("fid"), col("s.term").as("term"),
-        col("s.n").as("n"), col("s.avgdl").as("avgdl"),
-        col("s.df_t").as("df_t"))
-    // ONE pass over the matching docs (r18): each (doc, fid, dl, term)
-    // group is one row and ids are unique within a field's corpus —
-    // the tf aggregation needs no df bookkeeping; the stats broadcast
-    // carries it.
-    val grouped = stacked
-      .groupBy(col(idCol), col("fid"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-    val withStats =
-      if (allTerms.isEmpty)
-        grouped.withColumn("df_t", lit(0L)).withColumn("n", lit(0L))
-          .withColumn("avgdl", lit(0.0))
-      else grouped.join(broadcast(stats), Seq("fid", "term"))
-    val idf: Column =
-      log(lit(1.0) + (col("n") - col("df_t") + 0.5) /
-        (col("df_t") + 0.5))
-    val perTerm: Column =
-      idf * ((col("tf") * 2.2) /
-        (col("tf") + lit(1.2) * (lit(0.25) +
-          lit(0.75) * col("dl") / col("avgdl"))))
-    // each clause's score: its own fields in its own order, fixed-order
-    // term sums of single-row conditionals — [[rankedAll]]'s fieldScore
-    // verbatim, with the global fid in the condition
-    val scoreCols = clauses.zipWithIndex.map { case (c, ci) =>
-      val parts = c.fields.map { case (f, boost) =>
-        val i = fidOf(f)
-        val raw = c.terms.map(t =>
-            coalesce(sum(when(col("term") === t && col("fid") === i,
-              perTerm)), lit(0.0)))
-          .reduce(_ + _)
-        if (boost == 1.0) raw else raw * boost
-      }
-      val combined =
-        if (parts.size == 1) parts.head
-        else if (c.bestFields) greatest(parts: _*)
-        else parts.reduce(_ + _) // fixed field order — float + isn't assoc.
-      round4(combined).as(s"__bm25_$ci")
-    }
-    withStats
-      .groupBy(col(idCol))
-      .agg(scoreCols.head, scoreCols.tail: _*)
-  }
-
-  private def rankedRetrieval(df: DataFrame, query: String, textCol: String,
-                              idCol: String, limit: Int,
-                              bm25: Boolean): DataFrame =
-    rankedScores(df, query, textCol, idCol, bm25)
-      .select(col(idCol), round4(col("score")).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(limit)
-
-  /** Raw (id, score) for every doc matching ≥1 query term in `textCol`
-    * — single-field scoring WITHOUT rounding/top-k, so multi-field
-    * combination can sum/max field scores before the one rounding. */
-  private def rankedScores(df: DataFrame, query: String, textCol: String,
-                           idCol: String, bm25: Boolean): DataFrame = {
-    import graft.functions.TextFunctions.{analyzerTokenCount => tokenCount}
-    val terms =
-      graft.functions.TextFunctions.analyzeText(query).distinct.toArray
-    // substring prefilter BEFORE tokenizing: a doc with no query term as
-    // a substring can't have one as a token, so the (codegen'd, scan-
-    // evaluated) contains-any test skips tokenize+explode for most of
-    // the corpus; substring false-positives ("foobar" for "foo") still
-    // die at the post-explode token filter, so results are unchanged
-    val anyTerm = terms.map(t => lower(col(textCol)).contains(lit(t)))
-      .reduceOption(_ || _).getOrElse(lit(false))
-    // analyzerTokens is ONE native regexp_extract_all — codegen'd,
-    // no HOF filter pass. BM25 additionally carries the doc length
-    // (analyzed token count, matching avgdl's definition) on each
-    // exploded row.
-    val baseCols =
-      if (bm25) Seq(col(idCol), tokenCount(col(textCol)).as("dl"))
-      else Seq(col(idCol))
-    val toks = df.filter(anyTerm).select(
-        baseCols :+ explode(graft.functions.TextFunctions
-          .analyzerTokens(col(textCol))).as("term"): _*)
-      .filter(col("term").isin(terms.toSeq: _*))
-    // corpus statistics: one tiny aggregate of the full scan. sum(dl) is
-    // an exact integer sum, so avgdl = one double division — the same
-    // value in any engine (a float avg() could differ by addition order).
-    // r19 (de-skew): per-term document frequency RIDES this aggregate —
-    // TokenDlHits measures dl and the distinct query-term indices
-    // present in one tokenizer pass, so df_t = count of docs whose
-    // token list contains the term, exactly the row count the old
-    // count(*) OVER (PARTITION BY term) window produced over the tf
-    // groups (≥1 occurrence ⇔ a tf row ⇔ a hits entry). The window
-    // placed every matching doc of a hot term in ONE partition with a
-    // sort (no AQE skew handling on window exchanges — a stopword is a
-    // straggler task at corpus scale); the stats rider is skew-free and
-    // joins back broadcast, ≤ |query terms| rows.
-    // evaluated ONCE per row in a projection below the aggregate (see
-    // rankedAll)
-    val ts = col("__ts")
-    val pre = df.select(graft.functions.ArrayExpressions
-      .tokenDlHits(col(textCol), terms.toSeq).as("__ts"))
-    val dfAggs = terms.indices.map(j =>
-      sum(when(array_contains(ts.getField("hits"), j), 1L)).as(s"df_$j"))
-    val statsWide =
-      if (bm25)
-        pre.agg(count(lit(1)).as("n"),
-          (sum(ts.getField("dl")).cast("double") / count(lit(1)))
-            .as("avgdl") +: dfAggs: _*)
-      else pre.agg(count(lit(1)).as("n"), dfAggs: _*)
-    val grouped =
-      if (bm25)
-        // dl is functionally dependent on the doc id — riding it in the
-        // group key costs 8 bytes of shuffle width, not an extra pass
-        toks.groupBy(col(idCol), col("dl"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-      else toks.groupBy(col(idCol), col("term"))
-        .agg(count(lit(1)).as("tf"))
-    val withStats =
-      if (terms.isEmpty)
-        // no analyzed terms: grouped is empty (isin over nothing);
-        // supply the schema the scorer below expects
-        grouped.withColumn("df_t", lit(0L)).withColumn("n", lit(0L))
-          .withColumn("avgdl", lit(0.0))
-      else {
-        val stats = statsWide.select(explode(array(terms.zipWithIndex.map {
-            case (t, j) => struct(lit(t).as("term"), col("n").as("n"),
-              (if (bm25) col("avgdl") else lit(0.0)).as("avgdl"),
-              col(s"df_$j").as("df_t"))
-          }.toSeq: _*)).as("s"))
-          .select(col("s.term").as("term"), col("s.n").as("n"),
-            col("s.avgdl").as("avgdl"), col("s.df_t").as("df_t"))
-        grouped.join(broadcast(stats), Seq("term"))
-      }
-    // idf inline over the same (n, df_t) longs the joined column held —
-    // identical doubles, one fewer corpus scan
-    val idf: Column =
-      if (bm25)
-        log(lit(1.0) + (col("n") - col("df_t") + 0.5) /
-          (col("df_t") + 0.5))
-      else (col("n") + 1.0) / (col("df_t") + 1.0)
-    // per-(doc, term) contribution; k1 = 1.2, b = 0.75 (Lucene defaults)
-    // as plan literals, 1−b and k1+1 pre-reduced to exact decimal-parse
-    // doubles so the oracle can spell the identical constants
-    val perTerm: Column =
-      if (bm25)
-        idf * ((col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) +
-            lit(0.75) * col("dl") / col("avgdl"))))
-      else col("tf") * idf
-    // fixed per-term addition order (query order): float addition is not
-    // associative, and a free-order sum() could differ from the oracle in
-    // the last ulp right at a rounding boundary
-    val termScores = terms.toSeq.map(t =>
-      coalesce(sum(when(col("term") === t, perTerm)), lit(0.0)))
-    withStats
-      .groupBy(col(idCol))
-      .agg(termScores.reduce(_ + _).as("score"))
+    Ranking.rankFrame(df, idCol, fieldExprs.map(f => f.key -> f.expr),
+      clauses.zipWithIndex.map { case (c, ci) =>
+        Ranking.single(s"__bm25_$ci", c.terms,
+          c.fields.map { case (f, b) => (fidOf(f), b) }, c.bestFields)
+      }, bm25 = true)
   }
 
   /** `" t1  t2  …  tk "` — the column's whitespace tokens joined by

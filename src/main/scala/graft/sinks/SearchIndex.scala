@@ -3,8 +3,12 @@ package graft.sinks
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.serving.{Ranking, Search}
 
 /** WRITE-TIME search index — the engine's analog of what Elasticsearch
   * does inside `bulk_index` (reference: src/es_connector.py:51-74): build
@@ -51,10 +55,11 @@ import org.apache.spark.sql.functions._
   *     integer so incremental updates are EXACT (no float drift between
   *     an upserted index and a full rebuild).
   *
-  * Score identity: [[ranked]] evaluates the same expression tree as
-  * [[graft.serving.Search.rankedFields]] over the same integer inputs
-  * (tf, dl, df, n, sumdl); [[phrase]] counts the same greedy
-  * non-overlapping token-adjacent occurrences as
+  * Score identity: [[ranked]] and [[rankedAcrossIndexes]] feed the
+  * same integer inputs (tf, dl, df, n, sumdl) to the ONE ranked
+  * kernel the scan path uses ([[graft.serving.Ranking]]: the postings
+  * producer replaces the tokenizing one); [[phrase]] counts the same
+  * greedy non-overlapping token-adjacent occurrences as
   * [[graft.serving.Search.phrase]]'s normalized substring scan; and
   * [[minShould]] reproduces [[graft.serving.Search.multiFieldMinShould]]
   * (token-exact counts, unweighted match predicate, boost-weighted
@@ -120,7 +125,6 @@ object SearchIndex {
   private val Reserved = Set("fid", "dl", "term", "tf", "pos", "df_t", "n",
     "sumdl", "score", "input", "input_lc")
 
-  /** Current generation's table directory. */
   /** Per-(session, generation-dir) memo of the lazily-read index
     * tables. A generation directory is IMMUTABLE once written (rebuild
     * and upsert write g(N+1) and flip the meta pointer), so the
@@ -129,9 +133,11 @@ object SearchIndex {
     * re-reads footers on the DRIVER — a fixed serial cost per probe
     * table that dominated the indexed wildcard (21 tiny reads per
     * request). Execution still scans the parquet files every time; no
-    * query RESULT is ever cached (r19). Superseded generations leave
-    * dead plan objects behind — bounded by the rebuild count, like the
-    * coverage memo. */
+    * query RESULT is ever cached (r19). Entries leave with their
+    * generation: [[gcGenerations]] drops the generations it deletes,
+    * and [[build]] drops every entry of its path — a build over a
+    * deleted index restarts at g0, whose memoized listing would name
+    * the deleted files. */
   private val tableMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
   private def indexTable(spark: SparkSession, dir: String,
@@ -139,6 +145,22 @@ object SearchIndex {
     tableMemo.computeIfAbsent((spark, s"$dir/$sub"),
       k => k._1.read.parquet(k._2))
 
+  private val MemoKey = "(.*)/g(\\d+)/[^/]+".r
+
+  /** The generations of the index at `path` that hold memoized
+    * tables. */
+  private[graft] def memoizedGenerations(path: String): Set[Int] =
+    tableMemo.keySet.asScala.toSet[(SparkSession, String)].collect {
+      case (_, MemoKey(p, g)) if p == path => g.toInt }
+
+  /** Drop the memoized tables of `path`'s generations `keep` rejects. */
+  private def evictMemo(path: String, keep: Int => Boolean): Unit =
+    tableMemo.keySet.removeIf(k => k._2 match {
+      case MemoKey(p, g) => p == path && !keep(g.toInt)
+      case _ => false
+    })
+
+  /** Current generation's table directory. */
   private def tableDir(path: String, meta: Meta): String =
     s"$path/g${meta.gen}"
 
@@ -185,8 +207,8 @@ object SearchIndex {
 
   /** One stacked pass over `docs`: every field's (dl, tokens) rides one
     * explode tagged `fid` — the same single-scan shape
-    * Search.rankedFields uses, minus the query-term filter (an index
-    * keeps every term). Under the standard analyzer, positions index
+    * the scan producer (graft.serving.Ranking.scan) uses, minus the
+    * query-term filter (an index keeps every term). Under the standard analyzer, positions index
     * the standard-analyzed token sequence
     * ([[graft.functions.TextFunctions.analyzerTokens]]), matching
     * Search.tokenNorm's adjacency semantics. Under the index-time
@@ -347,6 +369,7 @@ object SearchIndex {
       s"unsupported search_analyzer '$sa' " +
         s"(${SearchAnalyzers.toSeq.sorted.mkString(", ")})"))
     val spark = docs.sparkSession
+    evictMemo(path, keep = _ => false)
     val gen = if (exists(path)) readMeta(path).gen + 1 else 0
     val dir = s"$path/g$gen"
     postingsOf(docs, fields, idCol, analyzer, chainCanon)
@@ -379,37 +402,33 @@ object SearchIndex {
     * (empty = every indexed field, in index order), identical in every
     * output bit to [[graft.serving.Search.bm25Fields]] /
     * [[graft.serving.Search.tfidfFields]] over the original corpus —
-    * same expression tree, same fixed-order float sums, same rounding —
-    * but reading only query-term-sized postings and KB-sized stats. */
+    * the same [[graft.serving.Ranking]] combiner over the same integer
+    * inputs — but reading only query-term-sized postings and KB-sized
+    * stats. */
   def ranked(spark: SparkSession, path: String, query: String,
              fields: Seq[String] = Nil, limit: Int = 100,
              bm25: Boolean = true, bestFields: Boolean = false,
              boosts: Map[String, Double] = Map.empty,
              after: Option[(Double, Any)] = None,
              afterInclusive: Boolean = false): DataFrame = {
-    import graft.serving.Search.afterPredicate
-    val meta = readMeta(path)
-    rankedScoresOf(spark, meta, path, query, fields, bm25, bestFields,
-        boosts)
-      .filter(afterPredicate(after, col(meta.idCol), afterInclusive))
-      .orderBy(col("score").desc, col(meta.idCol))
+    val scored = rankedScores(spark, path, query, fields, bm25, bestFields,
+      boosts)
+    val id = col(scored.columns.head)
+    scored.filter(Search.afterPredicate(after, id, afterInclusive))
+      .orderBy(col("score").desc, id)
       .limit(limit)
   }
 
-  /** EVERY branch of a wildcard index probe merged into ONE plan —
-    * the r19 replacement for unioning [[ranked]] per entity: the old
-    * shape built 2 broadcast exchanges + 1 aggregation exchange + 1
-    * per-branch TakeOrdered PER ENTITY (a 7-entity wildcard = 14
-    * broadcast builds serialized on the driver); this form unions the
-    * entity-tagged postings/termstats/fieldstats probes, builds ONE
+  /** EVERY branch of a wildcard index probe merged into ONE plan:
+    * the entity-tagged postings/termstats/fieldstats probes union into
+    * ONE input pair ([[probeInputs]]), so the plan builds one
     * (table, fid, term, idf, avgdl) broadcast, aggregates once keyed
-    * by (table, document_id), and takes one global top-k. Per-entity
-    * scores stay bit-identical: each branch's fixed-order conditional
-    * sums are selected by the constant `table` group key (foreign
-    * branches' sums coalesce to exact 0.0 and are never picked), and
-    * rounding happens once per group like the per-branch plan.
-    * Returns (table, document_id, score) ordered by the shared 3-key
-    * cursor order, limit applied. */
+    * by (table, document_id), and takes one global top-k — not 2
+    * broadcasts + an aggregation + a TakeOrdered per entity. Each
+    * entity is one leg of the [[graft.serving.Ranking]] clause,
+    * selected by the constant `table` group key, so per-entity scores
+    * equal a single-index probe's. Returns (table, document_id, score)
+    * ordered by the shared 3-key cursor order, limit applied. */
   def rankedAcrossIndexes(spark: SparkSession,
                           branches: Seq[(String, String)],
                           query: String, limit: Int = 100,
@@ -417,164 +436,95 @@ object SearchIndex {
                           bestFields: Boolean = false,
                           after: Option[(Double, String, String)] = None)
       : DataFrame = {
-    import graft.serving.Search.round4
     require(branches.nonEmpty, "at least one index to probe")
-    val metas = branches.map { case (name, path) =>
-      (name, path, readMeta(path)) }
-    // each index analyzes the query with ITS OWN search analyzer —
-    // the same per-branch analysis the unioned probes performed
-    val termsOf = metas.map { case (name, _, meta) =>
-      name -> queryAnalyze(meta, query).distinct.toArray }.toMap
-    val postings = metas.map { case (name, path, meta) =>
-      indexTable(spark, tableDir(path, meta), "postings")
-        .filter(col("term").isin(termsOf(name).toSeq: _*))
-        .select(lit(name).as("table"),
-          col(meta.idCol).as("document_id"),
-          col("fid"), col("term"), col("tf"), col("dl"))
-    }.reduce(_.unionByName(_))
-    val fieldstats = metas.map { case (name, path, meta) =>
-      indexTable(spark, tableDir(path, meta), "fieldstats")
-        .select(lit(name).as("table"), col("fid"), col("n"),
-          (col("sumdl").cast("double") / col("n")).as("avgdl"))
-    }.reduce(_.unionByName(_))
-    val idf = metas.map { case (name, path, meta) =>
-      indexTable(spark, tableDir(path, meta), "termstats")
-        .filter(col("term").isin(termsOf(name).toSeq: _*))
-        .select(lit(name).as("table"), col("fid"), col("term"),
-          col("df_t"))
-    }.reduce(_.unionByName(_))
-      .join(broadcast(fieldstats), Seq("table", "fid"))
-      .select(col("table"), col("fid"), col("term"),
-        (if (bm25)
-          log(lit(1.0) + (col("n") - col("df_t") + 0.5) /
-            (col("df_t") + 0.5))
-        else ((col("n") + 1.0) / (col("df_t") + 1.0))).as("idf"),
-        col("avgdl"))
-    val perTerm: Column =
-      if (bm25)
-        col("idf") * ((col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) +
-            lit(0.75) * col("dl") / col("avgdl"))))
-      else col("tf") * col("idf")
-    // per-entity score expression — [[rankedScoresOf]]'s fieldScore
-    // verbatim with the table gate in the condition; selected by the
-    // constant group key
-    val scoreByEntity: Column = metas.foldLeft(
-        lit(0.0): Column) { case (acc, (name, _, meta)) =>
-      val terms = termsOf(name)
-      val parts = meta.fields.indices.map { i =>
-        terms.toSeq.map(t =>
-            coalesce(sum(when(col("table") === name &&
-              col("term") === t && col("fid") === i, perTerm)),
-              lit(0.0)))
-          .reduce(_ + _)
-      }
-      val combined =
-        if (parts.isEmpty) lit(0.0)
-        else if (parts.size == 1) parts.head
-        else if (bestFields) greatest(parts: _*)
-        else parts.reduce(_ + _)
-      when(col("table") === name, round4(combined)).otherwise(acc)
+    // each index analyzes the query with ITS OWN search analyzer
+    val probes = branches.map { case (name, path) =>
+      val meta = readMeta(path)
+      Probe(name, path, meta, queryAnalyze(meta, query).distinct,
+        meta.fields.indices)
     }
-    val scored = postings.join(broadcast(idf), Seq("table", "fid", "term"))
-      .groupBy(col("table"), col("document_id"))
-      .agg(scoreByEntity.as("score"))
-    // the shared 3-key cursor: each branch's inclusive flag folds into
-    // one predicate gated by the same table key
-    val afterPred = after.map { case (s, id, t) =>
-      metas.foldLeft(lit(false): Column) { case (acc, (name, _, _)) =>
-        when(col("table") === name,
-          graft.serving.Search.afterPredicate(Some((s, id: Any)),
-            col("document_id"), inclusive = name > t)).otherwise(acc)
-      }
-    }.getOrElse(lit(true))
-    scored.filter(afterPred)
+    val clause = Ranking.Clause("score", probes.map(p =>
+      Ranking.Leg(p.table, p.terms, p.fids.map((_, 1.0)))), bestFields)
+    Ranking.combine(probeInputs(spark, probes), bm25, Seq(clause))
+      .select(col("table"), col("id").as("document_id"), col("score"))
+      .filter(Search.afterPredicate3(after))
       .orderBy(col("score").desc, col("document_id"), col("table"))
       .limit(limit)
   }
 
   /** The (idCol, score) frame of [[ranked]] BEFORE pagination — one
     * row per doc matching ≥1 query term, carrying the rounded
-    * combined score. The index-probe twin of
-    * [[graft.serving.Search.rankedAll]]: the DSL translator joins
-    * per-clause probe frames instead of running corpus scans when the
-    * body's target has a write-time index (bit-identity pinned in
+    * combined score. The DSL translator joins per-clause probe frames
+    * instead of running corpus scans when the body's target has a
+    * write-time index (bit-identity with
+    * [[graft.serving.Search.rankedAllMulti]] pinned in
     * SearchIndexSpec). */
   def rankedScores(spark: SparkSession, path: String, query: String,
                    fields: Seq[String] = Nil,
                    bm25: Boolean = true, bestFields: Boolean = false,
-                   boosts: Map[String, Double] = Map.empty): DataFrame =
-    rankedScoresOf(spark, readMeta(path), path, query, fields, bm25,
-      bestFields, boosts)
+                   boosts: Map[String, Double] = Map.empty): DataFrame = {
+    val meta = readMeta(path)
+    val (useFields, fids) = resolveFields(meta, fields)
+    val terms = queryAnalyze(meta, query).distinct
+    val clause = Ranking.single("score", terms, fids.zip(useFields.map(f =>
+      boosts.getOrElse(f, 1.0))), bestFields)
+    Ranking.combine(probeInputs(spark,
+        Seq(Probe("", path, meta, terms, fids))), bm25, Seq(clause))
+      .select(col("id").as(meta.idCol), col("score"))
+  }
 
-  private def rankedScoresOf(spark: SparkSession, meta: Meta,
-                             path: String, query: String,
-                             fields: Seq[String],
-                             bm25: Boolean, bestFields: Boolean,
-                             boosts: Map[String, Double]): DataFrame = {
-    import graft.serving.Search.round4
-    val dir = tableDir(path, meta)
-    val idCol = meta.idCol
+  /** `fields` (empty = every indexed field, in index order) and their
+    * fids; a field the index lacks fails loud. */
+  private def resolveFields(meta: Meta,
+                            fields: Seq[String]): (Seq[String], Seq[Int]) = {
     val useFields = if (fields.isEmpty) meta.fields else fields
     val fidOf = meta.fields.zipWithIndex.toMap
     val missing = useFields.filterNot(fidOf.contains)
     require(missing.isEmpty, s"fields not in index: ${missing.mkString(", ")}")
-    val fids = useFields.map(fidOf)
-    val terms = queryAnalyze(meta, query).distinct.toArray
-    // postings probe: both predicates reach the parquet scan as pushed
-    // filters — the surviving rows are (query term × matching doc)-sized
-    val p = indexTable(spark, dir, "postings")
-      .filter(col("term").isin(terms.toSeq: _*) &&
-        col("fid").isin(fids: _*))
-    val stats = indexTable(spark, dir, "fieldstats")
-      .filter(col("fid").isin(fids: _*))
-      .select(col("fid"), col("n"),
-        // exact-integer sum ÷ count — the identical double the scan
-        // path's sum(tokenCount)/count(*) aggregate produces
-        (col("sumdl").cast("double") / col("n")).as("avgdl"))
-    // r19: avgdl RIDES the per-(fid, term) idf broadcast instead of a
-    // second fieldstats scan + third broadcast joined on fid alone —
-    // every (fid, term) of the postings probe has a termstats row (the
-    // stats derive from the postings at build time), and avgdl is
-    // constant per fid, so the single (fid, term) join attaches the
-    // identical doubles. 3 scans + 2 broadcasts per branch, was 4 + 3 —
-    // on a 7-entity wildcard that is 7 fewer scans and 7 fewer
-    // broadcast exchanges per request.
-    val idfCols =
-      (if (bm25)
-        log(lit(1.0) + (col("n") - col("df_t") + 0.5) /
-          (col("df_t") + 0.5)).as("idf")
-      else ((col("n") + 1.0) / (col("df_t") + 1.0)).as("idf")) ::
-        (if (bm25) List(col("avgdl")) else Nil)
-    val idf = indexTable(spark, dir, "termstats")
-      .filter(col("term").isin(terms.toSeq: _*) &&
-        col("fid").isin(fids: _*))
-      .join(broadcast(stats), Seq("fid"))
-      .select(col("fid") :: col("term") :: idfCols: _*)
-    val grouped = p
-    val perTerm: Column =
-      if (bm25)
-        col("idf") * ((col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) +
-            lit(0.75) * col("dl") / col("avgdl"))))
-      else col("tf") * col("idf")
-    // per-field score: fixed-order term sum of single-row conditionals —
-    // positionally identical to Search.rankedFields.fieldScore
-    def fieldScore(i: Int): Column = {
-      val raw = terms.toSeq.map(t =>
-          coalesce(sum(when(col("term") === t && col("fid") === fids(i),
-            perTerm)), lit(0.0)))
-        .reduce(_ + _)
-      boosts.get(useFields(i)).map(b => raw * b).getOrElse(raw)
+    (useFields, useFields.map(fidOf))
+  }
+
+  /** One index branch of a ranked probe: the entity tag, the index,
+    * its analyzed query terms and the fids to read. */
+  private final case class Probe(table: String, path: String, meta: Meta,
+                                 terms: Seq[String], fids: Seq[Int])
+
+  /** The POSTINGS producer of [[graft.serving.Ranking]]'s input
+    * contract: each branch's pruned postings rows are the tf rows, and
+    * its termstats rows joined with fieldstats (avgdl = the
+    * exact-integer sumdl ÷ n, the identical double the scan path's
+    * aggregate produces) are the stats — every value the integer the
+    * scan producer would count, read instead of recomputed. Both
+    * predicates reach the parquet scans as pushed filters, so the
+    * surviving rows are (query term × matching doc)-sized; no corpus
+    * scan. */
+  private def probeInputs(spark: SparkSession,
+                          probes: Seq[Probe]): Ranking.Inputs = {
+    // the `table` tag only when several entities (Ranking.tagged)
+    val multi = probes.map(_.table).distinct.size > 1
+    def tag(p: Probe): Seq[Column] =
+      if (multi) Seq(lit(p.table).as("table")) else Nil
+    def read(p: Probe, sub: String): DataFrame = {
+      val t = indexTable(spark, tableDir(p.path, p.meta), sub)
+      if (p.fids == p.meta.fields.indices) t
+      else t.filter(col("fid").isin(p.fids: _*))
     }
-    val parts = useFields.indices.map(fieldScore)
-    val combined =
-      if (parts.size == 1) parts.head
-      else if (bestFields) greatest(parts: _*)
-      else parts.reduce(_ + _)
-    grouped.join(broadcast(idf), Seq("fid", "term"))
-      .groupBy(col(idCol))
-      .agg(round4(combined).as("score"))
+    def termRows(p: Probe, sub: String): DataFrame =
+      read(p, sub).filter(col("term").isin(p.terms: _*))
+    val tf = probes.map(p => termRows(p, "postings")
+        .select(tag(p) ++ Seq(col(p.meta.idCol).as("id"), col("fid"),
+          col("dl"), col("term"), col("tf")): _*))
+      .reduce(_.unionByName(_))
+    val fieldstats = probes.map(p => read(p, "fieldstats")
+        .select(tag(p) ++ Seq(col("fid"), col("n"),
+          (col("sumdl").cast("double") / col("n")).as("avgdl")): _*))
+      .reduce(_.unionByName(_))
+    val stats = probes.map(p => termRows(p, "termstats")
+        .select(tag(p) ++ Seq(col("fid"), col("term"), col("df_t")): _*))
+      .reduce(_.unionByName(_))
+      .join(broadcast(fieldstats),
+        (if (multi) Seq("table") else Nil) :+ "fid")
+    Ranking.Inputs(tf, stats)
   }
 
   /** PHRASE probe (ES `multi_match` `type: "phrase"` over the index):
@@ -604,11 +554,7 @@ object SearchIndex {
     val meta = readMeta(path)
     val dir = tableDir(path, meta)
     val idCol = meta.idCol
-    val useFields = if (fields.isEmpty) meta.fields else fields
-    val fidOf = meta.fields.zipWithIndex.toMap
-    val missing = useFields.filterNot(fidOf.contains)
-    require(missing.isEmpty, s"fields not in index: ${missing.mkString(", ")}")
-    val fids = useFields.map(fidOf)
+    val (useFields, fids) = resolveFields(meta, fields)
     val posTerms = queryPosTerms(meta, phraseQuery)
     // an all-stopword phrase against an english index (or a blank one
     // against whitespace/keyword) analyzes to zero terms: no hits,
@@ -730,7 +676,7 @@ object SearchIndex {
     * idf is the PHRASE-ORDERED sum of the terms' idfs (one per
     * position, like Lucene's termStatistics collection). Fields
     * combine as a fixed-order sum with ONE final rounding (the
-    * rankedFields convention); a single-field probe is bit-identical
+    * ranked combiner's convention); a single-field probe is bit-identical
     * to the scan path's phrase scoring — one oracle, two plans. Same
     * pruned-postings IO shape as [[phrase]]: no corpus scan. */
   def phraseRanked(spark: SparkSession, path: String, phraseQuery: String,
@@ -744,11 +690,7 @@ object SearchIndex {
     val meta = readMeta(path)
     val dir = tableDir(path, meta)
     val idCol = meta.idCol
-    val useFields = if (fields.isEmpty) meta.fields else fields
-    val fidOf = meta.fields.zipWithIndex.toMap
-    val missing = useFields.filterNot(fidOf.contains)
-    require(missing.isEmpty, s"fields not in index: ${missing.mkString(", ")}")
-    val fids = useFields.map(fidOf)
+    val (useFields, fids) = resolveFields(meta, fields)
     // against a STANDARD index, `analyzer` is the QUERY-side knob
     // (english stems matched as literal standard terms with
     // stop-position gaps, exactly the scan path's phraseLeg); a
@@ -816,12 +758,10 @@ object SearchIndex {
     // scan path's Ctx.phraseBm25Score evaluates, over the identical
     // integers (pf, dl, df_t, n, sumdl)
     def dfOf(t: String): Column = element_at(col("dfm"), lit(t))
-    val idfSum = terms.map(t =>
-      log(lit(1.0) + (col("n") - dfOf(t) + 0.5) / (dfOf(t) + 0.5)))
-      .reduce(_ + _)
-    val fscore = idfSum * ((col("_pf") * 2.2) /
-      (col("_pf") + lit(1.2) * (lit(0.25) +
-        lit(0.75) * col("dl") / col("avgdl"))))
+    val idfSum = terms.map(t => graft.serving.Ranking.bm25Idf(col("n"),
+      dfOf(t))).reduce(_ + _)
+    val fscore = idfSum * graft.serving.Ranking.bm25Saturation(col("_pf"),
+      col("dl"), col("avgdl"))
     val withScore = perField
       .join(broadcast(stats), Seq("fid"))
       .join(broadcast(dfm), Seq("fid"))
@@ -863,12 +803,7 @@ object SearchIndex {
     val meta = readMeta(path)
     val dir = tableDir(path, meta)
     val idCol = meta.idCol
-    val useFields = if (fields.isEmpty) meta.fields else fields
-    val fidOf = meta.fields.zipWithIndex.toMap
-    val missing = useFields.filterNot(fidOf.contains)
-    require(missing.isEmpty,
-      s"fields not in index: ${missing.mkString(", ")}")
-    val fids = useFields.map(fidOf)
+    val (useFields, fids) = resolveFields(meta, fields)
     val allTerms = slots.flatten.distinct.map(_.toLowerCase)
     val lowSlots = slots.map(_.map(_.toLowerCase).distinct)
     val cand = prunedPostings(spark, dir, idCol, fids, allTerms)
@@ -926,11 +861,7 @@ object SearchIndex {
     val meta = readMeta(path)
     val dir = tableDir(path, meta)
     val idCol = meta.idCol
-    val useFields = if (fields.isEmpty) meta.fields else fields
-    val fidOf = meta.fields.zipWithIndex.toMap
-    val missing = useFields.filterNot(fidOf.contains)
-    require(missing.isEmpty, s"fields not in index: ${missing.mkString(", ")}")
-    val fids = useFields.map(fidOf)
+    val (useFields, fids) = resolveFields(meta, fields)
     val terms = queryAnalyze(meta, query).distinct
     require(terms.nonEmpty, "empty query")
     val need = math.max(1, math.min(minMatch, terms.size))
@@ -1013,11 +944,7 @@ object SearchIndex {
     val meta = readMeta(path)
     val dir = tableDir(path, meta)
     val idCol = meta.idCol
-    val useFields = if (fields.isEmpty) meta.fields else fields
-    val fidOf = meta.fields.zipWithIndex.toMap
-    val missing = useFields.filterNot(fidOf.contains)
-    require(missing.isEmpty, s"fields not in index: ${missing.mkString(", ")}")
-    val fids = useFields.map(fidOf)
+    val (useFields, fids) = resolveFields(meta, fields)
     val terms =
       graft.functions.TextFunctions.analyzeText(query).distinct
     require(terms.nonEmpty, "empty query")
@@ -1441,6 +1368,7 @@ object SearchIndex {
     * finished. An object-store deployment defers further, behind
     * reader-lease expiry. */
   private def gcGenerations(path: String, keep: Int): Unit = {
+    evictMemo(path, g => g == keep || g == keep - 1)
     val root = new java.io.File(path)
     Option(root.listFiles()).getOrElse(Array.empty).foreach { f =>
       if (f.isDirectory && f.getName.matches("g\\d+") &&

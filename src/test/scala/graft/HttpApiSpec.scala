@@ -1245,6 +1245,24 @@ class HttpApiSpec extends SparkSpec
     assert(results.forall(_.body().startsWith("""{"hits"""")))
   }
 
+  test("a quote in an entity path stays inside the 404 body's JSON " +
+    "string") {
+    val r = post("/no%22such", "{}")
+    assert(r.statusCode() == 404)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(r.body()).get("error").asText ==
+        "unknown entity 'no\"such'", r.body())
+  }
+
+  test("a quote in an index name stays inside the 404 body's JSON " +
+    "string") {
+    val r = post("/search/count", """{"index": "no\"such"}""")
+    assert(r.statusCode() == 404)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(r.body()).get("error").asText ==
+        "unknown index 'no\"such'", r.body())
+  }
+
   test("unknown entity and unknown route are 404; bad body is 400") {
     assert(post("/nosuch", "{}").statusCode() == 404)
     assert(get("/nosuch").statusCode() == 404)

@@ -70,6 +70,21 @@ class SearchIndexSpec extends SparkSpec {
       assert(p == s, s"case $i: indexed != scan\nscan:  $s\nprobe: $p")
       assert(s.nonEmpty, s"case $i: degenerate (empty) comparison")
     }
+    // inputs that score nothing — a query analyzing to zero terms and
+    // a term absent from the corpus: both paths answer empty, alike
+    val empty: Seq[(DataFrame, DataFrame)] = for {
+      q <- Seq("!!! ...", "zebra")
+      bm25 <- Seq(true, false)
+      fields <- Seq(Seq("text"), Seq("text", "source"))
+    } yield (if (bm25) Search.bm25Fields(docs, q, fields, "doc_id")
+             else Search.tfidfFields(docs, q, fields, "doc_id")) ->
+      SearchIndex.ranked(spark, path, q, fields, bm25 = bm25)
+    empty.zipWithIndex.foreach { case ((scan, probe), i) =>
+      val s = scan.collect().map(_.toString).toSeq
+      val p = probe.collect().map(_.toString).toSeq
+      assert(p == s, s"empty case $i: indexed != scan\nscan:  $s\nprobe: $p")
+      assert(s.isEmpty, s"empty case $i: scored $s")
+    }
   }
 
   test("probe plan reads ONLY the index (term filter pushed to the " +
@@ -1094,6 +1109,61 @@ class SearchIndexSpec extends SparkSpec {
     assert(probePage == scanPage,
       s"cursor continuation diverged\n$scanPage\nvs\n$probePage")
     assert(scanPage.size == 10)
+    // tf·idf, best_fields and an entity subset: the same per-entity
+    // legs on both paths
+    for ((bm25, best, only) <- Seq((false, false, Nil),
+        (true, true, Nil), (true, false, Seq("customer", "part")))) {
+      val s = Search.acrossIndexesRanked(spark, dir, runTs,
+        "small error household", bestFields = best, bm25 = bm25,
+        only = only).collect().map(_.toString).toSeq
+      val p = Search.acrossIndexesRankedIndexed(spark, root,
+        "small error household", bestFields = best, bm25 = bm25,
+        only = only).collect().map(_.toString).toSeq
+      assert(p == s, s"bm25=$bm25 best=$best only=$only: indexed != " +
+        s"scan\n${s.take(5)}\nvs\n${p.take(5)}")
+      assert(s.nonEmpty)
+    }
+  }
+
+  test("a rebuild at a deleted index's path probes the NEW documents, " +
+    "not the memoized listing of the deleted generation") {
+    val path = tmp("graft-idx-rebuild-")
+    SearchIndex.build(docs, Seq("text", "source"), "doc_id", path)
+    assert(sortedRows(SearchIndex.ranked(spark, path, "window",
+      Seq("text"))).nonEmpty)
+    // deleted out of band: the rebuild restarts at g0, the same
+    // generation directory the first index's probe memoized
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles.foreach(rm)
+      f.delete(); ()
+    }
+    rm(new java.io.File(path))
+    SearchIndex.build(Seq((7L, "window window", "src7"),
+        (8L, "another window", "src8")).toDF("doc_id", "text", "source"),
+      Seq("text", "source"), "doc_id", path)
+    assert(SearchIndex.readMeta(path).gen == 0)
+    val ids = SearchIndex.ranked(spark, path, "window", Seq("text"))
+      .collect().map(_.getLong(0)).toSet
+    assert(ids == Set(7L, 8L))
+  }
+
+  test("the table memo holds only generations still on disk") {
+    val path = tmp("graft-idx-memo-")
+    SearchIndex.build(docs, Seq("text", "source"), "doc_id", path)
+    def probe(): Unit = {
+      SearchIndex.ranked(spark, path, "window", Seq("text")).collect(); ()
+    }
+    for (i <- 1 to 4) {
+      probe()
+      SearchIndex.upsert(Seq((100L + i, s"window $i", "src"))
+        .toDF("doc_id", "text", "source"), path)
+    }
+    probe()
+    val onDisk = new java.io.File(path).listFiles.map(_.getName)
+      .collect { case g if g.matches("g\\d+") => g.drop(1).toInt }.toSet
+    val memo = SearchIndex.memoizedGenerations(path)
+    assert(memo.nonEmpty && memo.subsetOf(onDisk),
+      s"memoized generations $memo, on disk $onDisk")
   }
 
   test("token-grammar versioning: a v3 french meta is RETIRED " +

@@ -4,9 +4,14 @@ dumps against the DuckDB oracles in oracle_sql.json and diff.
 
 Usage: python3 tools/check.py <sfDir> <outDir>
 (outDir = what graft.Verify wrote). Driver-side tooling only — the shipped
-Scala library does not depend on this."""
+Scala library does not depend on this.
+
+       python3 tools/check.py diff <dumpA> <dumpB>
+compares two graft.Verify dumps query by query, row for row after
+sorting, with NO float rounding (a last-ulp change is a difference) —
+the identity proof for a refactor that must not change any result.
+Exits 1 on any difference or on a query present in only one dump."""
 import sys, json, glob, os
-import duckdb
 import pandas as pd
 import numpy as np
 
@@ -32,6 +37,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main(sf_dir: str, out_dir: str) -> int:
+    import duckdb
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -79,6 +85,55 @@ def main(sf_dir: str, out_dir: str) -> int:
     return 1 if n_fail else 0
 
 
+def exact(v) -> str:
+    """A value's exact, order-stable spelling: repr keeps every float
+    bit (NaN and -0.0 included); nested lists/structs/maps recurse."""
+    if isinstance(v, dict):
+        return "{" + ", ".join(f"{k!r}: {exact(x)}" for k, x in v.items()) + "}"
+    if isinstance(v, (list, tuple)):
+        return "[" + ", ".join(exact(x) for x in v) + "]"
+    return repr(v)
+
+
+def dump_rows(query_dir: str):
+    """(column names and types, sorted exact rows) of one Verify dump."""
+    import pyarrow.parquet as pq
+    t = pq.read_table(query_dir)
+    schema = [(f.name, str(f.type)) for f in t.schema]
+    rows = sorted(tuple(exact(v) for v in r.values()) for r in t.to_pylist())
+    return schema, rows
+
+
+def diff(dump_a: str, dump_b: str) -> int:
+    def queries(d):
+        return {os.path.basename(os.path.dirname(f))
+                for f in glob.glob(f"{d}/*/*.parquet")}
+    qa, qb = queries(dump_a), queries(dump_b)
+    n_same = n_diff = 0
+    for name in sorted(qa | qb):
+        if name not in qa or name not in qb:
+            print(f"DIFF {name}: only in {dump_a if name in qa else dump_b}")
+            n_diff += 1
+            continue
+        (sa, ra), (sb, rb) = (dump_rows(f"{dump_a}/{name}"),
+                              dump_rows(f"{dump_b}/{name}"))
+        if sa != sb:
+            print(f"DIFF {name}: schema {sa} != {sb}")
+            n_diff += 1
+        elif ra != rb:
+            bad = [i for i, (x, y) in enumerate(zip(ra, rb)) if x != y]
+            print(f"DIFF {name}: rows {len(ra)} vs {len(rb)}, "
+                  f"{len(bad)} sorted rows differ")
+            if bad:
+                print(f"  A: {ra[bad[0]]}\n  B: {rb[bad[0]]}")
+            n_diff += 1
+        else:
+            n_same += 1
+    print(f"== {n_diff} differ, {n_same} identical, of {n_same + n_diff} "
+          "queries ==")
+    return 1 if n_diff else 0
+
+
 def bench_fallback(repo_dir: str = ".") -> int:
     """Recover the bench JSON line when the stdout tail was truncated
     (the round-4 `parsed: null` failure mode): graft.Bench always writes
@@ -96,4 +151,6 @@ def bench_fallback(repo_dir: str = ".") -> int:
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "bench":
         sys.exit(bench_fallback(sys.argv[2] if len(sys.argv) > 2 else "."))
+    if len(sys.argv) > 1 and sys.argv[1] == "diff":
+        sys.exit(diff(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
