@@ -22,6 +22,20 @@ object TextFunctions {
   def rebase(pt: Seq[(String, Int)]): Seq[(String, Int)] =
     pt.map { case (t, p) => (t, p - pt.headOption.fold(0)(_._2)) }
 
+  /** The (stem, position) terms of a LANGUAGE chain ("english",
+    * "french", "german", "spanish") — the stop filter consumes
+    * positions, so phrases carry stop gaps — [[rebase]]d; None for
+    * any other analyzer name. */
+  def languagePositions(analyzer: String,
+                        text: String): Option[Seq[(String, Int)]] =
+    (analyzer match {
+      case "english" => Some(EnglishAnalysis.analyzeWithPositions(text))
+      case "french"  => Some(FrenchAnalysis.analyzeWithPositions(text))
+      case "german"  => Some(GermanAnalysis.analyzeWithPositions(text))
+      case "spanish" => Some(SpanishAnalysis.analyzeWithPositions(text))
+      case _         => None
+    }).map(rebase)
+
   /** Whitespace tokenization, empty tokens dropped (split on ^\s or a
     * leading separator produces "") — the PIPELINE layer's tokenizer
     * (shingles, token budgeting, dedup units), where whitespace words

@@ -1383,7 +1383,7 @@ object ParityQueries {
     // french match_phrase: the stop filter consumes positions like
     // english — "les groupes de la sorte" analyzes to (group@0,
     // sort@3), matched at exact offsets in the standard token stream
-    // (Search.gappedPhraseCount), phrase-BM25 scored.
+    // (Positional.phrase), phrase-BM25 scored.
     "q7_esdsl_phrase_french" -> ((s, dir) => {
       val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
         """{"query": {"match_phrase": {"text": {
@@ -1640,7 +1640,7 @@ object ParityQueries {
 
     // english phrase + SLOP (round 14): each gapped stem may drift
     // ±slop standard positions from its stop-gap offset
-    // (Search.gappedSlopCount) — "sorted the windows" with slop 1
+    // (Positional.phrase) — "sorted the windows" with slop 1
     // also matches "sort windows" (a document omitting the stopword
     // places "window" one position EARLY, which costs slop) and
     // "sorted the big windows" (one extra token pushes it late).
@@ -1678,7 +1678,7 @@ object ParityQueries {
     // batch@2, order@3); with slop 1 the whole tail may shift one
     // position together, but a stem pulled early AND a stem pushed
     // late together cost 2 and must NOT match
-    // (Search.gappedSlopCount; the >=3-stem budget is what round 14's
+    // (Positional.phrase; the >=3-stem budget is what round 14's
     // per-term window got wrong).
     "q7_esdsl_phrase_english_budget" -> ((s, dir) => {
       val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
@@ -1738,7 +1738,7 @@ object ParityQueries {
     // analyzes to (window@0, sort@2) — the reverse of the corpus's
     // "sort ... window" family, so every hit is an out-of-order
     // alignment: "sort window" costs span 3, "sorted the windows"
-    // span 4; slop 4 admits both (Search.gappedSlopCount's
+    // span 4; slop 4 admits both (Positional.phrase's
     // order-free walk over stop-gap offsets).
     "q7_esdsl_phrase_english_transposed" -> ((s, dir) => {
       val body = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
@@ -4328,7 +4328,7 @@ object ParityQueries {
     * positions via unnest + generate_subscripts, a windowed self-join
     * for "t2 within `slop` of its expected slot a.pos + 1 on EITHER
     * side" (|adj_t2 - adj_t1| <= slop — Lucene's sloppy matchLength
-    * with transposed alignments, Search.slopCount's contract; the
+    * with transposed alignments, Positional.phrase's contract; the
     * out-of-order side only opens from slop >= 2 since a transposition
     * costs 2), score = count of DISTINCT head positions. Shared by
     * the scan path, the positional-postings probe, and (recast with a
@@ -6718,7 +6718,7 @@ object ParityQueries {
        "WHERE doc_count > actives * 2 ORDER BY key"),
 
     // span family: positions re-derived by unnest + subscripts; the
-    // window arithmetic mirrors Search.spanNearCount/spanPairCount
+    // window arithmetic mirrors Positional.near/pair
     "q7_esdsl_span_near" -> spanNearOracleSql,
     // the postings-probe twin shares the oracle verbatim
     "q7_esdsl_span_near_indexed" -> spanNearOracleSql,
@@ -6757,7 +6757,7 @@ object ParityQueries {
 
     // span_containing: big head positions [the → window|batch, in
     // order, slop 2] whose span covers a 'data' position. The three-way
-    // position join mirrors Search.spanContainCount's exists-nesting
+    // position join mirrors Positional.containing's exists-nesting
     // (conjunctive constraints — quantifier order is immaterial).
     "q7_esdsl_span_containing" -> (spanPosCte +
       "m AS (SELECT a.doc_id, count(DISTINCT a.pos) AS score " +

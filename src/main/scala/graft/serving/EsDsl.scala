@@ -3214,6 +3214,34 @@ object EsDsl {
     size(filter(toks, x => m(x))).cast("int")
   }
 
+  /** The positions in `f` of a span slot's matcher — the scan
+    * producer of [[Positional]]. */
+  private def spanPositions(f: String, m: Column => Column): Column =
+    Positional.positions(
+      graft.functions.TextFunctions.analyzerTokens(col(f)), m)
+
+  /** ES `match_phrase_prefix`'s count in `f`: [[Positional.phrase]]
+    * with dense offsets and the LAST slot matched by PREFIX — any
+    * token starting with the last "term", the still-being-typed
+    * prefix (Lucene's MultiPhrasePrefixQuery rides the same
+    * SloppyPhraseMatcher). `lastExpansion`, when present, caps the
+    * final slot to membership in that token set (ES `max_expansions`;
+    * the caller derives the first-N expansion). Distinctness is
+    * all-pairs: the prefix slot can land on an exact slot's token.
+    * One term is a prefix-token count. */
+  private def prefixPhraseCount(f: String, terms: Seq[String], slop: Int,
+                                lastExpansion: Option[Seq[String]])
+      : Column = {
+    val last: Column => Column = lastExpansion match {
+      case Some(set) =>
+        if (set.isEmpty) _ => lit(false) else _.isInCollection(set)
+      case None => _.startsWith(terms.last)
+    }
+    val slots = terms.init.map(t => (x: Column) => x === lit(t)) :+ last
+    Positional.count(Positional.phrase(slots.map(spanPositions(f, _)),
+      terms.indices, slop, (_, _) => true))
+  }
+
   /** Apply a clause-level boost — ES multiplies the clause's score
     * (match set unchanged); 1.0 keeps the exact unboosted column. */
   private def boosted(c: Clause, boost: Double): Clause =
@@ -3549,7 +3577,7 @@ object EsDsl {
       val counts: Seq[Column] =
         terms.init.map(t =>
           Search.substrCount(Search.tokenNorm(col(f)), s" $t ")) :+
-        Search.phrasePrefixCount(col(f), Seq(terms.last), 0)
+        prefixPhraseCount(f, Seq(terms.last), 0, None)
       val preds = counts.map(_ > 0)
       val pred =
         if (operator == "and") preds.reduce(_ && _) else preds.reduce(_ || _)
@@ -3580,7 +3608,7 @@ object EsDsl {
       if (terms.isEmpty) bad("empty match_phrase_prefix query")
       val expansion = maxExp.map(n =>
         ctx.prefixExpansion(Seq(f), terms.last, n))
-      val cnt = Search.phrasePrefixCount(col(f), terms, slop, expansion)
+      val cnt = prefixPhraseCount(f, terms, slop, expansion)
       boosted(Clause(cnt > 0, cnt.cast("double")), mppBoost)
 
     case ("fuzzy", b) =>
@@ -3613,7 +3641,7 @@ object EsDsl {
     // forward these verbatim, src/search_api.py:38-46). Leaves are
     // span_term / span_or-of-span_terms; span_near composes leaves
     // with slop and order over the SAME positional token scan the
-    // phrase family uses (Search.spanNearCount — HOFs over per-slot
+    // phrase family uses (the Positional walkers — HOFs over per-slot
     // position lists, no explode). Scored by span frequency (the
     // documented occurrence-count families). span_multi lifts
     // prefix/wildcard/regexp/fuzzy patterns into span position;
@@ -3660,20 +3688,15 @@ object EsDsl {
         if (!n.isBoolean) bad("span_near in_order must be boolean")
         n.asBoolean
       }
-      val oneSrc = leaves.map(_._2).distinct.size == 1
-      val f = leaves.head._2
+      // each slot's positions come from its own SOURCE field and
+      // compare in ONE position space (Lucene's overlay semantics for
+      // analyzer-compatible masked fields)
+      val slots = leaves.map(l => spanPositions(l._2, l._3))
       val cnt =
-        if (leaves.size == 1) spanLeafCount(f, leaves.head._3)
-        else if (inOrder && oneSrc)
-          Search.spanNearCount(col(f), leaves.map(_._3), slop)
-        else if (inOrder)
-          Search.spanNearCountFields(
-            leaves.map(l => (col(l._2), l._3)), slop)
-        else if (leaves.size == 2 && oneSrc)
-          Search.spanPairCount(col(f), leaves(0)._3, leaves(1)._3, slop)
+        if (leaves.size == 1) spanLeafCount(leaves.head._2, leaves.head._3)
+        else if (inOrder) Positional.count(Positional.near(slots, slop))
         else if (leaves.size == 2)
-          Search.spanPairCountFields(col(leaves(0)._2), leaves(0)._3,
-            col(leaves(1)._2), leaves(1)._3, slop)
+          Positional.count(Positional.pair(slots(0), slots(1), slop))
         else bad("unordered span_near supports two clauses (in_order " +
           "true composes any number)")
       boosted(Clause(cnt > 0, cnt.cast("double")), snBoost)
@@ -3718,12 +3741,8 @@ object EsDsl {
       val pre = dist.orElse(intWin("pre")).getOrElse(0)
       val post = dist.orElse(intWin("post")).getOrElse(0)
       if (pre < 0 || post < 0) bad("span_not pre/post must be >= 0")
-      val toks = graft.functions.TextFunctions.analyzerTokens(col(fi))
-      def posOf(m: Column => Column): Column =
-        filter(transform(toks, (x, i) =>
-          when(m(x), i).otherwise(lit(-1))), p => p >= lit(0))
-      val cnt = size(filter(posOf(mi), p =>
-        !exists(posOf(me), q =>
+      val cnt = size(filter(spanPositions(fi, mi), p =>
+        !exists(spanPositions(fi, me), q =>
           q >= p - lit(pre) && q <= p + lit(post)))).cast("int")
       boosted(Clause(cnt > 0, cnt.cast("double")), boost)
 
@@ -3752,7 +3771,7 @@ object EsDsl {
       // in-order span_near (its spans have enumerable ends) or a
       // width-1 leaf; `little` is a leaf (width 1, so Lucene's
       // start/end inequalities collapse to position-in-interval —
-      // Search.spanContainCount). containing scores big-span
+      // Positional.containing). containing scores big-span
       // frequency, within scores little-span frequency (Lucene's
       // contract: each query returns ITS side's spans).
       val boost = clauseBoost(kind, b, Set("big", "little"))
@@ -3799,8 +3818,9 @@ object EsDsl {
       if (lf != bigField)
         bad(s"$kind big/little must target one field " +
           s"(got $bigField, $lf)")
-      val cnt = Search.spanContainCount(col(bigField), slots, slop, lm,
-        within = kind == "span_within")
+      val cnt = Positional.count(Positional.containing(
+        slots.map(spanPositions(bigField, _)), slop,
+        spanPositions(bigField, lm), within = kind == "span_within"))
       boosted(Clause(cnt > 0, cnt.cast("double")), boost)
 
     // ── parent/child family (ES join field, relationally: the
@@ -3933,6 +3953,24 @@ object EsDsl {
           if (!n.isBoolean) bad("ordered must be boolean")
           n.asBoolean
         }
+      // a rule over single-token slots: ordered = the ordered near
+      // walk (gap sum <= max_gaps); unlimited-gap unordered = every
+      // slot present, frequency = the head slot's occurrences
+      // (documented convention); bounded-gap unordered = a pair
+      def slotsCount(slots: Seq[Column => Column], counts: Seq[Column],
+                     maxGaps: Int, ordered: Boolean,
+                     tooMany: => Nothing): Column =
+        if (slots.size == 1) counts.head
+        else if (ordered)
+          Positional.count(Positional.near(slots.map(spanPositions(f, _)),
+            if (maxGaps < 0) Int.MaxValue else maxGaps))
+        else if (maxGaps < 0)
+          when(counts.map(_ > 0).reduce(_ && _), counts.head)
+            .otherwise(lit(0))
+        else if (slots.size == 2)
+          Positional.count(Positional.pair(spanPositions(f, slots(0)),
+            spanPositions(f, slots(1)), maxGaps))
+        else tooMany
       def ruleCount(rule: JsonNode): Column = {
         val (kind, body) = unwrap(rule)
         kind match {
@@ -3949,25 +3987,11 @@ object EsDsl {
             if (terms.isEmpty) bad("empty intervals match query")
             val maxGaps = gapKnob(body)
             val ordered = orderedKnob(body)
-            val slots: Seq[Column => Column] =
-              terms.map(t => (x: Column) => x === lit(t))
-            if (terms.size == 1)
-              Search.substrCount(Search.tokenNorm(col(f)),
-                s" ${terms.head} ")
-            else if (ordered)
-              Search.spanNearCount(col(f), slots,
-                if (maxGaps < 0) 1 << 24 else maxGaps)
-            else if (maxGaps < 0) {
-              // unlimited unordered = all terms present; frequency =
-              // the head term's occurrences (documented convention)
-              val counts = terms.map(t => Search.substrCount(
-                Search.tokenNorm(col(f)), s" $t "))
-              when(counts.map(_ > 0).reduce(_ && _), counts.head)
-                .otherwise(lit(0))
-            } else if (terms.size == 2)
-              Search.spanPairCount(col(f), slots(0), slots(1), maxGaps)
-            else bad("unordered intervals match with max_gaps " +
-              "supports two terms (ordered composes any number)")
+            slotsCount(terms.map(t => (x: Column) => x === lit(t)),
+              terms.map(t => Search.substrCount(Search.tokenNorm(col(f)),
+                s" $t ")), maxGaps, ordered,
+              bad("unordered intervals match with max_gaps " +
+                "supports two terms (ordered composes any number)"))
           case "any_of" =>
             val unknown = keysOf(body).filterNot(Set("intervals"))
             if (unknown.nonEmpty)
@@ -4039,20 +4063,9 @@ object EsDsl {
             val slots = (0 until ivs.size).map(i => slotOf(ivs.get(i)))
             val maxGaps = gapKnob(body)
             val ordered = orderedKnob(body)
-            def slotCnt(m: Column => Column): Column =
-              spanLeafCount(f, m)
-            if (slots.size == 1) slotCnt(slots.head)
-            else if (ordered)
-              Search.spanNearCount(col(f), slots,
-                if (maxGaps < 0) 1 << 24 else maxGaps)
-            else if (maxGaps < 0) {
-              val counts = slots.map(slotCnt)
-              when(counts.map(_ > 0).reduce(_ && _), counts.head)
-                .otherwise(lit(0))
-            } else if (slots.size == 2)
-              Search.spanPairCount(col(f), slots(0), slots(1), maxGaps)
-            else bad("unordered all_of with max_gaps supports two " +
-              "sub-intervals (ordered composes any number)")
+            slotsCount(slots, slots.map(spanLeafCount(f, _)), maxGaps,
+              ordered, bad("unordered all_of with max_gaps supports two " +
+                "sub-intervals (ordered composes any number)"))
           case other => bad(s"unsupported intervals rule '$other'")
         }
       }
@@ -4398,8 +4411,7 @@ object EsDsl {
         val legs = fields.map { case (f, fb) =>
           val expansion = maxExp.map(n =>
             ctx.prefixExpansion(Seq(f), terms.last, n))
-          val cnt = Search.phrasePrefixCount(col(f), terms, slop,
-            expansion)
+          val cnt = prefixPhraseCount(f, terms, slop, expansion)
           (cnt, if (fb == 1.0) cnt.cast("double")
                 else cnt.cast("double") * fb)
         }
@@ -4432,7 +4444,7 @@ object EsDsl {
           val counts: Seq[Column] =
             terms.init.map(t =>
               Search.substrCount(Search.tokenNorm(col(f)), s" $t ")) :+
-            Search.phrasePrefixCount(col(f), Seq(terms.last), 0)
+            prefixPhraseCount(f, Seq(terms.last), 0, None)
           val preds = counts.map(_ > 0)
           val pred = if (operator == "and") preds.reduce(_ && _)
             else preds.reduce(_ || _)
@@ -4576,7 +4588,7 @@ object EsDsl {
               "atoms only — prefix atoms expand over the standard " +
               "chain (drop the * or the analyzer)")
           val cnt = overFields(f =>
-            Search.phrasePrefixCount(col(f), Seq(p), 0))
+            prefixPhraseCount(f, Seq(p), 0, None))
           Clause(cnt > 0, cnt.cast("double"))
         case SimpleQueryString.Fuzzy(t, e) =>
           if (sqsAnalyzer != "standard")
@@ -4595,7 +4607,8 @@ object EsDsl {
           val cnt =
             if (slop == 0) overFields(f => Search.substrCount(
               Search.tokenNorm(col(f)), terms.mkString(" ", "  ", " ")))
-            else overFields(f => Search.slopCount(col(f), terms, slop))
+            else overFields(f =>
+              Positional.termPhrase(col(f), terms.zipWithIndex, slop))
           Clause(cnt > 0, cnt.cast("double"))
         case SimpleQueryString.And(xs) =>
           val cs = xs.map(compile)
@@ -5354,14 +5367,15 @@ object EsDsl {
         val cnt =
           if (slop == 0) overFields(f)(fn => Search.substrCount(
             Search.tokenNorm(col(fn)), terms.mkString(" ", "  ", " ")))
-          else overFields(f)(fn => Search.slopCount(col(fn), terms, slop))
+          else overFields(f)(fn =>
+            Positional.termPhrase(col(fn), terms.zipWithIndex, slop))
         Clause(cnt > 0, cnt.cast("double"))
       case Prefix(f, p) =>
         if (analyzer != "standard")
           bad("analyzer on query_string applies to term atoms only " +
             "— prefix atoms expand over the standard chain")
         val cnt = overFields(f)(fn =>
-          Search.phrasePrefixCount(col(fn), Seq(p), 0))
+          prefixPhraseCount(fn, Seq(p), 0, None))
         Clause(cnt > 0, cnt.cast("double"))
       case Wild(f, pat) =>
         if (analyzer != "standard")
@@ -7901,11 +7915,11 @@ object EsDsl {
     * chain additionally keeps POSITION GAPS where stopwords stood
     * (Lucene's position increments) and the gapped stems match exact
     * offsets in the standard token stream
-    * ([[graft.serving.Search.gappedPhraseCount]]); english + slop
+    * ([[graft.serving.Positional.phrase]] at slop 0); english + slop
     * spends ONE shared slop budget across the phrase — the adjusted
     * positions `p_k - offset_k` may span at most `slop`, Lucene's
     * sloppy matchLength with transposed alignments
-    * ([[graft.serving.Search.gappedSlopCount]]). "whitespace" and
+    * ([[graft.serving.Positional.phrase]]). "whitespace" and
     * "keyword" are query-side term-list rewrites too (see
     * [[queryTerms]]). Returns the selected analyzer name. Other
     * clause kinds keep the standard-only [[analyzerKnob]]; the full
@@ -7950,15 +7964,8 @@ object EsDsl {
     * with internal spaces. */
   private[graft] def queryTerms(text: String,
                                 analyzer: String): Seq[String] =
-    analyzer match {
-      case "english" =>
-        graft.functions.EnglishAnalysis.analyze(text).distinct.toSeq
-      case "french" =>
-        graft.functions.FrenchAnalysis.analyze(text).distinct.toSeq
-      case "german" =>
-        graft.functions.GermanAnalysis.analyze(text).distinct.toSeq
-      case "spanish" =>
-        graft.functions.SpanishAnalysis.analyze(text).distinct.toSeq
+    graft.functions.TextFunctions.languagePositions(analyzer, text)
+      .map(_.map(_._1).distinct).getOrElse(analyzer match {
       case "simple" =>
         // ES's simple analyzer: lowercase LETTER runs — every token
         // is trivially a standard token of itself, no sentinel needed
@@ -7973,7 +7980,7 @@ object EsDsl {
         literalTerms(Seq(text).filter(_.nonEmpty))
       case _ =>
         graft.functions.TextFunctions.analyzeText(text).distinct.toSeq
-    }
+    })
 
   /** Gate literal (whitespace/keyword) query terms against the
     * standard token alphabet: a term that does not standard-analyze
@@ -8025,14 +8032,14 @@ object EsDsl {
     * phrase type = a per-field phrase query with a best-field
     * combine). Matching: token ADJACENCY on the normalized token
     * string (slop 0; gapless english stems ride the same form),
-    * ordered proximity (gap sum <= slop — Search.slopPhrase's),
+    * sloppy proximity (Search.slopPhrase's),
     * EXACT-OFFSET matching when a query-time english analysis left
     * stop gaps (the stop filter consumes positions — Lucene's
     * position increments — so "sorted the windows" needs the literal
     * token "sort" and, two positions later, "window"), or the gapped
     * SLOPPY walk when both (one SHARED slop budget: the stems'
     * adjusted positions span <= slop, transposed alignments included —
-    * Search.gappedSlopCount). The SCORE is
+    * Positional.phrase). The SCORE is
     * phrase-frequency BM25, ES's PhraseQuery model: idf sums the
     * phrase terms' idfs over the STANDARD statistics (english stems
     * are literal standard terms), tf is the phrase count. None = an
@@ -8040,21 +8047,10 @@ object EsDsl {
   private def phraseLeg(ctx: Ctx, f: String, text: String, slop: Int,
                         analyzer: String): Option[(Column, Column)] = {
     if (slop < 0) bad("slop must be >= 0")
-    val posTerms: Seq[(String, Int)] = analyzer match {
-      case "english" =>
-        graft.functions.TextFunctions.rebase(
-          graft.functions.EnglishAnalysis.analyzeWithPositions(text))
-      case "french" =>
-        // same gapped contract as english: the french stop filter
-        // consumes positions, so the stems carry stop gaps
-        graft.functions.TextFunctions.rebase(
-          graft.functions.FrenchAnalysis.analyzeWithPositions(text))
-      case "german" =>
-        graft.functions.TextFunctions.rebase(
-          graft.functions.GermanAnalysis.analyzeWithPositions(text))
-      case "spanish" =>
-        graft.functions.TextFunctions.rebase(
-          graft.functions.SpanishAnalysis.analyzeWithPositions(text))
+    // the language chains' stop filters consume positions, so their
+    // stems carry stop gaps
+    val posTerms: Seq[(String, Int)] = graft.functions.TextFunctions
+      .languagePositions(analyzer, text).getOrElse(analyzer match {
       case "simple" =>
         // dense letter-run positions (the simple tokenizer has no
         // removing filter)
@@ -8079,18 +8075,16 @@ object EsDsl {
         }
       case _ => graft.functions.TextFunctions.analyzeText(text)
         .zipWithIndex.toSeq
-    }
+    })
     if (posTerms.isEmpty && analyzer != "standard") return None
     if (posTerms.isEmpty) bad("empty phrase query")
     val terms = posTerms.map(_._1)
     val gapless = posTerms.zipWithIndex.forall {
       case ((_, d), i) => d == i }
     val cnt =
-      if (slop > 0 && gapless) Search.slopCount(col(f), terms, slop)
-      else if (slop > 0) Search.gappedSlopCount(col(f), posTerms, slop)
-      else if (gapless) Search.substrCount(Search.tokenNorm(col(f)),
+      if (slop == 0 && gapless) Search.substrCount(Search.tokenNorm(col(f)),
         terms.mkString(" ", "  ", " "))
-      else Search.gappedPhraseCount(col(f), posTerms)
+      else Positional.termPhrase(col(f), posTerms, slop)
     Some((cnt, ctx.phraseBm25Score(f, terms, cnt)))
   }
 

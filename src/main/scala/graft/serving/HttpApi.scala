@@ -312,6 +312,10 @@ final class HttpApi(
         case _ => respond(ex, 404, """{"error": "not found"}""")
       }
     } catch {
+      case _: HttpApi.BodyTooLarge =>
+        respond(ex, 413, mapper.createObjectNode().put("error",
+          s"request body exceeds ${HttpApi.MaxContentLength} bytes")
+          .toString)
       case NonFatal(e) =>
         respond(ex, 500, mapper.createObjectNode()
           .put("error", String.valueOf(e.getMessage)).toString)
@@ -343,13 +347,9 @@ final class HttpApi(
     // analyzer); a term of pure punctuation has no tokens to rank by
     // — named 400 (the engine's empty-match convention), never a 500.
     // The default substring scorer still serves it (q1 semantics).
-    val tokenMode = textOr(req, "rank", "") == "bm25" ||
-      textOr(req, "rank", "") == "tfidf" ||
-      textOr(req, "type", "") == "phrase" ||
-      textOr(req, "operator", "or") == "and" ||
-      req.hasNonNull("minimum_should_match") ||
-      req.hasNonNull("fuzziness")
-    if (tokenMode &&
+    val ranked = Set("bm25", "tfidf").contains(textOr(req, "rank", ""))
+    val exact = if (ranked) Right(None) else exactMode(req, term)
+    if ((ranked || exact != Right(None)) &&
         graft.functions.TextFunctions.analyzeText(term).isEmpty) {
       respond(ex, 400, """{"error": "search_term analyzes to no """ +
         """tokens (punctuation only)"}""")
@@ -387,70 +387,30 @@ final class HttpApi(
           hits(ex, Search.acrossIndexesRankedIndexed(spark,
             entityIndexRoot(), term, limit, bestFields = best,
             bm25 = r == "bm25", after = after3, only = only))
-        // phrase / and / min_should span the wildcard through the
-        // per-entity positional indexes too — ES honors these modes on
-        // multi-index multi_match, so the wildcard must not silently
-        // degrade them to the occurrence scorer
-        case _ if textOr(req, "type", "") == "phrase" =>
-          val slop = Option(req.get("slop")).map(_.asInt).getOrElse(0)
-          if (slop < 0) {
-            respond(ex, 400, """{"error": "slop must be >= 0"}""")
-            return
-          }
-          hits(ex, Search.acrossIndexesPhraseIndexed(spark,
-            entityIndexRoot(), term, limit, after3, slop, only))
-        case _ if textOr(req, "operator", "or") == "and" =>
-          hits(ex, Search.acrossIndexesMinShouldIndexed(spark,
-            entityIndexRoot(), term, Int.MaxValue, limit, after3,
-            only))
-        case _ if req.hasNonNull("minimum_should_match") =>
-          val mm = req.get("minimum_should_match")
-          val nTerms = graft.functions.TextFunctions
-            .analyzeText(term).distinct.length
-          // integral nodes route through the SAME grammar resolver as
-          // text specs: ES's negative-integer form (-2 = all-but-2
-          // required) must resolve against the term count, not clamp
-          val resolved: Option[Int] =
-            if (mm.isIntegralNumber)
-              MinShouldMatch.resolve(mm.asInt.toString, nTerms)
-            else if (mm.isTextual) MinShouldMatch.resolve(mm.asText, nTerms)
-            else None
-          resolved match {
-            case None =>
-              respond(ex, 400, """{"error": "malformed minimum_should_""" +
-                """match; use an integer, percentage, or conditional """ +
-                """spec like \"2<-25% 9<-3\""}""")
-            case Some(n) =>
-              hits(ex, Search.acrossIndexesMinShouldIndexed(spark,
-                entityIndexRoot(), term, n, limit, after3, only))
-          }
-        case _ if req.hasNonNull("fuzziness") =>
-          val fz = req.get("fuzziness")
-          val spec = if (fz.isIntegralNumber) fz.asInt.toString else
-            textOr(req, "fuzziness", "")
-          val pl = Option(req.get("prefix_length")).map(_.asInt)
-            .getOrElse(0)
-          val me = Option(req.get("max_expansions")).map(_.asInt)
-          if (pl < 0 ||
-              me.exists(n => n <= 0 || n > Search.MaxExpansionsCeiling)) {
-            respond(ex, 400, """{"error": "prefix_length must be >= 0 """ +
-              s"""and max_expansions 1..${Search.MaxExpansionsCeiling}"}""")
-            return
-          }
-          if (Search.fuzzyEditsValid(spec))
+        // phrase / and / min_should / fuzzy span the wildcard through
+        // the per-entity positional indexes too — ES honors these
+        // modes on multi-index multi_match, so the wildcard must not
+        // silently degrade them to the occurrence scorer
+        case _ => exact match {
+          case Left(err) => respond(ex, 400, err)
+          case Right(Some(HttpApi.PhraseMode(slop))) =>
+            hits(ex, Search.acrossIndexesPhraseIndexed(spark,
+              entityIndexRoot(), term, limit, after3, slop, only))
+          case Right(Some(HttpApi.MinShouldMode(n))) =>
+            hits(ex, Search.acrossIndexesMinShouldIndexed(spark,
+              entityIndexRoot(), term, n, limit, after3, only))
+          case Right(Some(HttpApi.FuzzyMode(spec, pl, me))) =>
             hits(ex, Search.acrossIndexesFuzzyIndexed(spark,
               entityIndexRoot(), term, spec, limit, after3, pl, me,
               only = only))
-          else
-            respond(ex, 400, """{"error": "invalid fuzziness; use """ +
-              """\"AUTO\" or an edit distance 0..2"}""")
-        case _ =>
-          val lake =
-            EntityCatalog.unionDocuments(spark, srcDir, runTs, only)
-          val fields = lake.schema.fields
-            .filter(f => f.dataType == org.apache.spark.sql.types.StringType)
-            .map(_.name).filterNot(Set("table", "document_id")).toSeq
-          hits(ex, Search.acrossIndexes(lake, term, fields, limit, after3))
+          case Right(None) =>
+            val lake =
+              EntityCatalog.unionDocuments(spark, srcDir, runTs, only)
+            val fields = lake.schema.fields
+              .filter(_.dataType == org.apache.spark.sql.types.StringType)
+              .map(_.name).filterNot(Set("table", "document_id")).toSeq
+            hits(ex, Search.acrossIndexes(lake, term, fields, limit, after3))
+        }
       }
       return
     }
@@ -519,99 +479,108 @@ final class HttpApi(
         hits(ex, graft.sinks.SearchIndex.ranked(spark,
           tableIndexPath(index), term, fields, limit, bm25 = r == "bm25",
           bestFields = best, boosts = boosts, after = after))
-      // phrase / operator=and / minimum_should_match PROBE the index
-      // too (positional postings for phrase — what Lucene stores for
-      // type=phrase) and fetch row bodies by id afterward, ES's
-      // _source fetch; a request naming a non-indexed (non-string)
+      // phrase / operator=and / minimum_should_match / fuzziness PROBE
+      // the index too (positional postings for phrase — what Lucene
+      // stores for type=phrase) and fetch row bodies by id afterward,
+      // ES's _source fetch; a request naming a non-indexed (non-string)
       // field falls back to the corpus scan, same results either way
-      case _ if textOr(req, "type", "") == "phrase" =>
-        // "slop": ES match_phrase proximity — ordered, at most `slop`
-        // extra tokens interleaved (Search.slopPhrase; slop=0 is exact
-        // adjacency). Both the index probe and the scan fallback honor it.
-        val slop = Option(req.get("slop")).map(_.asInt).getOrElse(0)
-        if (slop < 0) {
-          respond(ex, 400, """{"error": "slop must be >= 0"}""")
-          return
-        }
-        hits(ex, indexedOrScan(index, df, fields,
-          p => fetchBodies(df, graft.sinks.SearchIndex.phrase(spark, p,
-            term, fields, limit, boosts, after, slop = slop)),
-          () => Search.slopPhrase(df, term, fields, slop, limit, after,
-            boosts)))
-      // operator=and is checked FIRST: ES ignores minimum_should_match
-      // entirely when the operator is `and` (every term is already
-      // required), so a request carrying both gets AND semantics — the
-      // same silent precedence ES applies
-      case _ if textOr(req, "operator", "or") == "and" =>
-        hits(ex, indexedOrScan(index, df, fields,
-          p => fetchBodies(df, graft.sinks.SearchIndex.minShould(spark, p,
-            term, fields, Int.MaxValue, limit, boosts, after)),
-          () => Search.multiFieldAnd(df, term, fields, limit, after,
-            boosts)))
-      case _ if req.hasNonNull("minimum_should_match") =>
-        // the full ES grammar: integers, negatives, percentages and
-        // conditional combinations ("2<-25% 9<-3") resolve against the
-        // distinct-term count (MinShouldMatch); a malformed spec is the
-        // caller's error — 400, never a silent degrade to plain OR
-        val mm = req.get("minimum_should_match")
-        val nTerms = graft.functions.TextFunctions
-          .analyzeText(term).distinct.length
-        // integral nodes route through the SAME grammar resolver as
-        // text specs: ES's negative-integer form (-2 = all-but-2
-        // required) must resolve against the term count, not clamp
-        val resolved: Option[Int] =
-          if (mm.isIntegralNumber)
-            MinShouldMatch.resolve(mm.asInt.toString, nTerms)
-          else if (mm.isTextual) MinShouldMatch.resolve(mm.asText, nTerms)
-          else None
-        resolved match {
-          case None =>
-            respond(ex, 400, """{"error": "malformed minimum_should_""" +
-              """match; use an integer, percentage, or conditional """ +
-              """spec like \"2<-25% 9<-3\""}""")
-          case Some(n) =>
-            hits(ex, indexedOrScan(index, df, fields,
-              p => fetchBodies(df, graft.sinks.SearchIndex.minShould(spark,
-                p, term, fields, n, limit, boosts, after)),
-              () => Search.multiFieldMinShould(df, term, fields,
-                n, limit, after, boosts)))
-        }
-      case _ if req.hasNonNull("fuzziness") =>
-        // ES match fuzziness: AUTO or an explicit 0..2 edit budget; the
-        // index probe expands terms against the vocabulary (termstats),
-        // the Lucene-FST shape, and fetches bodies by id.
-        // "prefix_length": chars exempt from edits (Lucene's
-        // nonFuzzyPrefix); "max_expansions": expansion set capped at the
-        // first N candidates (edit distance asc, term asc).
-        val fz = req.get("fuzziness")
-        val spec = if (fz.isIntegralNumber) fz.asInt.toString else
-          textOr(req, "fuzziness", "")
-        val pl = Option(req.get("prefix_length")).map(_.asInt).getOrElse(0)
-        val me = Option(req.get("max_expansions")).map(_.asInt)
-        if (pl < 0 ||
-            me.exists(n => n <= 0 || n > Search.MaxExpansionsCeiling)) {
-          respond(ex, 400, """{"error": "prefix_length must be >= 0 """ +
-            s"""and max_expansions 1..${Search.MaxExpansionsCeiling}"}""")
-          return
-        }
-        if (Search.fuzzyEditsValid(spec))
+      case _ => exact match {
+        case Left(err) => respond(ex, 400, err)
+        case Right(Some(HttpApi.PhraseMode(slop))) =>
+          hits(ex, indexedOrScan(index, df, fields,
+            p => fetchBodies(df, graft.sinks.SearchIndex.phrase(spark, p,
+              term, fields, limit, boosts, after, slop = slop)),
+            () => Search.slopPhrase(df, term, fields, slop, limit, after,
+              boosts)))
+        case Right(Some(HttpApi.MinShouldMode(n))) =>
+          hits(ex, indexedOrScan(index, df, fields,
+            p => fetchBodies(df, graft.sinks.SearchIndex.minShould(spark,
+              p, term, fields, n, limit, boosts, after)),
+            () => Search.multiFieldMinShould(df, term, fields,
+              n, limit, after, boosts)))
+        case Right(Some(HttpApi.FuzzyMode(spec, pl, me))) =>
           hits(ex, indexedOrScan(index, df, fields,
             p => fetchBodies(df, graft.sinks.SearchIndex.fuzzy(spark, p,
               term, fields, spec, limit, boosts, after,
               prefixLength = pl, maxExpansions = me)),
             () => Search.multiFieldFuzzy(df, term, fields, spec, limit,
               after, boosts, pl, me)))
-        else
-          respond(ex, 400, """{"error": "invalid fuzziness; use """ +
-            """\"AUTO\" or an edit distance 0..2"}""")
-      case _ =>
-        // the default occurrence scorer keeps the reference's SUBSTRING
-        // semantics ("foo" matches "foobar" — data_lake_sync's ILIKE
-        // heritage), which token postings cannot reproduce — this mode
-        // scans the corpus BY DESIGN; every token-exact mode above
-        // probes the index
-        hits(ex, Search.multiField(df, term, fields, limit, after, boosts))
+        case Right(None) =>
+          // the default occurrence scorer keeps the reference's
+          // SUBSTRING semantics ("foo" matches "foobar" —
+          // data_lake_sync's ILIKE heritage), which token postings
+          // cannot reproduce — this mode scans the corpus BY DESIGN;
+          // every token-exact mode above probes the index
+          hits(ex, Search.multiField(df, term, fields, limit, after,
+            boosts))
+      }
     }
+  }
+
+  /** `/search`'s token-exact mode, parsed and validated ONCE for the
+    * wildcard and single-index routes: `type=phrase` with `slop` (ES
+    * match_phrase proximity; 0 = exact adjacency), `operator=and`
+    * (checked before `minimum_should_match`: ES ignores the latter
+    * under AND, where every term is already required), the full
+    * `minimum_should_match` grammar resolved against the
+    * distinct-term count ([[MinShouldMatch]]), and `fuzziness` with
+    * `prefix_length` (chars exempt from edits — Lucene's
+    * nonFuzzyPrefix) and `max_expansions` (the expansion set capped at
+    * the first N candidates). Right(None) = no such mode (the
+    * occurrence scorer); Left = the 400 body naming the bad knob. */
+  private def exactMode(req: JsonNode, term: String)
+      : Either[String, Option[HttpApi.ExactMode]] = {
+    def err(msg: String): Either[String, Nothing] =
+      Left(mapper.createObjectNode().put("error", msg).toString)
+    def intKnob(k: String): Either[String, Option[Int]] =
+      Option(req.get(k)).filterNot(_.isNull) match {
+        case None => Right(None)
+        case Some(n) if n.isIntegralNumber && n.canConvertToInt =>
+          Right(Some(n.asInt))
+        case Some(n) if n.isTextual &&
+            n.asText.trim.toIntOption.isDefined =>
+          Right(n.asText.trim.toIntOption)
+        case Some(_) => err(s"$k must be an integer")
+      }
+    if (textOr(req, "type", "") == "phrase")
+      intKnob("slop").flatMap {
+        case Some(s) if s < 0 => err("slop must be >= 0")
+        case s => Right(Some(HttpApi.PhraseMode(s.getOrElse(0))))
+      }
+    else if (textOr(req, "operator", "or") == "and")
+      Right(Some(HttpApi.MinShouldMode(Int.MaxValue)))
+    else if (req.hasNonNull("minimum_should_match")) {
+      val mm = req.get("minimum_should_match")
+      val nTerms = graft.functions.TextFunctions
+        .analyzeText(term).distinct.length
+      // integral nodes route through the SAME grammar resolver as
+      // text specs: ES's negative-integer form (-2 = all-but-2
+      // required) must resolve against the term count, not clamp
+      val resolved: Option[Int] =
+        if (mm.isIntegralNumber)
+          MinShouldMatch.resolve(mm.asInt.toString, nTerms)
+        else if (mm.isTextual) MinShouldMatch.resolve(mm.asText, nTerms)
+        else None
+      resolved.map(n => Right(Some(HttpApi.MinShouldMode(n))))
+        .getOrElse(err("malformed minimum_should_match; use an " +
+          "integer, percentage, or conditional spec like \"2<-25% 9<-3\""))
+    } else if (req.hasNonNull("fuzziness")) {
+      val fz = req.get("fuzziness")
+      val spec = if (fz.isIntegralNumber) fz.asInt.toString else
+        textOr(req, "fuzziness", "")
+      for {
+        pl <- intKnob("prefix_length")
+        me <- intKnob("max_expansions")
+        mode <-
+          if (pl.exists(_ < 0) ||
+              me.exists(n => n <= 0 || n > Search.MaxExpansionsCeiling))
+            err("prefix_length must be >= 0 and max_expansions " +
+              s"1..${Search.MaxExpansionsCeiling}")
+          else if (!Search.fuzzyEditsValid(spec))
+            err("invalid fuzziness; use \"AUTO\" or an edit distance 0..2")
+          else Right(Some(HttpApi.FuzzyMode(spec, pl.getOrElse(0), me)))
+      } yield mode
+    } else Right(None)
   }
 
   /** The DSL target a request's `index` names: the union document
@@ -2782,7 +2751,7 @@ final class HttpApi(
       .map("%02x".format(_)).mkString
 
   private def body(ex: HttpExchange): JsonNode = {
-    val bytes = ex.getRequestBody.readAllBytes()
+    val bytes = bodyBytes(ex)
     if (bytes.isEmpty) mapper.createObjectNode()
     else mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
   }
@@ -2790,7 +2759,18 @@ final class HttpApi(
   /** Raw request text — the ndjson surface (`_msearch`), where the
     * body is LINES of JSON, not one document. */
   private def rawBody(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+    new String(bodyBytes(ex), StandardCharsets.UTF_8)
+
+  /** The request body, refused past [[HttpApi.MaxContentLength]]: a
+    * declared `Content-Length` above it before reading a byte, a
+    * chunked body once it has read one byte more. */
+  private def bodyBytes(ex: HttpExchange): Array[Byte] = {
+    val declared = Option(ex.getRequestHeaders.getFirst("Content-Length"))
+      .flatMap(_.trim.toLongOption)
+    if (declared.exists(_ > HttpApi.MaxContentLength))
+      throw new HttpApi.BodyTooLarge
+    HttpApi.readCapped(ex.getRequestBody, HttpApi.MaxContentLength)
+  }
 
   private def textOr(node: JsonNode, field: String, dflt: String): String =
     Option(node.get(field)).map(_.asText()).getOrElse(dflt)
@@ -2814,6 +2794,31 @@ final class HttpApi(
 }
 
 object HttpApi {
+
+  /** A `/search` token-exact mode ([[HttpApi.exactMode]]'s result). */
+  private sealed trait ExactMode
+  private final case class PhraseMode(slop: Int) extends ExactMode
+  /** `operator=and` is `need = Int.MaxValue` (clamped to every term). */
+  private final case class MinShouldMode(need: Int) extends ExactMode
+  private final case class FuzzyMode(spec: String, prefixLength: Int,
+                                     maxExpansions: Option[Int])
+      extends ExactMode
+
+  /** The largest request body served: ES's `http.max_content_length`
+    * default, 100 MB. */
+  private[graft] val MaxContentLength: Long = 100L * 1024 * 1024
+
+  /** A request body past [[MaxContentLength]] — answered 413. */
+  private[graft] final class BodyTooLarge extends RuntimeException
+
+  /** `in`'s bytes, reading at most `cap + 1` of them: one byte past
+    * `cap` is enough to refuse the body with [[BodyTooLarge]]. */
+  private[graft] def readCapped(in: java.io.InputStream,
+                                cap: Long): Array[Byte] = {
+    val bytes = in.readNBytes(math.min(cap + 1, Int.MaxValue - 8).toInt)
+    if (bytes.length > cap) throw new BodyTooLarge
+    bytes
+  }
 
   /** Why a source document derived no stored document: a required key
     * absent from the source, a required value null, or a value the

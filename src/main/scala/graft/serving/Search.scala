@@ -90,15 +90,19 @@ object Search {
                  limit: Int = 100,
                  after: Option[(Double, Any)] = None,
                  boosts: Map[String, Double] = Map.empty): DataFrame = {
-    val score = fields.map(f => boosted(f, occurrences(col(f), term), boosts))
-      .reduce(_ + _).as("score")
-    val keyCols = df.columns.toSeq.map(col)
-    df.select(keyCols :+ score: _*)
+    topRows(df, fields.map(f => boosted(f, occurrences(col(f), term), boosts))
+      .reduce(_ + _), limit, after)
+  }
+
+  /** `df`'s rows with a positive `score`, after the cursor, top-k in
+    * (score desc, first column) order — full rows, like ES's hits. */
+  private def topRows(df: DataFrame, score: Column, limit: Int,
+                      after: Option[(Double, Any)]): DataFrame =
+    df.select(df.columns.toSeq.map(col) :+ score.as("score"): _*)
       .filter(col("score") > 0)
       .filter(afterPredicate(after, col(df.columns.head)))
       .orderBy(col("score").desc, col(df.columns.head))
       .limit(limit)
-  }
 
   /** Cross-index search over the `data_lake_*`-style union document view
     * ([[graft.catalog.EntityCatalog.unionDocuments]]): multi-field
@@ -193,13 +197,21 @@ object Search {
     val clause = Ranking.Clause("score", specs.map(sp =>
       Ranking.Leg(sp.name, terms, fields.indices
         .filter(fields(_).table == sp.name).map((_, 1.0)))), bestFields)
-    Ranking.combine(Ranking.scan(union, col("table"), col("document_id"),
-        fields, Seq(clause), bm25), bm25, Seq(clause))
-      .select(col("table"), col("id").as("document_id"), col("score"))
+    topAcross(Ranking.combine(Ranking.scan(union, col("table"),
+      col("document_id"), fields, Seq(clause), bm25), bm25, Seq(clause)),
+      limit, after)
+  }
+
+  /** The wildcard page of `(table, id, score)` hits: (table,
+    * document_id, score) after the 3-key cursor, ONE global top-k in
+    * the (score desc, document_id, table) order. */
+  private[graft] def topAcross(scored: DataFrame, limit: Int,
+                               after: Option[(Double, String, String)])
+      : DataFrame =
+    scored.select(col("table"), col("id").as("document_id"), col("score"))
       .filter(afterPredicate3(after))
       .orderBy(col("score").desc, col("document_id"), col("table"))
       .limit(limit)
-  }
 
   /** The SEARCHABLE fields of an entity document frame — its string
     * columns in schema order, minus the `table` discriminator and the
@@ -273,49 +285,53 @@ object Search {
     // and aggregates once. Bit-identical per-entity scores and the
     // same 3-key cursor semantics (SearchIndexSpec pins the equality).
     graft.sinks.SearchIndex.rankedAcrossIndexes(spark,
-      entitySubset(only).map(spec =>
-        spec.name -> s"$indexRoot/${spec.name}"),
-      query, limit, bm25, bestFields, after)
+      entityBranches(indexRoot, only), query, limit, bm25, bestFields, after)
+
+  /** (entity, index path) of every entity of `only` (all when empty)
+    * under the per-entity index root. */
+  private def entityBranches(indexRoot: String,
+                             only: Seq[String]): Seq[(String, String)] =
+    entitySubset(only).map(spec => spec.name -> s"$indexRoot/${spec.name}")
 
   /** Wildcard PHRASE over the entity indexes (`data_lake_*` with
-    * `multi_match type=phrase`): every entity's positional postings are
-    * probed independently ([[graft.sinks.SearchIndex.phrase]]), hits
-    * merge into one global top-k ([[mergeBranches]]). Phrase scores
-    * are per-branch occurrence counts — no index-local statistics — so
-    * the merge is a plain top-k. Scan-path twin: [[phrase]] over each
+    * `multi_match type=phrase`): every entity's positional postings,
+    * entity-tagged, feed ONE phrase probe
+    * ([[graft.sinks.SearchIndex.phraseScores]]) — one aggregate keyed
+    * (table, document_id) and one global top-k under the 3-key cursor
+    * ([[topAcross]]). Phrase scores are per-entity occurrence counts —
+    * no index-local statistics. Scan-path twin: [[phrase]] over each
     * entity's pipeline documents (SearchIndexSpec pins the equality). */
   def acrossIndexesPhraseIndexed(spark: SparkSession, indexRoot: String,
                                  phraseQuery: String, limit: Int = 100,
                                  after: Option[(Double, String, String)] =
                                    None, slop: Int = 0,
-                                  only: Seq[String] = Nil): DataFrame =
-    mergeBranches(only, limit, after) { (entity, branchAfter, inclusive) =>
-      graft.sinks.SearchIndex.phrase(spark, s"$indexRoot/$entity",
-        phraseQuery, Nil, limit, Map.empty, branchAfter, inclusive, slop)
-    }
+                                 only: Seq[String] = Nil): DataFrame =
+    topAcross(graft.sinks.SearchIndex.phraseScores(
+      spark, entityBranches(indexRoot, only), phraseQuery, Nil, Map.empty,
+      slop), limit, after)
 
   /** Wildcard `operator=and` / `minimum_should_match` over the entity
-    * indexes — [[graft.sinks.SearchIndex.minShould]] per branch, global
-    * top-k merge, same cursor semantics as the other wildcard modes.
-    * The match predicate is per-entity (every/k-of-n terms must match
-    * within ONE entity's fields), exactly what ES computes when a
-    * multi_match with operator=and spans indexes. */
+    * indexes ([[graft.sinks.SearchIndex.minShouldScores]]), one plan,
+    * same cursor semantics as the other wildcard modes. The match
+    * predicate is per-entity (every/k-of-n terms must match within ONE
+    * entity's fields), exactly what ES computes when a multi_match
+    * with operator=and spans indexes. */
   def acrossIndexesMinShouldIndexed(spark: SparkSession, indexRoot: String,
                                     query: String,
                                     minMatch: Int = Int.MaxValue,
                                     limit: Int = 100,
                                     after: Option[(Double, String, String)] =
                                       None,
-                                  only: Seq[String] = Nil): DataFrame =
-    mergeBranches(only, limit, after) { (entity, branchAfter, inclusive) =>
-      graft.sinks.SearchIndex.minShould(spark, s"$indexRoot/$entity",
-        query, Nil, minMatch, limit, Map.empty, branchAfter, inclusive)
-    }
+                                    only: Seq[String] = Nil): DataFrame =
+    topAcross(
+      graft.sinks.SearchIndex.minShouldScores(spark,
+        entityBranches(indexRoot, only), query, Nil, minMatch, Map.empty),
+      limit, after)
 
   /** Wildcard `fuzziness` over the entity indexes — each entity's
     * vocabulary expands the query terms independently
-    * ([[graft.sinks.SearchIndex.fuzzy]]), hits merge under the shared
-    * 3-key cursor order like the other wildcard modes. */
+    * ([[graft.sinks.SearchIndex.fuzzyScores]]), one plan under the
+    * shared 3-key cursor order like the other wildcard modes. */
   def acrossIndexesFuzzyIndexed(spark: SparkSession, indexRoot: String,
                                 query: String, fuzziness: String = "AUTO",
                                 limit: Int = 100,
@@ -323,32 +339,11 @@ object Search {
                                   None, prefixLength: Int = 0,
                                 maxExpansions: Option[Int] = None,
                                 transpositions: Boolean = true,
-                                  only: Seq[String] = Nil): DataFrame =
-    mergeBranches(only, limit, after) { (entity, branchAfter, inclusive) =>
-      graft.sinks.SearchIndex.fuzzy(spark, s"$indexRoot/$entity",
-        query, Nil, fuzziness, limit, Map.empty, branchAfter, inclusive,
-        prefixLength, maxExpansions, transpositions)
-    }
-
-  /** One probe per entity of `only` (all when empty), merged into one
-    * global top-k under the shared 3-key cursor order. Each branch
-    * gets the cursor as (score, id), inclusive of that id when its
-    * entity sorts after the cursor's table; the per-branch `limit`
-    * bound is sound because a hit outside its own branch's top-k
-    * cannot enter the global one. */
-  private def mergeBranches(only: Seq[String], limit: Int,
-                            after: Option[(Double, String, String)])(
-      probe: (String, Option[(Double, Any)], Boolean) => DataFrame)
-      : DataFrame =
-    entitySubset(only).map { spec =>
-        probe(spec.name, after.map { case (s, id, _) => (s, id: Any) },
-          after.exists { case (_, _, t) => spec.name > t })
-          .select(lit(spec.name).as("table"), col("document_id"),
-            col("score"))
-      }
-      .reduce(_.unionByName(_))
-      .orderBy(col("score").desc, col("document_id"), col("table"))
-      .limit(limit)
+                                only: Seq[String] = Nil): DataFrame =
+    topAcross(
+      graft.sinks.SearchIndex.fuzzyScores(spark,
+        entityBranches(indexRoot, only), query, Nil, fuzziness, Map.empty,
+        prefixLength, maxExpansions, transpositions), limit, after)
 
   /** Sync-time index build for every catalog entity — the write-time
     * moment the reference's ES builds its inverted indexes. One index
@@ -550,299 +545,16 @@ object Search {
   def phrase(df: DataFrame, phraseQuery: String, fields: Seq[String],
              limit: Int = 100,
              after: Option[(Double, Any)] = None,
-             boosts: Map[String, Double] = Map.empty): DataFrame = {
-    val terms = graft.functions.TextFunctions.analyzeText(phraseQuery)
-    require(terms.nonEmpty, "empty phrase")
-    val needle = terms.mkString(" ", "  ", " ") // [[tokenNorm]] spacing
-    val prefilter = fields.map(f =>
-        terms.map(t => lower(coalesce(col(f), lit("")))
-          .contains(lit(t))).reduce(_ && _))
-      .reduce(_ || _)
-    val score = fields.map(f =>
-        boosted(f, substrCount(tokenNorm(col(f)), needle), boosts))
-      .reduce(_ + _).as("score")
-    val keyCols = df.columns.toSeq.map(col)
-    df.filter(prefilter)
-      .select(keyCols :+ score: _*)
-      .filter(col("score") > 0)
-      .filter(afterPredicate(after, col(df.columns.head)))
-      .orderBy(col("score").desc, col(df.columns.head))
-      .limit(limit)
-  }
-
-  /** Count of sloppy matches of a DENSE phrase (`terms(k)` expected at
-    * relative offset `k`) in a text column — [[gappedSlopCount]] with
-    * consecutive offsets: the number of head-term positions `p_0` from
-    * which every slot `k` can be placed at some DISTINCT `p_k` whose
-    * adjusted positions `p_k - k` span at most `slop` (Lucene's sloppy
-    * `matchLength`, transposed alignments included). Evaluated
-    * entirely with array HOFs over the token array (per-term position
-    * lists are occurrence-sized) — no explode, no shuffle, no UDF. */
-  private[graft] def slopCount(field: Column, terms: Seq[String],
-                               slop: Int): Column =
-    gappedSlopCount(field, terms.zipWithIndex, slop)
-
-  /** Phrase-frequency matcher for a query whose analyzed terms carry
-    * POSITION GAPS (a token-REMOVING query analyzer: english stop
-    * positions survive as increments — Lucene's PhraseQuery over a
-    * gapped term list): counts start positions `p` in the STANDARD
-    * token stream with `terms(i)._1` at exactly `p + terms(i)._2` for
-    * every i. Offsets are relative (`terms(0)._2 == 0`); consecutive
-    * offsets reduce to plain adjacency (callers route that to the
-    * cheaper normalized-substring count). Same HOF-only shape as
-    * [[slopCount]]: per-slot position lists, no explode, no shuffle. */
-  private[graft] def gappedPhraseCount(field: Column,
-                                       terms: Seq[(String, Int)]): Column = {
-    require(terms.nonEmpty && terms.head._2 == 0, "offsets are relative")
-    val toks = graft.functions.TextFunctions.analyzerTokens(field)
-    def posOf(t: String): Column =
-      filter(transform(toks, (x, i) =>
-        when(x === lit(t), i).otherwise(lit(-1))), p => p >= lit(0))
-    def rest(k: Int, first: Column): Column =
-      if (k == terms.size) lit(true)
-      else exists(posOf(terms(k)._1), p =>
-        p === first + lit(terms(k)._2) && rest(k + 1, first))
-    size(filter(posOf(terms.head._1), p1 => rest(1, p1))).cast("int")
-  }
-
-  /** [[gappedPhraseCount]] with slop — sloppy matching of a
-    * position-GAPPED query term list (english stop gaps): counts head
-    * positions `p_0` admitting an assignment of every slot `k` to a
-    * DISTINCT document position `p_k` of its term whose ADJUSTED
-    * positions `adj_k = p_k - offset_k` span at most `slop`
-    * (`max_k adj_k - min_k adj_k <= slop`). The span of adjusted
-    * positions is exactly Lucene's sloppy-phrase `matchLength`
-    * (SloppyPhraseMatcher: each PhrasePositions carries
-    * `position - offset`; a match costs `end - min`), i.e. ONE SHARED
-    * slop budget across the phrase — a stem one early AND a stem one
-    * late together cost 2, not 1 each. The assignment is NOT
-    * order-constrained: transposed (out-of-order) alignments match
-    * when their span fits, exactly Lucene — ES matches "fox quick"
-    * for `"quick fox"` at slop 2. No ordering case-split is needed:
-    * for any slot pair placed out of query order the span arithmetic
-    * alone costs `(p_j - p_k) + (offset_k - offset_j) >= 2`, so
-    * `slop <= 1` walks are in-order for free and transpositions
-    * surface from `slop >= 2`, like Lucene. At `slop = 0` all
-    * adjusted positions must coincide — exactly [[gappedPhraseCount]];
-    * a dense query (`offset_k == k`) is [[slopCount]]. One model,
-    * three degenerate forms.
-    *
-    * Distinctness mirrors Lucene's repeating-terms rule (two phrase
-    * positions never share a document position); slots of DIFFERENT
-    * terms can't collide anyway (one token per position), so the
-    * check compiles only between same-term slots. Same HOF-only
-    * shape: per-slot position lists, no explode, no shuffle. */
-  private[graft] def gappedSlopCount(field: Column,
-                                     terms: Seq[(String, Int)],
-                                     slop: Int): Column = {
-    require(terms.nonEmpty && terms.head._2 == 0, "offsets are relative")
-    // clamp BEFORE the `offset + slop` Int arithmetic: a saturated
-    // caller value (simple_query_string lexes absurd ~N suffixes to
-    // Int.MaxValue) would wrap negative and silently match nothing;
-    // 2^24 positions exceed any tokenizable document
-    val s = math.min(slop, 1 << 24)
-    val toks = graft.functions.TextFunctions.analyzerTokens(field)
-    def posOf(t: String): Column =
-      filter(transform(toks, (x, i) =>
-        when(x === lit(t), i).otherwise(lit(-1))), p => p >= lit(0))
-    // thread the running [lo, hi] adjusted-position envelope and the
-    // positions already taken; a slot is admissible iff its position
-    // is fresh (same-term slots only) and including its adjusted
-    // position keeps hi - lo <= slop
-    def rest(k: Int, taken: List[(String, Column)],
-             lo: Column, hi: Column): Column =
-      if (k == terms.size) lit(true)
-      else exists(posOf(terms(k)._1), p => {
-        val adj = p - lit(terms(k)._2)
-        val fresh = taken.collect { case (t, q) if t == terms(k)._1 =>
-          p =!= q }.foldLeft(adj >= hi - lit(s) && adj <= lo + lit(s))(
-          _ && _)
-        fresh && rest(k + 1, (terms(k)._1, p) :: taken,
-          least(lo, adj), greatest(hi, adj))
-      })
-    size(filter(posOf(terms.head._1), p1 =>
-      rest(1, List((terms.head._1, p1)), p1, p1))).cast("int")
-  }
-
-  /** [[slopCount]] with the LAST slot matched by PREFIX instead of
-    * equality — ES `match_phrase_prefix`: the leading terms and a
-    * final slot holding any token starting with the last "term" (the
-    * user's still-being-typed prefix), aligned by the same shared
-    * slop budget as [[gappedSlopCount]] (adjusted-position span
-    * `<= slop`, transposed alignments included — Lucene's
-    * MultiPhrasePrefixQuery rides the same SloppyPhraseMatcher).
-    * `lastExpansion`, when present, caps the final slot to membership
-    * in that token set (ES `max_expansions` — the caller derives the
-    * first-N prefix expansion; None = unbounded prefix match).
-    * Distinctness is ALL-pairs here (the prefix slot can land on an
-    * exact slot's token when that term matches the prefix — Lucene
-    * never lets two phrase positions share a document position).
-    * Single-term queries degenerate to a prefix-token count. */
-  private[graft] def phrasePrefixCount(field: Column, terms: Seq[String],
-                                       slop: Int,
-                                       lastExpansion: Option[Seq[String]]
-                                         = None): Column = {
-    require(terms.nonEmpty, "empty phrase prefix")
-    // same overflow clamp as slopCount (k + slop in Int arithmetic)
-    val s = math.min(slop, 1 << 24)
-    val toks = graft.functions.TextFunctions.analyzerTokens(field)
-    def posWhere(m: Column => Column): Column =
-      filter(transform(toks, (x, i) =>
-        when(m(x), i).otherwise(lit(-1))), p => p >= lit(0))
-    val lastMatch: Column => Column = lastExpansion match {
-      case Some(set) =>
-        if (set.isEmpty) (_: Column) => lit(false)
-        else (x: Column) => x.isInCollection(set)
-      case None => (x: Column) => x.startsWith(terms.last)
-    }
-    def posOf(k: Int): Column =
-      if (k == terms.size - 1) posWhere(lastMatch)
-      else posWhere(_ === lit(terms(k)))
-    def rest(k: Int, taken: List[Column],
-             lo: Column, hi: Column): Column =
-      if (k == terms.size) lit(true)
-      else exists(posOf(k), p => {
-        val adj = p - lit(k)
-        taken.map(p =!= _).foldLeft(
-          adj >= hi - lit(s) && adj <= lo + lit(s))(_ && _) &&
-          rest(k + 1, p :: taken, least(lo, adj), greatest(hi, adj))
-      })
-    size(filter(posOf(0), p1 => rest(1, List(p1), p1, p1))).cast("int")
-  }
-
-  /** [[slopCount]] generalized to arbitrary per-slot token matchers —
-    * the ORDERED span/intervals matcher (Lucene `span_near`
-    * `in_order:true`, intervals `ordered:true`). Counts head
-    * positions `p1` matching `slots(0)` from which every later slot
-    * `k` can be placed at some `p_k > p_(k-1)` with total interleave
-    * `p_n - p1 - (n-1) <= slop`. Each slot is a token predicate, so
-    * `span_or` sub-clauses (match any of a term set) ride the same
-    * scan. Same HOF-only shape as [[slopCount]]: per-slot position
-    * lists, no explode, no shuffle. */
-  private[graft] def spanNearCount(field: Column,
-                                   slots: Seq[Column => Column],
-                                   slop: Int): Column = {
-    require(slots.nonEmpty, "empty span slots")
-    val s = math.min(slop, 1 << 24)
-    val toks = graft.functions.TextFunctions.analyzerTokens(field)
-    def posOf(k: Int): Column =
-      filter(transform(toks, (x, i) =>
-        when(slots(k)(x), i).otherwise(lit(-1))), p => p >= lit(0))
-    def rest(k: Int, prev: Column, first: Column): Column =
-      if (k == slots.size) lit(true)
-      else exists(posOf(k), p =>
-        p > prev && p <= first + lit(k + s) && rest(k + 1, p, first))
-    size(filter(posOf(0), p1 => rest(1, p1, p1))).cast("int")
-  }
-
-  /** Lucene `span_containing` / `span_within`: spans of the BIG query
-    * (an ordered multi-slot near — `slots` with total interleave
-    * `slop`, or a width-1 leaf when `slots.size == 1`) related to
-    * matches of the width-1 LITTLE matcher. A big span `[p1, pn]`
-    * contains a little position `q` iff `p1 <= q <= pn` (width-1
-    * little starts and ends at `q`, so Lucene's start/end inequalities
-    * collapse to the interval test). `within = false` counts big head
-    * positions that contain SOME little match (span_containing's
-    * big-span frequency); `within = true` counts little positions
-    * covered by SOME big span (span_within's little-span frequency).
-    * Same HOF-only shape as [[spanNearCount]] — per-slot position
-    * lists, the `pn >= q` requirement threads through the recursive
-    * placement as the end-of-assignment check; no explode, no
-    * shuffle. */
-  private[graft] def spanContainCount(field: Column,
-                                      slots: Seq[Column => Column],
-                                      slop: Int,
-                                      little: Column => Column,
-                                      within: Boolean): Column = {
-    require(slots.nonEmpty, "empty span slots")
-    val s = math.min(slop, 1 << 24)
-    val toks = graft.functions.TextFunctions.analyzerTokens(field)
-    def posOf(m: Column => Column): Column =
-      filter(transform(toks, (x, i) =>
-        when(m(x), i).otherwise(lit(-1))), p => p >= lit(0))
-    // place slots k.. after prev inside the slop window; the LAST
-    // placed slot is the span end, which must reach q
-    def rest(k: Int, prev: Column, first: Column, q: Column): Column =
-      if (k == slots.size) prev >= q
-      else exists(posOf(slots(k)), p =>
-        p > prev && p <= first + lit(k + s) && rest(k + 1, p, first, q))
-    if (within)
-      size(filter(posOf(little), q => exists(posOf(slots.head), p1 =>
-        p1 <= q && rest(1, p1, p1, q)))).cast("int")
-    else
-      size(filter(posOf(slots.head), p1 => exists(posOf(little), q =>
-        q >= p1 && rest(1, p1, p1, q)))).cast("int")
-  }
-
-  /** UNORDERED two-slot proximity (Lucene `span_near`
-    * `in_order:false`, intervals `ordered:false` with `max_gaps`):
-    * counts positions `p` of the FIRST slot for which some second-slot
-    * position `q != p` sits within the window (`|p − q| − 1 <= slop`
-    * interleaved tokens). The head-position count is this engine's
-    * documented span-frequency convention (Lucene's non-overlapping
-    * enumeration differs only on pathological self-overlap). */
-  /** [[spanNearCount]] with PER-SLOT source columns — Lucene's
-    * `span_field_masking` composition: each slot's positions come
-    * from ITS OWN field's token stream, and the slots compare in ONE
-    * position space (exactly Lucene's overlay semantics for
-    * analyzer-compatible multi-fields). Same HOF-only shape — per-row
-    * position lists, no explode, no shuffle. */
-  private[graft] def spanNearCountFields(
-      slots: Seq[(Column, Column => Column)], slop: Int): Column = {
-    require(slots.nonEmpty, "empty span slots")
-    val s = math.min(slop, 1 << 24)
-    def posOf(k: Int): Column = {
-      val toks = graft.functions.TextFunctions.analyzerTokens(slots(k)._1)
-      filter(transform(toks, (x, i) =>
-        when(slots(k)._2(x), i).otherwise(lit(-1))), p => p >= lit(0))
-    }
-    def rest(k: Int, prev: Column, first: Column): Column =
-      if (k == slots.size) lit(true)
-      else exists(posOf(k), p =>
-        p > prev && p <= first + lit(k + s) && rest(k + 1, p, first))
-    size(filter(posOf(0), p1 => rest(1, p1, p1))).cast("int")
-  }
-
-  /** [[spanPairCount]] with per-slot source columns — the unordered
-    * two-clause `span_near` under `span_field_masking`. With distinct
-    * source fields the `q != p` self-overlap guard is kept: Lucene's
-    * masked spans still collide when they occupy the same position. */
-  private[graft] def spanPairCountFields(fa: Column, a: Column => Column,
-                                         fb: Column, b: Column => Column,
-                                         slop: Int): Column = {
-    val s = math.min(slop, 1 << 24)
-    def posOf(f: Column, m: Column => Column): Column = {
-      val toks = graft.functions.TextFunctions.analyzerTokens(f)
-      filter(transform(toks, (x, i) =>
-        when(m(x), i).otherwise(lit(-1))), p => p >= lit(0))
-    }
-    size(filter(posOf(fa, a), p => exists(posOf(fb, b), q =>
-      q =!= p && greatest(p, q) - least(p, q) - 1 <= lit(s))))
-      .cast("int")
-  }
-
-  private[graft] def spanPairCount(field: Column,
-                                   a: Column => Column,
-                                   b: Column => Column,
-                                   slop: Int): Column = {
-    val s = math.min(slop, 1 << 24)
-    val toks = graft.functions.TextFunctions.analyzerTokens(field)
-    def posOf(m: Column => Column): Column =
-      filter(transform(toks, (x, i) =>
-        when(m(x), i).otherwise(lit(-1))), p => p >= lit(0))
-    size(filter(posOf(a), p => exists(posOf(b), q =>
-      q =!= p && greatest(p, q) - least(p, q) - 1 <= lit(s))))
-      .cast("int")
-  }
+             boosts: Map[String, Double] = Map.empty): DataFrame =
+    phraseScan(df, phraseQuery, fields, 0, limit, after, boosts)
 
   /** SLOPPY phrase (ES `match_phrase` with `slop`): the query's terms
     * must appear with an adjusted-position span of at most `slop` —
     * Lucene's full sloppy matcher, transposed (out-of-order)
-    * alignments included from `slop >= 2` ([[gappedSlopCount]]'s
-    * model). `slop = 0` delegates to [[phrase]] (exact adjacency,
-    * non-overlap-counted). Scored by the count of head positions that
-    * admit a match within the budget ([[slopCount]]), summed across
-    * `fields`.
+    * alignments included from `slop >= 2` ([[Positional.phrase]]).
+    * `slop = 0` is [[phrase]] (exact adjacency, non-overlap-counted).
+    * Scored by the count of head positions that admit a match within
+    * the budget, summed across `fields`.
     *
     * Scale: the codegen'd per-term `contains` prefilter keeps the HOF
     * position scan off every row missing some term as a substring; the
@@ -853,24 +565,27 @@ object Search {
                  after: Option[(Double, Any)] = None,
                  boosts: Map[String, Double] = Map.empty): DataFrame = {
     require(slop >= 0, "slop must be >= 0")
-    if (slop == 0)
-      return phrase(df, phraseQuery, fields, limit, after, boosts)
+    phraseScan(df, phraseQuery, fields, slop, limit, after, boosts)
+  }
+
+  /** [[phrase]] (`slop = 0`: the normalized-substring count) and
+    * [[slopPhrase]] (the positional walk) over a plain frame. */
+  private def phraseScan(df: DataFrame, phraseQuery: String,
+                         fields: Seq[String], slop: Int, limit: Int,
+                         after: Option[(Double, Any)],
+                         boosts: Map[String, Double]): DataFrame = {
     val terms = graft.functions.TextFunctions.analyzeText(phraseQuery)
     require(terms.nonEmpty, "empty phrase")
     val prefilter = fields.map(f =>
         terms.map(t => lower(coalesce(col(f), lit("")))
           .contains(lit(t))).reduce(_ && _))
       .reduce(_ || _)
-    val score = fields.map(f =>
-        boosted(f, slopCount(col(f), terms, slop), boosts))
-      .reduce(_ + _).as("score")
-    val keyCols = df.columns.toSeq.map(col)
-    df.filter(prefilter)
-      .select(keyCols :+ score: _*)
-      .filter(col("score") > 0)
-      .filter(afterPredicate(after, col(df.columns.head)))
-      .orderBy(col("score").desc, col(df.columns.head))
-      .limit(limit)
+    def cnt(f: String): Column =
+      if (slop == 0)
+        substrCount(tokenNorm(col(f)), terms.mkString(" ", "  ", " "))
+      else Positional.termPhrase(col(f), terms.zipWithIndex, slop)
+    topRows(df.filter(prefilter),
+      fields.map(f => boosted(f, cnt(f), boosts)).reduce(_ + _), limit, after)
   }
 
   /** `operator: "and"` search (ES `multi_match` with `operator: and`):
@@ -1006,12 +721,7 @@ object Search {
       df: DataFrame, fields: Seq[String], terms: Seq[String],
       edits: Seq[Int], prefixLength: Int,
       n: Int, transpositions: Boolean = true): Map[String, Seq[String]] = {
-    require(n > 0 && n <= MaxExpansionsCeiling,
-      s"max_expansions must be 1..$MaxExpansionsCeiling")
-    val toksAll = fields.map(f =>
-        graft.functions.TextFunctions.analyzerTokens(col(f)))
-      .reduce((a, b) => concat(a, b))
-    val vocab = df.select(explode(toksAll).as("tok")).distinct()
+    val vocab = vocabulary(df, fields, n)
     terms.zip(edits).map { case (t, e) =>
       val p = t.take(prefixLength)
       val base =
@@ -1034,15 +744,22 @@ object Search {
                                         fields: Seq[String],
                                         prefix: String,
                                         n: Int): Seq[String] = {
-    require(n > 0 && n <= MaxExpansionsCeiling,
-      s"max_expansions must be 1..$MaxExpansionsCeiling")
-    val toksAll = fields.map(f =>
-        graft.functions.TextFunctions.analyzerTokens(col(f)))
-      .reduce((a, b) => concat(a, b))
-    df.select(explode(toksAll).as("tok")).distinct()
+    vocabulary(df, fields, n)
       .filter(col("tok").startsWith(prefix))
       .orderBy(col("tok").asc).limit(n)
       .collect().map(_.getString(0)).toSeq
+  }
+
+  /** The distinct tokens (`tok`) of `fields` — the corpus dictionary
+    * an expansion capped at `n` ([[MaxExpansionsCeiling]] at most)
+    * draws from. */
+  private def vocabulary(df: DataFrame, fields: Seq[String],
+                         n: Int): DataFrame = {
+    require(n > 0 && n <= MaxExpansionsCeiling,
+      s"max_expansions must be 1..$MaxExpansionsCeiling")
+    df.select(explode(fields.map(f =>
+        graft.functions.TextFunctions.analyzerTokens(col(f)))
+      .reduce((a, b) => concat(a, b))).as("tok")).distinct()
   }
 
   /** FUZZY search (ES `match` with `fuzziness`): a field token matches a
@@ -1098,15 +815,9 @@ object Search {
         }
         f -> c
     }
-    val score = terms.zip(edits).map { case (t, e) =>
+    topRows(df, terms.zip(edits).map { case (t, e) =>
       cnt(t, e).map { case (f, c) => boosted(f, c, boosts) }
         .reduce(_ + _)
-    }.reduce(_ + _).as("score")
-    val keyCols = df.columns.toSeq.map(col)
-    df.select(keyCols :+ score: _*)
-      .filter(col("score") > 0)
-      .filter(afterPredicate(after, col(df.columns.head)))
-      .orderBy(col("score").desc, col(df.columns.head))
-      .limit(limit)
+    }.reduce(_ + _), limit, after)
   }
 }

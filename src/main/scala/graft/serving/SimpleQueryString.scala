@@ -111,7 +111,7 @@ object SimpleQueryString {
     if (j == from) (None, from)
     // an absurdly long digit run saturates instead of overflowing —
     // leniency means NEVER throwing; downstream consumers clamp
-    // (fuzzy to 2 here, slop inside Search.slopCount's window math)
+    // (fuzzy to 2 here, slop inside Positional's window math)
     else if (j - from > 9) (Some(Int.MaxValue), j)
     else (Some(q.substring(from, j).toInt), j)
   }

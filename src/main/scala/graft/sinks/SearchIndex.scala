@@ -168,42 +168,28 @@ object SearchIndex {
     * defaults to the mapping's analyzer, so an english-mapped index
     * stems the query too (and both sides carry stop gaps). */
   private def queryAnalyze(meta: Meta, text: String): Seq[String] =
-    queryChainName(meta) match {
-      case "custom" =>
-        graft.functions.CustomChain
-          .analyzeWithPositions(chainOf(meta), text).map(_._1)
-      case "english" =>
-        graft.functions.EnglishAnalysis.analyze(text).toSeq
-      case "french" =>
-        graft.functions.FrenchAnalysis.analyze(text).toSeq
-      case "german" =>
-        graft.functions.GermanAnalysis.analyze(text).toSeq
-      case "spanish" =>
-        graft.functions.SpanishAnalysis.analyze(text).toSeq
-      case "whitespace" =>
-        text.split("\\s+").toSeq.filter(_.nonEmpty)
-      case "keyword" => Seq(text).filter(_.nonEmpty)
-      case _ => graft.functions.TextFunctions.analyzeText(text).toSeq
-    }
+    queryPosTerms(meta, text).map(_._1)
 
   /** [[queryAnalyze]] with head-relative positions for the phrase
-    * probes: english keeps stop-gap offsets (Lucene position
-    * increments); standard/whitespace/keyword are dense. */
+    * probes: the language and custom chains keep stop-gap offsets
+    * (Lucene position increments); standard/whitespace/keyword are
+    * dense. */
   private def queryPosTerms(meta: Meta, text: String): Seq[(String, Int)] =
-    queryChainName(meta) match {
-      case "custom" =>
-        graft.functions.TextFunctions.rebase(graft.functions.CustomChain
-          .analyzeWithPositions(chainOf(meta), text))
-      case "english" => graft.functions.TextFunctions.rebase(
-        graft.functions.EnglishAnalysis.analyzeWithPositions(text))
-      case "french" => graft.functions.TextFunctions.rebase(
-        graft.functions.FrenchAnalysis.analyzeWithPositions(text))
-      case "german" => graft.functions.TextFunctions.rebase(
-        graft.functions.GermanAnalysis.analyzeWithPositions(text))
-      case "spanish" => graft.functions.TextFunctions.rebase(
-        graft.functions.SpanishAnalysis.analyzeWithPositions(text))
-      case _ => queryAnalyze(meta, text).zipWithIndex
-    }
+    chainPosTerms(queryChainName(meta), meta, text)
+
+  private def chainPosTerms(chain: String, meta: Meta,
+                            text: String): Seq[(String, Int)] =
+    graft.functions.TextFunctions.languagePositions(chain, text)
+      .getOrElse(chain match {
+        case "custom" =>
+          graft.functions.TextFunctions.rebase(graft.functions.CustomChain
+            .analyzeWithPositions(chainOf(meta), text))
+        case "whitespace" =>
+          text.split("\\s+").toSeq.filter(_.nonEmpty).zipWithIndex
+        case "keyword" => Seq(text).filter(_.nonEmpty).zipWithIndex
+        case _ => graft.functions.TextFunctions.analyzeText(text).toSeq
+          .zipWithIndex
+      })
 
   /** One stacked pass over `docs`: every field's (dl, tokens) rides one
     * explode tagged `fid` — the same single-scan shape
@@ -221,48 +207,59 @@ object SearchIndex {
                          idCol: String,
                          analyzer: String = "standard",
                          custom: Option[String] = None): DataFrame = {
-    import graft.functions.TextFunctions.{analyzerTokenCount => tokenCount}
-    if (analyzer == "english" || analyzer == "french" ||
-        analyzer == "german" || analyzer == "spanish" ||
-        analyzer == "custom") {
-      def etoks(f: String) = analyzer match {
-        case "english" => graft.functions.ArrayExpressions
-          .englishTokens(coalesce(col(f), lit("")))
-        case "french" => graft.functions.ArrayExpressions
-          .frenchTokens(coalesce(col(f), lit("")))
-        case "spanish" => graft.functions.ArrayExpressions
-          .spanishTokens(coalesce(col(f), lit("")))
-        case "custom" => graft.functions.ArrayExpressions
-          .chainTokens(coalesce(col(f), lit("")), custom.get)
-        case _ => graft.functions.ArrayExpressions
-          .germanTokens(coalesce(col(f), lit("")))
-      }
-      docs.select(col(idCol), explode(array(fields.zipWithIndex.map {
-          case (f, i) => struct(lit(i).as("fid"),
-            size(etoks(f)).as("dl"), etoks(f).as("toks"))
-        }: _*)).as("fs"))
-        .select(col(idCol), col("fs.fid").as("fid"),
-          col("fs.dl").as("dl"), explode(col("fs.toks")).as("t"))
-        .select(col(idCol), col("fid"), col("dl"),
-          col("t.term").as("term"), col("t.pos").as("pos"))
-        .groupBy(col(idCol), col("fid"), col("dl"), col("term"))
-        .agg(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("pos"))
-    } else docs.select(col(idCol), explode(array(fields.zipWithIndex.map {
-        case (f, i) => struct(lit(i).as("fid"),
-          (if (analyzer == "standard") tokenCount(col(f))
-           else size(plainTokens(f, analyzer))).as("dl"),
-          plainTokens(f, analyzer).as("toks"))
-      }: _*)).as("fs"))
-      .select(col(idCol), col("fs.fid").as("fid"), col("fs.dl").as("dl"),
-        posexplode(col("fs.toks")).as(Seq("pos", "term")))
-      .groupBy(col(idCol), col("fid"), col("dl"), col("term"))
+    def fieldStruct(f: String, i: Int, toks: Column) =
+      struct(lit(i).as("fid"), dlOf(f, analyzer, custom).as("dl"),
+        toks.as("toks"))
+    val rows = gappedTokens(fields.head, analyzer, custom) match {
+      case Some(_) =>
+        docs.select(col(idCol), explode(array(fields.zipWithIndex.map {
+            case (f, i) =>
+              fieldStruct(f, i, gappedTokens(f, analyzer, custom).get)
+          }: _*)).as("fs"))
+          .select(col(idCol), col("fs.fid").as("fid"),
+            col("fs.dl").as("dl"), explode(col("fs.toks")).as("t"))
+          .select(col(idCol), col("fid"), col("dl"),
+            col("t.term").as("term"), col("t.pos").as("pos"))
+      case None =>
+        docs.select(col(idCol), explode(array(fields.zipWithIndex.map {
+            case (f, i) => fieldStruct(f, i, plainTokens(f, analyzer))
+          }: _*)).as("fs"))
+          .select(col(idCol), col("fs.fid").as("fid"), col("fs.dl").as("dl"),
+            posexplode(col("fs.toks")).as(Seq("pos", "term")))
+    }
+    rows.groupBy(col(idCol), col("fid"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list(col("pos"))).as("pos"))
   }
 
+  /** Write-time (term, pos) token structs of the stemming and custom
+    * chains, whose filters CONSUME positions; None for the dense
+    * chains ([[plainTokens]]). */
+  private def gappedTokens(f: String, analyzer: String,
+                           custom: Option[String]): Option[Column] = {
+    import graft.functions.ArrayExpressions._
+    val text = coalesce(col(f), lit(""))
+    analyzer match {
+      case "english" => Some(englishTokens(text))
+      case "french"  => Some(frenchTokens(text))
+      case "german"  => Some(germanTokens(text))
+      case "spanish" => Some(spanishTokens(text))
+      case "custom"  => Some(chainTokens(text, custom.get))
+      case _         => None
+    }
+  }
+
+  /** A field's length under `analyzer`: its EMITTED token count (null
+    * for a null field on the dense chains). */
+  private def dlOf(f: String, analyzer: String,
+                   custom: Option[String]): Column =
+    gappedTokens(f, analyzer, custom).map(size(_)).getOrElse(
+      if (analyzer == "standard")
+        graft.functions.TextFunctions.analyzerTokenCount(col(f))
+      else size(plainTokens(f, analyzer)))
+
   /** Write-time token array of the non-stemming analyzers (dense
-    * positions — the gapped chains ride their own expressions).
+    * positions — the gapped chains ride [[gappedTokens]]).
     * `whitespace` splits on whitespace runs, case and punctuation
     * KEPT; `keyword` emits the whole value as one term — an EMPTY
     * value emits none (the query side filters empties the same way,
@@ -293,31 +290,12 @@ object SearchIndex {
   private def doclensOf(docs: DataFrame, fields: Seq[String],
                         idCol: String,
                         analyzer: String = "standard",
-                        custom: Option[String] = None): DataFrame = {
-    import graft.functions.TextFunctions.{analyzerTokenCount => tokenCount}
-    def dlOf(f: String): Column =
-      if (analyzer == "english")
-        size(graft.functions.ArrayExpressions
-          .englishTokens(coalesce(col(f), lit(""))))
-      else if (analyzer == "french")
-        size(graft.functions.ArrayExpressions
-          .frenchTokens(coalesce(col(f), lit(""))))
-      else if (analyzer == "german")
-        size(graft.functions.ArrayExpressions
-          .germanTokens(coalesce(col(f), lit(""))))
-      else if (analyzer == "spanish")
-        size(graft.functions.ArrayExpressions
-          .spanishTokens(coalesce(col(f), lit(""))))
-      else if (analyzer == "custom")
-        size(graft.functions.ArrayExpressions
-          .chainTokens(coalesce(col(f), lit("")), custom.get))
-      else if (analyzer == "standard") tokenCount(col(f))
-      else size(plainTokens(f, analyzer))
+                        custom: Option[String] = None): DataFrame =
     docs.select(col(idCol), explode(array(fields.zipWithIndex.map {
-        case (f, i) => struct(lit(i).as("fid"), dlOf(f).as("dl"))
+        case (f, i) =>
+          struct(lit(i).as("fid"), dlOf(f, analyzer, custom).as("dl"))
       }: _*)).as("fs"))
       .select(col(idCol), col("fs.fid").as("fid"), col("fs.dl").as("dl"))
-  }
 
   /** COMPLETION INPUTS — the index-side dictionary behind the
     * completion suggester (ES keeps every completion input in an
@@ -436,20 +414,13 @@ object SearchIndex {
                           bestFields: Boolean = false,
                           after: Option[(Double, String, String)] = None)
       : DataFrame = {
-    require(branches.nonEmpty, "at least one index to probe")
     // each index analyzes the query with ITS OWN search analyzer
-    val probes = branches.map { case (name, path) =>
-      val meta = readMeta(path)
-      Probe(name, path, meta, queryAnalyze(meta, query).distinct,
-        meta.fields.indices)
-    }
+    val probes = probesOf(branches, Nil, Map.empty)(m =>
+      queryAnalyze(m, query).distinct)
     val clause = Ranking.Clause("score", probes.map(p =>
       Ranking.Leg(p.table, p.terms, p.fids.map((_, 1.0)))), bestFields)
-    Ranking.combine(probeInputs(spark, probes), bm25, Seq(clause))
-      .select(col("table"), col("id").as("document_id"), col("score"))
-      .filter(Search.afterPredicate3(after))
-      .orderBy(col("score").desc, col("document_id"), col("table"))
-      .limit(limit)
+    Search.topAcross(Ranking.combine(probeInputs(spark, probes), bm25,
+      Seq(clause)), limit, after)
   }
 
   /** The (idCol, score) frame of [[ranked]] BEFORE pagination — one
@@ -463,14 +434,13 @@ object SearchIndex {
                    fields: Seq[String] = Nil,
                    bm25: Boolean = true, bestFields: Boolean = false,
                    boosts: Map[String, Double] = Map.empty): DataFrame = {
-    val meta = readMeta(path)
-    val (useFields, fids) = resolveFields(meta, fields)
-    val terms = queryAnalyze(meta, query).distinct
-    val clause = Ranking.single("score", terms, fids.zip(useFields.map(f =>
-      boosts.getOrElse(f, 1.0))), bestFields)
-    Ranking.combine(probeInputs(spark,
-        Seq(Probe("", path, meta, terms, fids))), bm25, Seq(clause))
-      .select(col("id").as(meta.idCol), col("score"))
+    val probes = probesOf(Seq("" -> path), fields, boosts)(m =>
+      queryAnalyze(m, query).distinct)
+    val p = probes.head
+    val clause = Ranking.single("score", p.terms,
+      p.fids.zip(p.boosts.map(_.getOrElse(1.0))), bestFields)
+    Ranking.combine(probeInputs(spark, probes), bm25, Seq(clause))
+      .select(col("id").as(p.meta.idCol), col("score"))
   }
 
   /** `fields` (empty = every indexed field, in index order) and their
@@ -484,10 +454,64 @@ object SearchIndex {
     (useFields, useFields.map(fidOf))
   }
 
-  /** One index branch of a ranked probe: the entity tag, the index,
-    * its analyzed query terms and the fids to read. */
+  /** One index branch of a probe: the entity tag, the index, its
+    * analyzed query terms, the fids to read and each fid's score boost
+    * (None keeps an unboosted count an exact integer). */
   private final case class Probe(table: String, path: String, meta: Meta,
-                                 terms: Seq[String], fids: Seq[Int])
+                                 terms: Seq[String], fids: Seq[Int],
+                                 boosts: Seq[Option[Double]])
+
+  /** One [[Probe]] per (entity, index path) branch over `fields`;
+    * `terms` analyzes the query under each index's own chain. A single
+    * index is a one-entity wildcard whose tag is "". */
+  private def probesOf(branches: Seq[(String, String)], fields: Seq[String],
+                       boosts: Map[String, Double])(
+      terms: Meta => Seq[String]): Seq[Probe] = {
+    require(branches.nonEmpty, "at least one index to probe")
+    branches.map { case (table, path) =>
+      val meta = readMeta(path)
+      val (useFields, fids) = resolveFields(meta, fields)
+      Probe(table, path, meta, terms(meta), fids, useFields.map(boosts.get))
+    }
+  }
+
+  /** Whether the probes span several entities. Only then do their rows
+    * carry the `table` tag ([[graft.serving.Ranking.tagged]]'s rule). */
+  private def tagged(probes: Seq[Probe]): Boolean =
+    probes.map(_.table).distinct.size > 1
+
+  private def tagCols(probes: Seq[Probe]): Seq[String] =
+    if (tagged(probes)) Seq("table") else Nil
+
+  /** Every probe's rows of index table `sub` — pruned to its fids,
+    * shaped by `rows`, tagged with its entity when several — in ONE
+    * union. */
+  private def probeRows(spark: SparkSession, probes: Seq[Probe],
+                        sub: String)(
+      rows: (Probe, DataFrame) => DataFrame): DataFrame = {
+    val multi = tagged(probes)
+    probes.map { p =>
+      val t = indexTable(spark, tableDir(p.path, p.meta), sub)
+      val r = rows(p,
+        if (p.fids == p.meta.fields.indices) t
+        else t.filter(col("fid").isin(p.fids: _*)))
+      if (multi) r.select(lit(p.table).as("table") +: r.columns.map(col): _*)
+      else r
+    }.reduce(_.unionByName(_))
+  }
+
+  private def ofTerms(p: Probe, t: DataFrame): DataFrame =
+    t.filter(col("term").isin(p.terms: _*))
+
+  /** A single index's page of `(table, id, score)` hits: (idCol, score)
+    * after the cursor, top-k in (score desc, id) order. */
+  private def page(scored: DataFrame, idCol: String, limit: Int,
+                   after: Option[(Double, Any)],
+                   afterInclusive: Boolean): DataFrame =
+    scored.select(col("id").as(idCol), col("score"))
+      .filter(Search.afterPredicate(after, col(idCol), afterInclusive))
+      .orderBy(col("score").desc, col(idCol))
+      .limit(limit)
 
   /** The POSTINGS producer of [[graft.serving.Ranking]]'s input
     * contract: each branch's pruned postings rows are the tf rows, and
@@ -500,31 +524,58 @@ object SearchIndex {
     * scan. */
   private def probeInputs(spark: SparkSession,
                           probes: Seq[Probe]): Ranking.Inputs = {
-    // the `table` tag only when several entities (Ranking.tagged)
-    val multi = probes.map(_.table).distinct.size > 1
-    def tag(p: Probe): Seq[Column] =
-      if (multi) Seq(lit(p.table).as("table")) else Nil
-    def read(p: Probe, sub: String): DataFrame = {
-      val t = indexTable(spark, tableDir(p.path, p.meta), sub)
-      if (p.fids == p.meta.fields.indices) t
-      else t.filter(col("fid").isin(p.fids: _*))
-    }
-    def termRows(p: Probe, sub: String): DataFrame =
-      read(p, sub).filter(col("term").isin(p.terms: _*))
-    val tf = probes.map(p => termRows(p, "postings")
-        .select(tag(p) ++ Seq(col(p.meta.idCol).as("id"), col("fid"),
-          col("dl"), col("term"), col("tf")): _*))
-      .reduce(_.unionByName(_))
-    val fieldstats = probes.map(p => read(p, "fieldstats")
-        .select(tag(p) ++ Seq(col("fid"), col("n"),
-          (col("sumdl").cast("double") / col("n")).as("avgdl")): _*))
-      .reduce(_.unionByName(_))
-    val stats = probes.map(p => termRows(p, "termstats")
-        .select(tag(p) ++ Seq(col("fid"), col("term"), col("df_t")): _*))
-      .reduce(_.unionByName(_))
-      .join(broadcast(fieldstats),
-        (if (multi) Seq("table") else Nil) :+ "fid")
+    val tf = probeRows(spark, probes, "postings")((p, t) =>
+      ofTerms(p, t).select(col(p.meta.idCol).as("id"), col("fid"),
+        col("dl"), col("term"), col("tf")))
+    val fieldstats = probeRows(spark, probes, "fieldstats")((_, t) =>
+      t.select(col("fid"), col("n"),
+        (col("sumdl").cast("double") / col("n")).as("avgdl")))
+    val stats = probeRows(spark, probes, "termstats")((p, t) =>
+        ofTerms(p, t).select(col("fid"), col("term"), col("df_t")))
+      .join(broadcast(fieldstats), tagCols(probes) :+ "fid")
     Ranking.Inputs(tf, stats)
+  }
+
+  /** One entity's part of a slot-count probe: its probe (fids and
+    * boosts), its slots, and how many of them must match. */
+  private final case class SlotLeg(probe: Probe, slots: Seq[String],
+                                   need: Int)
+
+  /** The SLOT-COUNT combiner behind [[phrase]], [[minShould]] and
+    * [[fuzzy]]: tf rows `(table, id, fid, slot, tf)` become, per
+    * document, its leg's score — Σ_slot Σ_field boosted tf, slots
+    * outer and fields inner (the scan path's fixed summation order,
+    * each cell an exact int) — kept when at least `need` slots have
+    * some tf. A phrase is one slot whose tf is the phrase count; a
+    * min-should slot is one term; a fuzzy slot is one query term's
+    * vocabulary expansion (need 1). Under positive boosts (the caller
+    * contract) `need = 1` keeps exactly the `score > 0` documents.
+    * Each entity's leg is selected by the `table` group key. Returns
+    * (table, id, score). */
+  private def slotCounts(rows: DataFrame, legs: Seq[SlotLeg]): DataFrame = {
+    val tag = tagCols(legs.map(_.probe))
+    def raw(s: String, fid: Int): Column =
+      coalesce(sum(when(col("slot") === s && col("fid") === fid,
+        col("tf"))), lit(0L)).cast("int")
+    def score(l: SlotLeg): Column = l.slots.map(s =>
+        l.probe.fids.zip(l.probe.boosts).map { case (fid, b) =>
+          val r = raw(s, fid)
+          b.map(r * _).getOrElse(r)
+        }.reduce(_ + _))
+      .reduce(_ + _)
+    def matched(l: SlotLeg): Column = l.slots.map(s =>
+        when(l.probe.fids.map(raw(s, _)).reduce(_ + _) > 0, 1).otherwise(0))
+      .reduce(_ + _) >= l.need
+    def byLeg(f: SlotLeg => Column, none: Column): Column =
+      if (tag.isEmpty) f(legs.head)
+      else legs.foldLeft(none)((acc, l) =>
+        when(col("table") === l.probe.table, f(l)).otherwise(acc))
+    val scored = rows.groupBy((tag :+ "id").map(col): _*)
+      .agg(byLeg(score, lit(0)).as("score"),
+        byLeg(matched, lit(false)).as("_ok"))
+      .filter(col("_ok")).drop("_ok")
+    if (tag.nonEmpty) scored
+    else scored.select(lit(legs.head.probe.table).as("table"), col("*"))
   }
 
   /** PHRASE probe (ES `multi_match` `type: "phrase"` over the index):
@@ -536,136 +587,117 @@ object SearchIndex {
     * bodies by id, like ES fetches `_source` after scoring. `slop > 0`
     * switches to sloppy proximity (adjusted-position span `<= slop`,
     * transposed alignments included) counted by head positions —
-    * [[graft.serving.Search.slopCount]]'s contract, so the sloppy
+    * [[graft.serving.Search.slopPhrase]]'s contract, so the sloppy
     * scan path and this probe also share one oracle.
     *
     * Plan: postings probed with `term IN (...)` pushed down, then per
-    * (doc, field) the sorted position lists intersect shifted-by-slot
-    * (a HOF over query-sized arrays on candidate rows only), then one
-    * per-doc aggregation + TakeOrdered. No corpus scan. */
+    * (doc, field) the [[graft.serving.Positional]] walker over the
+    * sorted position lists (a HOF over query-sized arrays on candidate
+    * rows only), then one per-doc aggregation + TakeOrdered. No corpus
+    * scan. */
   def phrase(spark: SparkSession, path: String, phraseQuery: String,
              fields: Seq[String] = Nil, limit: Int = 100,
              boosts: Map[String, Double] = Map.empty,
              after: Option[(Double, Any)] = None,
              afterInclusive: Boolean = false,
-             slop: Int = 0): DataFrame = {
+             slop: Int = 0): DataFrame =
+    page(phraseScores(spark, Seq("" -> path), phraseQuery, fields, boosts,
+      slop), readMeta(path).idCol, limit, after, afterInclusive)
+
+  /** [[phrase]]'s `(table, id, score)` hits over entity-tagged index
+    * branches — one plan whatever the branch count (the `data_lake_*`
+    * wildcard pages it with [[graft.serving.Search.topAcross]]). */
+  private[graft] def phraseScores(spark: SparkSession,
+                                  branches: Seq[(String, String)],
+                                  phraseQuery: String, fields: Seq[String],
+                                  boosts: Map[String, Double],
+                                  slop: Int): DataFrame = {
     require(slop >= 0, "slop must be >= 0")
-    import graft.serving.Search.afterPredicate
-    val meta = readMeta(path)
-    val dir = tableDir(path, meta)
-    val idCol = meta.idCol
-    val (useFields, fids) = resolveFields(meta, fields)
-    val posTerms = queryPosTerms(meta, phraseQuery)
+    val probes = probesOf(branches, fields, boosts)(m =>
+      queryPosTerms(m, phraseQuery).map(_._1).distinct)
     // an all-stopword phrase against an english index (or a blank one
-    // against whitespace/keyword) analyzes to zero terms: no hits,
-    // not an error (zero_terms_query "none")
-    if (posTerms.isEmpty && queryChainName(meta) != "standard")
-      return indexTable(spark, dir, "postings")
-        .select(col(idCol), lit(0).as("score")).limit(0)
-    require(posTerms.nonEmpty, "empty phrase")
-    val perField =
-      phraseCounts(spark, dir, idCol, fids, posTerms, slop)
-    def fieldScore(i: Int): Column = {
-      val raw = coalesce(sum(when(col("fid") === fids(i), col("_pf"))),
-        lit(0)).cast("int")
-      boosts.get(useFields(i)).map(b => raw * b).getOrElse(raw)
+    // against whitespace/keyword) analyzes to zero terms: no hits from
+    // that index, not an error (zero_terms_query "none")
+    val live = probes.filter(p =>
+      p.terms.nonEmpty || queryChainName(p.meta) == "standard")
+    live.foreach(p => require(p.terms.nonEmpty, "empty phrase"))
+    if (live.isEmpty) {
+      val p = probes.head
+      return indexTable(spark, tableDir(p.path, p.meta), "postings")
+        .select(lit(p.table).as("table"), col(p.meta.idCol).as("id"),
+          lit(0).as("score")).limit(0)
     }
-    perField.groupBy(col(idCol))
-      .agg(useFields.indices.map(fieldScore).reduce(_ + _).as("score"))
-      .filter(col("score") > 0)
-      .filter(afterPredicate(after, col(idCol), afterInclusive))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(limit)
+    val tag = tagCols(live).map(col)
+    val perField = phraseCounts(spark,
+      live.map(p => p -> queryPosTerms(p.meta, phraseQuery)), slop)
+    slotCounts(perField.select(tag ++ Seq(col("id"), col("fid"),
+        lit("").as("slot"), col("_pf").as("tf")): _*),
+      live.map(SlotLeg(_, Seq(""), 1)))
   }
+
+  /** Per (document, field) of every probe: `dl` and the `term → sorted
+    * positions` map `tp` of its query terms — the ONE candidate read
+    * the positional probes (phrase and span) share. Returns
+    * (table, id, fid, tp, dl), `table` only when several entities. */
+  private def positionMaps(spark: SparkSession,
+                           probes: Seq[Probe]): DataFrame =
+    probeRows(spark, probes, "postings")((p, t) =>
+        ofTerms(p, t).select(col(p.meta.idCol).as("id"), col("fid"),
+          col("dl"), col("term"), col("pos")))
+      .groupBy((tagCols(probes) ++ Seq("id", "fid")).map(col): _*)
+      // dl is constant per (id, fid); min() is the deterministic pick
+      .agg(map_from_entries(collect_list(struct(col("term"), col("pos"))))
+        .as("tp"), min(col("dl")).as("dl"))
 
   /** Per-(document, field) phrase counts from the positional postings
     * — the ONE matcher behind [[phrase]] (count scoring) and
     * [[phraseRanked]] (phrase-frequency BM25), so the two probes can
-    * never diverge. Candidates must hold every distinct term
-    * (postings are term-unique per (id, fid), so the row count IS the
-    * distinct-term count); match starts intersect the sorted position
-    * lists — shifted adjacency at slop 0, the shared-budget sloppy
-    * walk otherwise (Search.gappedSlopCount's contract: adjusted-span
-    * <= slop, transposed alignments included, same overflow clamp);
-    * slop-0 self-overlapping phrases ("a a" in "a a a") count greedily
-    * left-to-right, the scan path's replace() semantics. Returns
-    * (idCol, fid, dl, _pf). */
-  /** Pruned positional postings rows for a term/field set — the ONE
-    * candidate-construction read the positional probes (phrase and
-    * span) share, so the layout/pruning predicate lives in a single
-    * place. */
-  private def prunedPostings(spark: SparkSession, dir: String,
-                             idCol: String, fids: Seq[Int],
-                             terms: Seq[String]): DataFrame =
-    indexTable(spark, dir, "postings")
-      .filter(col("term").isin(terms: _*) &&
-        col("fid").isin(fids: _*))
-      .select(col(idCol), col("fid"), col("dl"), col("term"), col("pos"))
-
-  private def phraseCounts(spark: SparkSession, dir: String,
-                           idCol: String, fids: Seq[Int],
-                           posTerms: Seq[(String, Int)],
+    * never diverge. Candidates must hold every distinct term (postings
+    * are term-unique per (id, fid), so the map size IS the
+    * distinct-term count); each term's positions feed
+    * [[graft.serving.Positional.phrase]] — shifted membership at slop
+    * 0, the shared-budget walk otherwise (same-term slots distinct,
+    * transposed alignments included); slop-0 self-overlapping dense
+    * phrases ("a a" in "a a a") count greedily left-to-right, the scan
+    * path's replace() semantics. Probes whose phrase analyzes alike
+    * share one expression; otherwise the `table` tag selects each
+    * one's. Returns (table, id, fid, dl, _pf), `table` only when
+    * several entities. */
+  private def phraseCounts(spark: SparkSession,
+                           legs: Seq[(Probe, Seq[(String, Int)])],
                            slop: Int): DataFrame = {
-    val terms = posTerms.map(_._1)
-    val distinctTerms = terms.distinct
-    val k = terms.size
-    // phrase span in positions — the greedy non-overlap stride; for a
-    // dense query (offset_i == i) this is the old term count k
-    val width = posTerms.last._2 + 1
-    val p = prunedPostings(spark, dir, idCol, fids, distinctTerms)
-    // dl is constant per (id, fid); min() is the deterministic pick
-    val candidates = p.groupBy(col(idCol), col("fid"))
-      .agg(map_from_entries(collect_list(struct(col("term"), col("pos"))))
-        .as("tp"), count(lit(1)).as("_nt"), min(col("dl")).as("dl"))
-      .filter(col("_nt") === distinctTerms.size)
-    val headPos = element_at(col("tp"), lit(terms.head))
-    val starts =
-      if (k == 1) headPos
-      else if (slop == 0) filter(headPos, s => posTerms.drop(1).map {
-        case (t, off) =>
-          array_contains(element_at(col("tp"), lit(t)), s + lit(off))
-      }.reduce(_ && _))
-      else {
-        // Search.gappedSlopCount's shared-budget walk (the adjusted
-        // positions pp - offset_i must span <= slop — Lucene's
-        // matchLength), order-free like Lucene's SloppyPhraseMatcher:
-        // transposed alignments match when their span fits (the span
-        // arithmetic alone prices any out-of-order pair >= 2, so slop
-        // 0/1 stay in-order for free). Same-term slots must take
-        // distinct positions (Lucene's repeating-terms rule; distinct
-        // terms can't collide — one token per position).
-        val sl = math.min(slop, 1 << 24)
-        def rest(i: Int, taken: List[(String, Column)],
-                 lo: Column, hi: Column): Column =
-          if (i == k) lit(true)
-          else org.apache.spark.sql.functions.exists(
-            element_at(col("tp"), lit(terms(i))), pp => {
-              val adj = pp - lit(posTerms(i)._2)
-              taken.collect { case (t, q) if t == terms(i) =>
-                pp =!= q }.foldLeft(
-                adj >= hi - lit(sl) && adj <= lo + lit(sl))(_ && _) &&
-                rest(i + 1, (terms(i), pp) :: taken,
-                  least(lo, adj), greatest(hi, adj))
-            })
-        filter(headPos, s => rest(1, List((terms.head, s)), s, s))
+    def counts(posTerms: Seq[(String, Int)]): (Column, Column) = {
+      val terms = posTerms.map(_._1)
+      val k = terms.size
+      val starts = graft.serving.Positional.phrase(
+        terms.map(t => graft.serving.Positional.postings(col("tp"), Seq(t))),
+        posTerms.map(_._2), slop, graft.serving.Positional.sameTerm(terms))
+      // pf counting must mirror each route's SCAN twin exactly: every
+      // gapped or sloppy twin counts DISTINCT HEAD positions —
+      // overlapping matches each count — so only the dense slop-0
+      // repeated-term case (whose twin is substrCount's
+      // non-overlapping forward scan) takes the greedy stride, the
+      // phrase's width in positions
+      val gapless = posTerms.zipWithIndex.forall { case ((_, o), i) => o == i }
+      val cnt =
+        if (slop > 0 || terms.distinct.size == k || !gapless) size(starts)
+        else graft.serving.Positional.nonOverlapping(starts,
+          posTerms.last._2 + 1)
+      (size(col("tp")) === terms.distinct.size, cnt)
+    }
+    val phrases = legs.map(_._2).distinct
+    val (cand, cnt) =
+      if (phrases.size == 1) counts(phrases.head)
+      else phrases.foldLeft((lit(false), lit(0))) { case ((ca, cn), pt) =>
+        val in = col("table").isin(legs.collect {
+          case (p, `pt`) => p.table }: _*)
+        val (c, n) = counts(pt)
+        (when(in, c).otherwise(ca), when(in, n).otherwise(cn))
       }
-    // pf counting must mirror each route's SCAN twin exactly: every
-    // gapped or sloppy twin (gappedPhraseCount / gappedSlopCount /
-    // slopCount) counts DISTINCT HEAD positions — overlapping matches
-    // each count — so only the dense slop-0 repeated-term case (whose
-    // twin is substrCount's non-overlapping forward scan) takes the
-    // greedy stride fold
-    val gapless = posTerms.zipWithIndex.forall { case ((_, o), i) => o == i }
-    val cnt =
-      if (slop > 0 || distinctTerms.size == k || !gapless) size(starts)
-      else aggregate(starts,
-        struct(lit(0).as("c"), lit(-1).as("free")),
-        (acc, s) => when(s >= acc.getField("free"),
-            struct((acc.getField("c") + lit(1)).as("c"),
-              (s + lit(width)).as("free")))
-          .otherwise(acc),
-        acc => acc.getField("c"))
-    candidates.select(col(idCol), col("fid"), col("dl"), cnt.as("_pf"))
+    val probes = legs.map(_._1)
+    positionMaps(spark, probes).filter(cand)
+      .select((tagCols(probes) ++ Seq("id", "fid", "dl")).map(col) :+
+        cnt.as("_pf"): _*)
   }
 
   /** PHRASE-FREQUENCY BM25 probe — the index-side twin of the DSL's
@@ -703,21 +735,8 @@ object SearchIndex {
         queryChainName(meta)
       else analyzer
     val posTerms: Seq[(String, Int)] = effAnalyzer match {
-      case "standard" =>
-        graft.functions.TextFunctions.analyzeText(phraseQuery)
-          .zipWithIndex.toSeq
-      case "english" =>
-        graft.functions.TextFunctions.rebase(graft.functions
-          .EnglishAnalysis.analyzeWithPositions(phraseQuery))
-      case "french" =>
-        graft.functions.TextFunctions.rebase(graft.functions
-          .FrenchAnalysis.analyzeWithPositions(phraseQuery))
-      case "german" =>
-        graft.functions.TextFunctions.rebase(graft.functions
-          .GermanAnalysis.analyzeWithPositions(phraseQuery))
-      case "spanish" =>
-        graft.functions.TextFunctions.rebase(graft.functions
-          .SpanishAnalysis.analyzeWithPositions(phraseQuery))
+      case "standard" | "english" | "french" | "german" | "spanish" =>
+        chainPosTerms(effAnalyzer, meta, phraseQuery)
       case "custom" =>
         queryPosTerms(meta, phraseQuery)
       case "whitespace" | "keyword"
@@ -743,7 +762,9 @@ object SearchIndex {
     require(posTerms.nonEmpty, "empty phrase")
     val terms = posTerms.map(_._1)
     val distinctTerms = terms.distinct
-    val perField = phraseCounts(spark, dir, idCol, fids, posTerms, slop)
+    val perField = phraseCounts(spark, Seq(Probe("", path, meta,
+        distinctTerms, fids, fids.map(_ => None)) -> posTerms), slop)
+      .withColumnRenamed("id", idCol)
     val stats = indexTable(spark, dir, "fieldstats")
       .filter(col("fid").isin(fids: _*))
       .select(col("fid"), col("n"),
@@ -781,66 +802,42 @@ object SearchIndex {
   }
 
   /** SPAN-NEAR probe — the index-side twin of the DSL span family's
-    * scan matcher ([[graft.serving.Search.spanNearCount]] /
-    * `spanPairCount`): each slot is a token SET (a `span_term` or
-    * `span_or` leaf), matched over the positional postings with the
-    * SAME window arithmetic (ordered: head positions admitting an
-    * in-order completion with gap sum <= slop; unordered pairs:
-    * |p − q| − 1 <= slop), span-frequency scored like the scan path's
-    * occurrence-count convention. IO is query-term-sized postings
-    * rows only — no corpus scan; bit-identical hits and scores to the
-    * scan path (one oracle, two plans — [[SearchIndexSpec]] pins it). */
+    * scan matcher: each slot is a token SET (a `span_term` or
+    * `span_or` leaf) whose positions are the postings producer's
+    * union of its terms' lists, walked by the SAME
+    * [[graft.serving.Positional]] walkers the scan path runs (ordered:
+    * [[graft.serving.Positional.near]]; unordered pairs:
+    * [[graft.serving.Positional.pair]]), span-frequency scored like the
+    * scan path's occurrence-count convention. IO is query-term-sized
+    * postings rows only — no corpus scan; bit-identical hits and scores
+    * to the scan path (one oracle, two plans — [[SearchIndexSpec]] pins
+    * it). */
   def spanRanked(spark: SparkSession, path: String,
                  slots: Seq[Seq[String]], slop: Int,
                  inOrder: Boolean,
                  fields: Seq[String] = Nil,
                  limit: Int = 100): DataFrame = {
+    import graft.serving.Positional
     require(slots.nonEmpty && slots.forall(_.nonEmpty),
       "empty span slots")
     require(slop >= 0, "slop must be >= 0")
     require(inOrder || slots.size <= 2,
       "unordered span supports two slots (in_order composes any number)")
-    val meta = readMeta(path)
-    val dir = tableDir(path, meta)
-    val idCol = meta.idCol
-    val (useFields, fids) = resolveFields(meta, fields)
-    val allTerms = slots.flatten.distinct.map(_.toLowerCase)
     val lowSlots = slots.map(_.map(_.toLowerCase).distinct)
-    val cand = prunedPostings(spark, dir, idCol, fids, allTerms)
-      .groupBy(col(idCol), col("fid"))
-      .agg(map_from_entries(
-        collect_list(struct(col("term"), col("pos")))).as("tp"))
-    // per-slot positions: the sorted distinct union of the slot's
-    // terms' position lists (a position holds ONE token, so the union
-    // is exactly the scan path's posOf set)
-    def posOf(i: Int): Column = array_sort(array_distinct(flatten(
-      array(lowSlots(i).map(t =>
-        coalesce(element_at(col("tp"), lit(t)),
-          array().cast("array<int>"))): _*))))
-    val present = lowSlots.indices.map(i => size(posOf(i)) > 0)
-      .reduce(_ && _)
-    val sl = math.min(slop, 1 << 24)
+    val probes = probesOf(Seq("" -> path), fields, Map.empty)(_ =>
+      lowSlots.flatten.distinct)
+    val pos = lowSlots.map(Positional.postings(col("tp"), _))
     val cnt: Column =
-      if (lowSlots.size == 1) size(posOf(0))
-      else if (inOrder) {
-        def rest(i: Int, prev: Column, first: Column): Column =
-          if (i == lowSlots.size) lit(true)
-          else org.apache.spark.sql.functions.exists(posOf(i), pp =>
-            pp > prev && pp <= first + lit(i + sl) &&
-              rest(i + 1, pp, first))
-        size(filter(posOf(0), s => rest(1, s, s)))
-      } else
-        size(filter(posOf(0), pp =>
-          org.apache.spark.sql.functions.exists(posOf(1), qq =>
-            qq =!= pp &&
-              greatest(pp, qq) - least(pp, qq) - 1 <= lit(sl))))
-    cand.filter(present)
-      .select(col(idCol), cnt.as("_pf"))
-      .groupBy(col(idCol))
+      if (pos.size == 1) size(pos.head)
+      else if (inOrder) size(Positional.near(pos, slop))
+      else size(Positional.pair(pos(0), pos(1), slop))
+    val scored = positionMaps(spark, probes)
+      .filter(pos.map(size(_) > 0).reduce(_ && _))
+      .select(col("id"), cnt.as("_pf"))
+      .groupBy(col("id"))
       .agg(sum(col("_pf")).cast("double").as("score"))
       .filter(col("score") > 0)
-      .orderBy(col("score").desc, col(idCol))
-      .limit(limit)
+    page(scored, probes.head.meta.idCol, limit, None, afterInclusive = false)
   }
 
   /** `minimum_should_match` / `operator: "and"` probe: at least
@@ -849,45 +846,35 @@ object SearchIndex {
     * [[graft.serving.Search.multiFieldMinShould]]); scored by token-
     * exact occurrence counts, boost-weighted per field, match predicate
     * unweighted. Hash-identical to the scan path over the corpus; one
-    * pruned postings probe + one per-doc aggregation. Returns
-    * (idCol, score). */
+    * pruned postings probe + one per-doc aggregation ([[slotCounts]],
+    * one slot per term). Returns (idCol, score). */
   def minShould(spark: SparkSession, path: String, query: String,
                 fields: Seq[String] = Nil, minMatch: Int = Int.MaxValue,
                 limit: Int = 100,
                 boosts: Map[String, Double] = Map.empty,
                 after: Option[(Double, Any)] = None,
-                afterInclusive: Boolean = false): DataFrame = {
-    import graft.serving.Search.afterPredicate
-    val meta = readMeta(path)
-    val dir = tableDir(path, meta)
-    val idCol = meta.idCol
-    val (useFields, fids) = resolveFields(meta, fields)
-    val terms = queryAnalyze(meta, query).distinct
-    require(terms.nonEmpty, "empty query")
-    val need = math.max(1, math.min(minMatch, terms.size))
-    val p = indexTable(spark, dir, "postings")
-      .filter(col("term").isin(terms: _*) && col("fid").isin(fids: _*))
-      .select(col(idCol), col("fid"), col("term"), col("tf"))
-    // tf per (term, field) as conditional aggregates — the index-side
-    // mirror of the scan path's per-term/per-field substrCount grid,
-    // summed in the identical fixed order (terms outer, fields inner)
-    def raw(t: String, i: Int): Column =
-      coalesce(sum(when(col("term") === t && col("fid") === fids(i),
-        col("tf"))), lit(0L)).cast("int")
-    val score = terms.map(t => useFields.indices.map { i =>
-        val r = raw(t, i)
-        boosts.get(useFields(i)).map(b => r * b).getOrElse(r)
-      }.reduce(_ + _)).reduce(_ + _)
-    val matched = terms.map(t =>
-        when(useFields.indices.map(raw(t, _)).reduce(_ + _) > 0, 1)
-          .otherwise(0))
-      .reduce(_ + _)
-    p.groupBy(col(idCol))
-      .agg(score.as("score"), matched.as("_matched"))
-      .filter(col("_matched") >= need).drop("_matched")
-      .filter(afterPredicate(after, col(idCol), afterInclusive))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(limit)
+                afterInclusive: Boolean = false): DataFrame =
+    page(minShouldScores(spark, Seq("" -> path), query, fields, minMatch,
+      boosts), readMeta(path).idCol, limit, after, afterInclusive)
+
+  /** [[minShould]]'s `(table, id, score)` hits over entity-tagged
+    * index branches. The match predicate is per entity (k of ITS
+    * analyzed terms within ITS fields), exactly what ES computes when
+    * a multi_match with operator=and spans indexes. */
+  private[graft] def minShouldScores(spark: SparkSession,
+                                     branches: Seq[(String, String)],
+                                     query: String, fields: Seq[String],
+                                     minMatch: Int,
+                                     boosts: Map[String, Double])
+      : DataFrame = {
+    val probes = probesOf(branches, fields, boosts)(m =>
+      queryAnalyze(m, query).distinct)
+    probes.foreach(p => require(p.terms.nonEmpty, "empty query"))
+    slotCounts(probeRows(spark, probes, "postings")((p, t) =>
+        ofTerms(p, t).select(col(p.meta.idCol).as("id"), col("fid"),
+          col("term").as("slot"), col("tf"))),
+      probes.map(p => SlotLeg(p, p.terms,
+        math.max(1, math.min(minMatch, p.terms.size)))))
   }
 
   /** TERM-SUGGESTER probe (ES suggest): candidates come from the
@@ -917,6 +904,7 @@ object SearchIndex {
       mode, byFrequency)
   }
 
+
   /** FUZZY probe (ES `match` `fuzziness`): each query term expands
     * against the index VOCABULARY (`termstats` — per-field distinct
     * terms, orders of magnitude smaller than the corpus) by Levenshtein
@@ -925,8 +913,9 @@ object SearchIndex {
     * fuzzy automaton does: candidate terms come from the dictionary,
     * never from re-scanning documents. Scored like
     * [[graft.serving.Search.multiFieldFuzzy]] (total fuzzy-matching
-    * token count, OR across terms) — hash-identical, one oracle.
-    * Returns (idCol, score). */
+    * token count, OR across terms: [[slotCounts]] with one slot per
+    * query term's expansion) — hash-identical, one oracle. Returns
+    * (idCol, score). */
   def fuzzy(spark: SparkSession, path: String, query: String,
             fields: Seq[String] = Nil, fuzziness: String = "AUTO",
             limit: Int = 100,
@@ -935,22 +924,34 @@ object SearchIndex {
             afterInclusive: Boolean = false,
             prefixLength: Int = 0,
             maxExpansions: Option[Int] = None,
-            transpositions: Boolean = true): DataFrame = {
-    import graft.serving.Search.{afterPredicate, editDistance, fuzzyEdits}
+            transpositions: Boolean = true): DataFrame =
+    page(fuzzyScores(spark, Seq("" -> path), query, fields, fuzziness,
+        boosts, prefixLength, maxExpansions, transpositions),
+      readMeta(path).idCol, limit, after, afterInclusive)
+
+  /** [[fuzzy]]'s `(table, id, score)` hits over entity-tagged index
+    * branches — each entity's vocabulary expands the query terms
+    * independently, one plan whatever the branch count. */
+  private[graft] def fuzzyScores(spark: SparkSession,
+                                 branches: Seq[(String, String)],
+                                 query: String, fields: Seq[String],
+                                 fuzziness: String,
+                                 boosts: Map[String, Double],
+                                 prefixLength: Int,
+                                 maxExpansions: Option[Int],
+                                 transpositions: Boolean): DataFrame = {
+    import graft.serving.Search.{editDistance, fuzzyEdits}
     require(prefixLength >= 0, "prefix_length must be >= 0")
     maxExpansions.foreach(n => require(
       n > 0 && n <= graft.serving.Search.MaxExpansionsCeiling,
       s"max_expansions must be 1..${graft.serving.Search.MaxExpansionsCeiling}"))
-    val meta = readMeta(path)
-    val dir = tableDir(path, meta)
-    val idCol = meta.idCol
-    val (useFields, fids) = resolveFields(meta, fields)
     val terms =
       graft.functions.TextFunctions.analyzeText(query).distinct
     require(terms.nonEmpty, "empty query")
     val edits = terms.map(t => fuzzyEdits(t, fuzziness).getOrElse(
       throw new IllegalArgumentException(
         s"invalid fuzziness '$fuzziness'")))
+    val probes = probesOf(branches, fields, boosts)(_ => terms)
     // vocabulary expansion: one scan of the (tiny) termstats table per
     // query term, tagged with the query slot it expands. prefix_length
     // narrows the dictionary probe (the first `prefixLength` chars are
@@ -959,47 +960,35 @@ object SearchIndex {
     // (edit distance asc, term asc) ACROSS the searched fields — the
     // same capped set Search.fuzzyExpansionSets derives from the
     // corpus, so both paths keep sharing one oracle.
-    val vocab = indexTable(spark, dir, "termstats")
-      .filter(col("fid").isin(fids: _*))
-      .select(col("fid"), col("term"))
-    val cands = terms.zipWithIndex.map { case (t, qi) =>
-        val p = t.take(prefixLength)
+    val cands = probeRows(spark, probes, "termstats") { (_, t) =>
+      val vocab = t.select(col("fid"), col("term"))
+      terms.zip(edits).map { case (q, e) =>
+        val p = q.take(prefixLength)
         val pre = if (p.isEmpty) vocab
           else vocab.filter(col("term").startsWith(p))
-        val v = pre.filter(
-          editDistance(col("term"), t, transpositions) <= edits(qi))
+        val v = pre.filter(editDistance(col("term"), q, transpositions) <= e)
         val capped = maxExpansions match {
           case None => v
           case Some(n) =>
-            val e = v.select(col("term")).distinct()
-              .withColumn("_d", editDistance(col("term"), t,
+            val first = v.select(col("term")).distinct()
+              .withColumn("_d", editDistance(col("term"), q,
                 transpositions))
               .orderBy(col("_d").asc, col("term").asc)
               .limit(n).select("term")
-            v.join(e, Seq("term"))
+            v.join(first, Seq("term"))
         }
-        capped.select(col("fid"), col("term"), lit(qi).as("qi"))
+        capped.select(col("fid"), col("term"), lit(q).as("slot"))
       }.reduce(_.unionByName(_))
-    val p = indexTable(spark, dir, "postings")
-      .filter(col("fid").isin(fids: _*))
-      .select(col(idCol), col("fid"), col("term"), col("tf"))
-    // same fixed summation order as the scan path: terms outer, fields
-    // inner; a token within distance of TWO query terms counts in both
-    // (the candidate union carries one row per (slot, term))
-    def raw(qi: Int, i: Int): Column =
-      coalesce(sum(when(col("qi") === qi && col("fid") === fids(i),
-        col("tf"))), lit(0L)).cast("int")
-    val score = terms.indices.map(qi => useFields.indices.map { i =>
-        val r = raw(qi, i)
-        boosts.get(useFields(i)).map(b => r * b).getOrElse(r)
-      }.reduce(_ + _)).reduce(_ + _)
-    p.join(broadcast(cands), Seq("fid", "term"))
-      .groupBy(col(idCol))
-      .agg(score.as("score"))
-      .filter(col("score") > 0)
-      .filter(afterPredicate(after, col(idCol), afterInclusive))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(limit)
+    }
+    // a token within distance of TWO query terms counts in both (the
+    // candidate union carries one row per (slot, term))
+    val tag = tagCols(probes)
+    slotCounts(probeRows(spark, probes, "postings")((p, t) =>
+        t.select(col(p.meta.idCol).as("id"), col("fid"), col("term"),
+          col("tf")))
+        .join(broadcast(cands), tag ++ Seq("fid", "term"))
+        .select((tag ++ Seq("id", "fid", "slot", "tf")).map(col): _*),
+      probes.map(SlotLeg(_, terms, 1)))
   }
 
   /** MORE_LIKE_THIS statistics probe: (corpus doc count, per-term doc

@@ -431,11 +431,115 @@ class ExpressionPropertiesSpec extends SparkSpec {
     }
     val df = texts.toDF("text")
     val cols = patterns.zipWithIndex.map { case (p, i) =>
-      graft.serving.Search.gappedPhraseCount(col("text"), p).as(s"c$i")
+      graft.serving.Positional.termPhrase(col("text"), p, 0).as(s"c$i")
     }
     val rows = df.select(col("text") +: cols: _*).collect()
     for (r <- rows; (p, i) <- patterns.zipWithIndex)
       assert(r.getInt(i + 1) === model(r.getString(0), p),
         s"pattern $p on '${r.getString(0)}'")
+  }
+
+  test("Positional walkers ≡ plain-Scala models on generated corpora, " +
+    "through both producers: the sloppy phrase (slop 1-3, transposed " +
+    "and repeated terms), ordered near and the unordered pair") {
+    import graft.serving.Positional
+    val tokGen = Gen.oneOf("a", "b", "c", "ab")
+    val textGen: Gen[String] = Gen.choose(0, 10).flatMap(n =>
+      Gen.listOfN(n, tokGen).map(_.mkString(" ")))
+    val texts = samples(textGen).take(80)
+    // sloppy phrases: dense term lists (repeats occur with 4 tokens)
+    // plus a pinned transposition and a pinned repeat
+    val phrases: Seq[(Seq[String], Int)] =
+      samples(for {
+        k <- Gen.choose(2, 3)
+        terms <- Gen.listOfN(k, tokGen)
+        slop <- Gen.choose(1, 3)
+      } yield (terms.toSeq, slop)).take(5) ++
+        Seq((Seq("a", "b"), 2), (Seq("a", "a"), 1), (Seq("a", "b", "a"), 3))
+    val slotGen: Gen[Seq[String]] =
+      Gen.oneOf(Seq("a"), Seq("b"), Seq("c"), Seq("a", "ab"), Seq("b", "c"))
+    val nears: Seq[(Seq[Seq[String]], Int)] = samples(for {
+      k <- Gen.choose(2, 3)
+      slots <- Gen.listOfN(k, slotGen)
+      slop <- Gen.choose(0, 2)
+    } yield (slots.toSeq, slop)).take(5)
+    // pinned: slots sharing a token must not pair a position with itself
+    val pairs: Seq[(Seq[String], Seq[String], Int)] = samples(for {
+      a <- slotGen; b <- slotGen; slop <- Gen.choose(0, 2)
+    } yield (a, b, slop)).take(5) ++
+      Seq((Seq("a"), Seq("a"), 0), (Seq("b", "c"), Seq("c"), 1))
+
+    def posOf(toks: Seq[String], set: Seq[String]): Seq[Int] =
+      toks.indices.filter(i => set.contains(toks(i)))
+    // every head position with SOME assignment of the other slots to
+    // positions of their terms: same-term slots distinct, adjusted
+    // positions (p_k - k) spanning at most `slop`
+    def phraseModel(toks: Seq[String], terms: Seq[String], slop: Int): Int =
+      posOf(toks, Seq(terms.head)).count { p0 =>
+        def place(k: Int, taken: List[(String, Int)]): Boolean =
+          if (k == terms.size) {
+            val adj = taken.map { case (_, p) => p } .reverse.zipWithIndex
+              .map { case (p, i) => p - i }
+            adj.max - adj.min <= slop
+          } else posOf(toks, Seq(terms(k))).exists(p =>
+            !taken.exists { case (t, q) => t == terms(k) && q == p } &&
+              place(k + 1, (terms(k), p) :: taken))
+        place(1, List((terms.head, p0)))
+      }
+    // every head position starting a strictly increasing placement
+    // whose last position interleaves at most `slop` tokens
+    def nearModel(toks: Seq[String], slots: Seq[Seq[String]],
+                  slop: Int): Int =
+      posOf(toks, slots.head).count { p1 =>
+        def place(k: Int, prev: Int): Boolean =
+          if (k == slots.size) prev - p1 - (slots.size - 1) <= slop
+          else posOf(toks, slots(k)).exists(p => p > prev && place(k + 1, p))
+        place(1, p1)
+      }
+    def pairModel(toks: Seq[String], a: Seq[String], b: Seq[String],
+                  slop: Int): Int =
+      posOf(toks, a).count(p => posOf(toks, b).exists(q =>
+        q != p && math.abs(p - q) - 1 <= slop))
+
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-walk-")
+      .toString
+    graft.sinks.SearchIndex.build(docs, Seq("text"), "doc_id", path)
+    val tp = spark.read.parquet(
+        s"$path/g${graft.sinks.SearchIndex.readMeta(path).gen}/postings")
+      .groupBy(col("doc_id"))
+      .agg(map_from_entries(collect_list(struct(col("term"), col("pos"))))
+        .as("tp"))
+    val toks = TextFunctions.analyzerTokens(col("text"))
+    val producers: Seq[(String, Seq[String] => org.apache.spark.sql.Column)] =
+      Seq("tokens" -> (set =>
+          Positional.positions(toks, _.isInCollection(set))),
+        "postings" -> (set => Positional.postings(col("tp"), set)))
+    for ((name, slot) <- producers) {
+      val cols = phrases.map { case (terms, slop) =>
+          Positional.count(Positional.phrase(terms.map(t => slot(Seq(t))),
+            terms.indices, slop, Positional.sameTerm(terms)))
+        } ++ nears.map { case (slots, slop) =>
+          Positional.count(Positional.near(slots.map(slot), slop))
+        } ++ pairs.map { case (a, b, slop) =>
+          Positional.count(Positional.pair(slot(a), slot(b), slop))
+        }
+      val rows = docs.join(tp, Seq("doc_id"), "left")
+        .select(col("text") +: cols.zipWithIndex.map { case (c, i) =>
+          c.as(s"c$i") }: _*).collect()
+      for (r <- rows) {
+        val ts = r.getString(0).split(" ").filter(_.nonEmpty).toSeq
+        val models = phrases.map { case (terms, slop) =>
+            phraseModel(ts, terms, slop) } ++
+          nears.map { case (slots, slop) => nearModel(ts, slots, slop) } ++
+          pairs.map { case (a, b, slop) => pairModel(ts, a, b, slop) }
+        val labels = phrases.map(p => s"phrase $p") ++
+          nears.map(n => s"near $n") ++ pairs.map(p => s"pair $p")
+        for (i <- models.indices)
+          assert(r.getInt(i + 1) === models(i),
+            s"$name ${labels(i)} on '${r.getString(0)}'")
+      }
+    }
   }
 }

@@ -1991,4 +1991,67 @@ class HttpApiSpec extends SparkSpec
       inner.body().contains("options"), inner.body())
     assert(get("/search/scripts/strict1").statusCode() == 404)
   }
+
+  test("POST /search answers 400 naming a non-integer slop, " +
+    "prefix_length or max_expansions, on one index and on the " +
+    "wildcard — never a silent 0") {
+    val cases = Seq(
+      "slop" -> """"type": "phrase", "slop": "two"""",
+      "slop" -> """"type": "phrase", "slop": 1.5""",
+      "prefix_length" -> """"fuzziness": 1, "prefix_length": "x"""",
+      "max_expansions" -> """"fuzziness": 1, "max_expansions": "lots"""")
+    for ((knob, knobs) <- cases; index <- Seq("documents", "*")) {
+      val r = post("/search",
+        s"""{"search_term": "the window", "index": "$index", $knobs}""")
+      assert(r.statusCode() == 400, s"$index $knobs: ${r.body().take(300)}")
+      assert(r.body().contains(knob), r.body())
+    }
+    // integers, also as JSON strings, still serve
+    for (slop <- Seq("2", "\"2\""))
+      assert(post("/search",
+        s"""{"search_term": "the window", "index": "documents",
+           | "type": "phrase", "slop": $slop}""".stripMargin)
+        .statusCode() == 200)
+  }
+
+  test("a request body declared past 100 MB is refused 413 with a JSON " +
+    "error before it is read") {
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setSoTimeout(30000)
+      val out = sock.getOutputStream
+      out.write(("POST /search HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        "Content-Type: application/json\r\n" +
+        "Content-Length: 104857601\r\n\r\n{}").getBytes("UTF-8"))
+      out.flush()
+      val in = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
+      val status = in.readLine()
+      assert(status != null && status.split(" ")(1) == "413", status)
+      val headers = Iterator.continually(in.readLine())
+        .takeWhile(l => l != null && l.nonEmpty).toSeq
+      val len = headers.collectFirst {
+        case h if h.toLowerCase.startsWith("content-length:") =>
+          h.drop("content-length:".length).trim.toInt
+      }.getOrElse(fail(s"no Content-Length in $headers"))
+      val body = new String(Array.fill(len)(in.read().toChar))
+      assert(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(body).hasNonNull("error"), body)
+    } finally sock.close()
+    // the server keeps serving
+    assert(get("/health").statusCode() == 200)
+  }
+
+  test("a chunked body is read to one byte past the cap, no further") {
+    var consumed = 0L
+    def stream(n: Long) = new java.io.InputStream {
+      private var left = n
+      def read(): Int =
+        if (left == 0) -1 else { left -= 1; consumed += 1; 1 }
+    }
+    assert(HttpApi.readCapped(stream(10), 10).length == 10)
+    consumed = 0
+    intercept[HttpApi.BodyTooLarge](HttpApi.readCapped(stream(1000), 10))
+    assert(consumed == 11, s"read $consumed bytes")
+  }
 }

@@ -849,7 +849,7 @@ class SearchIndexSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
     // bit-identical hits AND scores across slop tiers and stem
     // counts. The overlapping doc 1 is the counting-model pin: the
-    // scan twin (gappedPhraseCount / gappedSlopCount) counts DISTINCT
+    // scan twin (Positional.phrase) counts DISTINCT
     // HEADS, so pf = 2 there — a greedy non-overlap fold on the index
     // side would score it differently and fail this parity.
     for (slop <- Seq(0, 1, 2, 3);
@@ -941,16 +941,19 @@ class SearchIndexSpec extends SparkSpec {
     "sets, unordered pairs; validation") {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions.{col, lit}
+    import graft.functions.TextFunctions
+    import graft.serving.Positional
     val path = tmp("graft-idx-span-")
     SearchIndex.build(docs, Seq("text"), "doc_id", path)
     // ordered: the -> (window|batch), slop 1 — scan-path counts via
-    // Search.spanNearCount over the same corpus
+    // Positional.near over the same corpus
     val slots: Seq[Column => Column] = Seq(
       (x: Column) => x === lit("the"),
       (x: Column) => x.isInCollection(Seq("window", "batch")))
     val scan = docs
       .select(col("doc_id"),
-        Search.spanNearCount(col("text"), slots, 1).as("c"))
+        Positional.count(Positional.near(slots.map(Positional.positions(
+          TextFunctions.analyzerTokens(col("text")), _)), 1)).as("c"))
       .filter(col("c") > 0)
       .select(col("doc_id"), col("c").cast("double").as("score"))
     val probe = SearchIndex.spanRanked(spark, path,
@@ -960,9 +963,11 @@ class SearchIndexSpec extends SparkSpec {
     // unordered pair: window/batch adjacency either order
     val scanU = docs
       .select(col("doc_id"),
-        Search.spanPairCount(col("text"),
-          (x: Column) => x === lit("window"),
-          (x: Column) => x === lit("batch"), 0).as("c"))
+        Positional.count(Positional.pair(
+          Positional.positions(TextFunctions.analyzerTokens(col("text")),
+            (x: Column) => x === lit("window")),
+          Positional.positions(TextFunctions.analyzerTokens(col("text")),
+            (x: Column) => x === lit("batch")), 0)).as("c"))
       .filter(col("c") > 0)
       .select(col("doc_id"), col("c").cast("double").as("score"))
     val probeU = SearchIndex.spanRanked(spark, path,

@@ -10,8 +10,14 @@ Scala library does not depend on this.
 compares two graft.Verify dumps query by query, row for row after
 sorting, with NO float rounding (a last-ulp change is a difference) —
 the identity proof for a refactor that must not change any result.
-Exits 1 on any difference or on a query present in only one dump."""
-import sys, json, glob, os
+Exits 1 on any difference or on a query present in only one dump.
+
+       python3 tools/check.py plans <explainA> <explainB>
+reads two graft.ExplainDump directories (one formatted plan per query)
+and prints, per query, the count of each plan node in PLAN_NODES, A vs
+B. Exits 1 when any count grew (or a query is in only one directory):
+the plan-shape gate for a refactor that must not add work."""
+import sys, json, glob, os, re
 import pandas as pd
 import numpy as np
 
@@ -148,9 +154,58 @@ def bench_fallback(repo_dir: str = ".") -> int:
     return 0
 
 
+PLAN_NODES = ["Exchange", "BroadcastExchange", "FileScan", "Window",
+              "HashAggregate", "TakeOrderedAndProject"]
+NODE_HEADER = re.compile(r"^\((\d+)\) (\S+(?: \S+)?)")
+
+
+def plan_counts(path: str) -> dict:
+    """Distinct plan nodes per PLAN_NODES name, read from the numbered
+    node details of a formatted explain. A file scan's header is
+    `Scan <format>` (v1) or `BatchScan <table>` (v2); in-memory, local
+    and RDD scans are not file scans."""
+    ids = {n: set() for n in PLAN_NODES}
+    with open(path) as f:
+        for line in f:
+            m = NODE_HEADER.match(line)
+            if not m:
+                continue
+            node, words = m.group(1), m.group(2).split(" ")
+            if words[0] in ids:
+                ids[words[0]].add(node)
+            elif (words[0] == "BatchScan" or (words[0] == "Scan" and
+                    words[1:] not in (["ExistingRDD"], ["OneRowRelation"]))):
+                ids["FileScan"].add(node)
+    return {n: len(v) for n, v in ids.items()}
+
+
+def plans(dir_a: str, dir_b: str) -> int:
+    def names(d):
+        return {os.path.basename(f)[:-4] for f in glob.glob(f"{d}/*.txt")}
+    na, nb = names(dir_a), names(dir_b)
+    grew = 0
+    print("query " + " ".join(PLAN_NODES) + "  (A->B)")
+    for name in sorted(na | nb):
+        if name not in na or name not in nb:
+            print(f"GREW {name}: only in {dir_a if name in na else dir_b}")
+            grew += 1
+            continue
+        a = plan_counts(f"{dir_a}/{name}.txt")
+        b = plan_counts(f"{dir_b}/{name}.txt")
+        up = [n for n in PLAN_NODES if b[n] > a[n]]
+        cells = " ".join(f"{a[n]}" if a[n] == b[n] else f"{a[n]}->{b[n]}"
+                         for n in PLAN_NODES)
+        print(f"{'GREW ' if up else ''}{name} {cells}")
+        grew += bool(up)
+    print(f"== {grew} grew, of {len(na | nb)} queries ==")
+    return 1 if grew else 0
+
+
 if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "bench":
         sys.exit(bench_fallback(sys.argv[2] if len(sys.argv) > 2 else "."))
     if len(sys.argv) > 1 and sys.argv[1] == "diff":
         sys.exit(diff(sys.argv[2], sys.argv[3]))
+    if len(sys.argv) > 1 and sys.argv[1] == "plans":
+        sys.exit(plans(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
