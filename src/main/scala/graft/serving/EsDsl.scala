@@ -151,6 +151,24 @@ object EsDsl {
   private def bad(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
 
+  /** An integer knob `k` of `node`: an integral number, or a string
+    * that spells one; Right(None) when absent or null; Left names the
+    * knob (the caller's 400). */
+  private[serving] def intKnob(node: JsonNode,
+                               k: String): Either[String, Option[Int]] =
+    Option(node.get(k)).filterNot(_.isNull) match {
+      case None => Right(None)
+      case Some(n) if n.isIntegralNumber && n.canConvertToInt =>
+        Right(Some(n.asInt))
+      case Some(n) if n.isTextual && n.asText.trim.toIntOption.isDefined =>
+        Right(n.asText.trim.toIntOption)
+      case Some(_) => Left(s"$k must be an integer")
+    }
+
+  /** [[intKnob]] that 400s a malformed value. */
+  private def intOpt(node: JsonNode, k: String): Option[Int] =
+    intKnob(node, k).fold(bad, identity)
+
   /** A clause referenced a field the frame does not carry. Separate
     * type so [[percolatePreds]] can map EXACTLY the missing-field case
     * to ES's percolator never-matches semantics while every other
@@ -1127,10 +1145,9 @@ object EsDsl {
           .getOrElse("AUTO")
         val e0 = Search.fuzzyEdits(prefix, fzSpec)
           .getOrElse(bad(s"invalid fuzziness '$fzSpec'"))
-        val pl = Option(fn.get("prefix_length")).map(_.asInt)
-          .getOrElse(1)
+        val pl = intOpt(fn, "prefix_length").getOrElse(1)
         if (pl < 0) bad("fuzzy prefix_length must be >= 0")
-        val ml = Option(fn.get("min_length")).map(_.asInt).getOrElse(3)
+        val ml = intOpt(fn, "min_length").getOrElse(3)
         if (ml < 0) bad("fuzzy min_length must be >= 0")
         val tr = Option(fn.get("transpositions")).map { n =>
           if (!n.isBoolean) bad("transpositions must be a boolean")
@@ -3542,7 +3559,7 @@ object EsDsl {
         .map(_.asText).getOrElse(bad("match_phrase needs \"query\""))
       else spec.asText
       val slop = if (spec.isObject)
-        Option(spec.get("slop")).map(_.asInt).getOrElse(0) else 0
+        intOpt(spec, "slop").getOrElse(0) else 0
       val pzta = spec.isObject && zeroTermsAll(spec)
       phraseLeg(ctx, f, text, slop, qa) match {
         // zero analyzed terms (all-stopword english/french phrase,
@@ -3598,10 +3615,10 @@ object EsDsl {
         .map(_.asText).getOrElse(bad("match_phrase_prefix needs \"query\""))
       else spec.asText
       val slop = if (spec.isObject)
-        Option(spec.get("slop")).map(_.asInt).getOrElse(0) else 0
+        intOpt(spec, "slop").getOrElse(0) else 0
       if (slop < 0) bad("slop must be >= 0")
       val maxExp = if (spec.isObject)
-        Option(spec.get("max_expansions")).map(_.asInt) else None
+        intOpt(spec, "max_expansions") else None
       maxExp.foreach(n => if (n <= 0 || n > Search.MaxExpansionsCeiling)
         bad(s"max_expansions must be 1..${Search.MaxExpansionsCeiling}"))
       val terms = graft.functions.TextFunctions.analyzeText(text).toSeq
@@ -4366,7 +4383,7 @@ object EsDsl {
             "prefix_length", "max_expansions", "fuzzy_transpositions")
             if b.hasNonNull(k))
           bad(s"multi_match type=phrase does not support $k")
-        val slop = Option(b.get("slop")).map(_.asInt).getOrElse(0)
+        val slop = intOpt(b, "slop").getOrElse(0)
         if (fields.isEmpty)
           bad("multi_match needs a non-empty \"fields\"")
         val legs = fields.map { case (f, fb) =>
@@ -4400,9 +4417,9 @@ object EsDsl {
             "types (the expansion dictionary is standard-analyzed)")
         if (fields.isEmpty)
           bad("multi_match needs a non-empty \"fields\"")
-        val slop = Option(b.get("slop")).map(_.asInt).getOrElse(0)
+        val slop = intOpt(b, "slop").getOrElse(0)
         if (slop < 0) bad("slop must be >= 0")
-        val maxExp = Option(b.get("max_expansions")).map(_.asInt)
+        val maxExp = intOpt(b, "max_expansions")
         maxExp.foreach(n =>
           if (n <= 0 || n > Search.MaxExpansionsCeiling)
             bad(s"max_expansions must be 1..${Search.MaxExpansionsCeiling}"))
@@ -8004,11 +8021,9 @@ object EsDsl {
 
   private def fuzzyKnobs(spec: Option[JsonNode])
       : (Int, Option[Int], Boolean) = {
-    val pl = spec.flatMap(s => Option(s.get("prefix_length")))
-      .map(_.asInt).getOrElse(0)
+    val pl = spec.flatMap(intOpt(_, "prefix_length")).getOrElse(0)
     if (pl < 0) bad("prefix_length must be >= 0")
-    val me = spec.flatMap(s => Option(s.get("max_expansions")))
-      .map(_.asInt)
+    val me = spec.flatMap(intOpt(_, "max_expansions"))
     me.foreach(n => if (n <= 0 || n > Search.MaxExpansionsCeiling)
       bad(s"max_expansions must be 1..${Search.MaxExpansionsCeiling}"))
     // ES defaults transpositions to TRUE (Damerau — an adjacent swap

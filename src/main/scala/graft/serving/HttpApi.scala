@@ -178,7 +178,11 @@ final class HttpApi(
   /** Start on `port` (0 = ephemeral); returns the bound port. */
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    server.createContext("/", (ex: HttpExchange) => handle(ex))
+    // the serving loop owns each request's lifecycle: the stages
+    // query builders persist die with their request, and a concurrent
+    // request's stages stay (StageCache's contract)
+    server.createContext("/",
+      (ex: HttpExchange) => graft.StageCache.scoped(handle(ex)))
     val bound = server.getAddress.getPort
     val threads = java.util.concurrent.Executors.defaultThreadFactory()
     val n = new java.util.concurrent.atomic.AtomicInteger()
@@ -319,15 +323,6 @@ final class HttpApi(
       case NonFatal(e) =>
         respond(ex, 500, mapper.createObjectNode()
           .put("error", String.valueOf(e.getMessage)).toString)
-    } finally {
-      // the serving loop owns the request lifecycle, so it releases the
-      // stages query builders persisted (StageCache's contract — the
-      // same boundary Bench/Verify use). Under the 4-thread pool a
-      // release can drop a concurrent request's still-needed stage;
-      // that recomputes (correctness never depends on a cache) and is
-      // the accepted cost of never ratcheting block-manager footprint
-      // across requests.
-      graft.StageCache.releaseAll()
     }
   }
 
@@ -372,7 +367,7 @@ final class HttpApi(
               s"""{"error": "unknown index '$unknown'"}""")
             return
         } else Nil
-      val limit = Option(req.get("limit")).map(_.asInt).getOrElse(100)
+      val limit = intArg(req, "limit").getOrElse(100)
       val best = textOr(req, "type", "most_fields") == "best_fields"
       // wildcard cursor = the last hit's [score, document_id, table]
       // (the table matters: document_ids can collide across entities;
@@ -442,7 +437,7 @@ final class HttpApi(
     val fields = parsedFields.map(_._1)
     val boosts: Map[String, Double] =
       parsedFields.collect { case (n, Some(b), _) => n -> b }.toMap
-    val limit = Option(req.get("limit")).map(_.asInt).getOrElse(100)
+    val limit = intArg(req, "limit").getOrElse(100)
     // an explicit `"fields": []` (or a table with no string columns at
     // all) is a caller error, not a 500: every ranking mode needs at
     // least one field to score
@@ -533,15 +528,7 @@ final class HttpApi(
     def err(msg: String): Either[String, Nothing] =
       Left(mapper.createObjectNode().put("error", msg).toString)
     def intKnob(k: String): Either[String, Option[Int]] =
-      Option(req.get(k)).filterNot(_.isNull) match {
-        case None => Right(None)
-        case Some(n) if n.isIntegralNumber && n.canConvertToInt =>
-          Right(Some(n.asInt))
-        case Some(n) if n.isTextual &&
-            n.asText.trim.toIntOption.isDefined =>
-          Right(n.asText.trim.toIntOption)
-        case Some(_) => err(s"$k must be an integer")
-      }
+      EsDsl.intKnob(req, k).left.flatMap(err)
     if (textOr(req, "type", "") == "phrase")
       intKnob("slop").flatMap {
         case Some(s) if s < 0 => err("slop must be >= 0")
@@ -1025,7 +1012,7 @@ final class HttpApi(
           "the union view").toString)
       return
     }
-    val size = Option(req.get("size")).map(_.asInt).getOrElse(10)
+    val size = intArg(req, "size").getOrElse(10)
     if (size > maxHits) {
       respond(ex, 400, mapper.createObjectNode()
         .put("error", s"scroll page size must be <= $maxHits")
@@ -1953,7 +1940,7 @@ final class HttpApi(
       respond(ex, 400, """{"error": "expected a JSON object"}"""); return
     }
     deriveDocs(spec, Seq((None, req)),
-        index(spec.name).map(_.schema)).head match {
+        DocumentSink.lineSchema(spark, s"$outDir/${spec.name}")).head match {
       case Left(MissingFields(missing)) =>
         respond(ex, 400, s"""{"error": "missing required fields: ${
           missing.mkString(", ")}"}""")
@@ -2239,11 +2226,11 @@ final class HttpApi(
         if (unknown.size == 1) "" else "s"}: ${unknown.mkString(", ")}")
     val doc = Option(req.get("doc")).filter(_.isObject)
       .getOrElse(auxBad("_update expects {\"doc\": {...}}"))
-    index(spec.name) match {
+    lookup(spec.name, Seq(id)) match {
       case None => respond(ex, 404,
         s"""{"error": "no synced index for '${spec.name}'"}""")
       case Some(df) =>
-        val rows = df.filter(col("document_id") === id).collect()
+        val rows = df.collect()
         if (rows.isEmpty)
           respond(ex, 404, mapper.createObjectNode()
             .put("error", s"document '$id' not found").toString)
@@ -2270,13 +2257,11 @@ final class HttpApi(
     * the by-query and bulk paths use. */
   private def deleteOne(ex: HttpExchange, spec: EntitySpec,
                         id: String): Unit = writeLock.synchronized {
-    index(spec.name) match {
+    lookup(spec.name, Seq(id)) match {
       case None => respond(ex, 404,
         s"""{"error": "no synced index for '${spec.name}'"}""")
       case Some(df) =>
-        val exists =
-          df.filter(col("document_id") === id).limit(1).count() > 0
-        if (!exists) {
+        if (df.isEmpty) {
           // ES writes a tombstone even for a missing id: the 404 still
           // bumps _version/_seq_no — same as the bulk route's
           // not_found delete (base 0 for a never-stored id).
@@ -2311,10 +2296,10 @@ final class HttpApi(
     val t0 = System.nanoTime()
     val acts = parseBulk(defaultIndex, raw)
     val byEntity = acts.groupBy(_.entity)
-    // each touched entity's resolved store line, read once: its schema
-    // types the derived documents, its rows are the probe
-    val line = byEntity.keys.filter(EntityCatalog.entities.contains)
-      .map(e => e -> index(e)).toMap
+    // each touched entity's recorded line schema types the derived
+    // documents (no plan, no read)
+    val lineSchema = byEntity.keys.filter(EntityCatalog.entities.contains)
+      .map(e => e -> DocumentSink.lineSchema(spark, s"$outDir/$e")).toMap
     // PHASE 1 — derive every index/create action's pinned document
     // up front (validate/default/pipeline; side-effect-free), so the
     // store probe below sees DERIVED ids too: a create whose id rides
@@ -2330,7 +2315,7 @@ final class HttpApi(
       }.groupBy(_._1.entity).flatMap { case (entity, group) =>
         group.map(_._2).zip(deriveDocs(EntityCatalog.entities(entity),
           group.map { case (a, _) => (a.id, a.source.get) },
-          line(entity).map(_.schema)))
+          lineSchema(entity)))
       }
     def derivedId(i: Int): Option[String] = derived.get(i).flatMap {
       case Right((row, schema)) => Some(String.valueOf(
@@ -2339,8 +2324,8 @@ final class HttpApi(
     }
     // PHASE 2 — one request-bounded store probe per touched entity:
     // which of the request's ids (explicit AND derived) exist, and
-    // their rows (update bases) — a semi-join by id list, never a
-    // corpus collect
+    // their rows (update bases) — the id lookup, never a corpus
+    // collect
     val stored = scala.collection.mutable.Map.empty[(String, String), Doc]
     val storedIds = scala.collection.mutable.Set.empty[(String, String)]
     for ((entity, _) <- byEntity
@@ -2349,9 +2334,8 @@ final class HttpApi(
         case (a, i) if a.entity == entity =>
           a.id.orElse(derivedId(i))
       }.flatten.distinct
-      if (ids.nonEmpty) line(entity).foreach { df =>
-        val rows = df.filter(col("document_id").isin(ids: _*)).collect()
-        rows.foreach { r =>
+      if (ids.nonEmpty) lookup(entity, ids).foreach { df =>
+        df.collect().foreach { r =>
           val id = String.valueOf(r.getAs[Any]("document_id"))
           storedIds += ((entity, id))
           stored((entity, id)) = (r, df.schema)
@@ -2578,13 +2562,19 @@ final class HttpApi(
         hits(ex, page.orderBy(col("document_id")).limit(limit))
     }
 
+  /** The entity store's current rows of `ids` — the one id-lookup
+    * path of point reads ([[graft.sinks.DocumentSink.lookup]]); None
+    * if no sync has run. */
+  private def lookup(entity: String, ids: Seq[String]): Option[DataFrame] =
+    DocumentSink.lookup(spark, s"$outDir/$entity", ids)
+
   /** GET /{entity}/{id} — point read by document_id from the index. */
   private def getDoc(ex: HttpExchange, entity: String, id: String): Unit =
-    index(entity) match {
+    lookup(entity, Seq(id)) match {
       case None =>
         notFound(ex, "no synced index for", entity)
       case Some(df) =>
-        val rows = df.filter(col("document_id") === id).toJSON.collect()
+        val rows = df.toJSON.collect()
         if (rows.isEmpty)
           respond(ex, 404, mapper.createObjectNode()
             .put("error", s"document '$id' not found").toString)
@@ -2774,6 +2764,11 @@ final class HttpApi(
 
   private def textOr(node: JsonNode, field: String, dflt: String): String =
     Option(node.get(field)).map(_.asText()).getOrElse(dflt)
+
+  /** An integer knob ([[EsDsl.intKnob]]); a malformed value is the
+    * caller's 400, naming the knob. */
+  private def intArg(node: JsonNode, k: String): Option[Int] =
+    EsDsl.intKnob(node, k).fold(auxBad, identity)
 
   /** 404 whose message names a request-controlled `name` — escaped
     * inside the JSON string, so a quote in a path or body cannot break

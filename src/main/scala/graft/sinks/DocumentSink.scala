@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.StoreSchemas
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -21,7 +22,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     SQL-type→ES-type cascade, data_lake_sync.py:94-117 — except
   *     derived, so it can never drift),
   *   - `_meta.json` — doc count + write mode for count verification
-  *     (reference: src/es_connector.py:76-83).
+  *     (reference: src/es_connector.py:76-83), and the resolved line's
+  *     schema, which every store read uses instead of inferring one
+  *     (see [[lineSchema]]).
   *
   * Semantics preserved from the reference:
   *   - drop-and-recreate ⇒ `SaveMode.Overwrite` (src/es_connector.py:23-25
@@ -169,11 +172,24 @@ object DocumentSink {
     // the declared semantics (the reference deletes the ES index);
     // Append (historized sync, ids unique by construction) leaves
     // them in place
-    if (mode == SaveMode.Overwrite) {
-      val fs = hadoopFs(df.sparkSession, path)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/data_delta"), true)
-      ()
-    }
+    // the schema is recorded BEFORE the data lands, so a crash leaves
+    // a superset (absent columns read as null): an Overwrite first
+    // drops the old record (a crash then reads the inferred schema),
+    // an Append records the union of the stored schema and its own
+    val spark = df.sparkSession
+    val own = StoreSchemas.asRead(df.schema)
+    val schema =
+      if (mode == SaveMode.Overwrite) {
+        val fs = hadoopFs(spark, path)
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/data_delta"), true)
+        Files.deleteIfExists(Paths.get(s"$path/_meta.json"))
+        own
+      } else {
+        val s = lineSchema(spark, path)
+          .fold(own)(StoreSchemas.union(spark, _, own))
+        readMeta(path).foreach(m => writeMeta(path, m.copy(schema = Some(s))))
+        s
+      }
     // `_bucket` is the store's internal layout column — a document
     // field by that name would be hijacked as the partition column
     // and then silently dropped from every read: reserved, like
@@ -210,8 +226,7 @@ object DocumentSink {
         c
       }
     writeSidecar(s"$path/_mapping.json", mappingJson(df.schema, fieldTypes))
-    writeSidecar(s"$path/_meta.json",
-      s"""{"doc_count": $n, "mode": "${mode.name.toLowerCase}"}""")
+    writeMeta(path, Meta(n, mode.name.toLowerCase, Some(schema)))
     // write-time search-index maintenance (ES builds its inverted index
     // inside bulk_index — src/es_connector.py:51-74): an adjacent index
     // previously built by SearchIndex.build stays in lockstep with the
@@ -318,7 +333,9 @@ object DocumentSink {
     * generations with the latest generation winning per document_id
     * and delete tombstones dropped — or None iff nothing was ever
     * written. Zero deltas (a freshly-synced or just-compacted store)
-    * is the fast path: the plain base read, no joins.
+    * is the fast path: the plain base read, no joins. Base and deltas
+    * are read with the line's [[lineSchema]], so a read plans without
+    * listing footers and runs no schema-inference job.
     *
     * SCHEMA semantics (decided round 18): the line is the
     * union-by-name of every live generation, so a column whose last
@@ -337,29 +354,82 @@ object DocumentSink {
               path: String): Option[DataFrame] = {
     val fs = hadoopFs(spark, path)
     val bp = new org.apache.hadoop.fs.Path(s"$path/data")
+    val hasBase = fs.exists(bp)
+    val gens = deltaGens(fs, new org.apache.hadoop.fs.Path(s"$path/data_delta"))
+    if (!hasBase && gens.isEmpty) return None
+    val schema = lineSchema(spark, path).get
+    // a bucketed base carries its hash-partition column — an
+    // internal layout detail, never part of the document line
+    lazy val base =
+      spark.read.schema(schema).parquet(bp.toString).drop("_bucket")
+    if (gens.isEmpty) return Some(base)
+    // generations are request-sized and bounded by the compaction
+    // threshold — everything delta-side is SMALL
+    val deltas = deltaFrame(spark, path, gens, schema)
+    val winners = latest(deltas)
+    val touched = deltas.select("document_id").distinct()
+    if (!hasBase) return Some(winners)
+    // an expression join keeps the base's column order, the schema's
+    Some(base
+      .join(broadcast(touched),
+        base("document_id") === touched("document_id"), "left_anti")
+      .unionByName(winners))
+  }
+
+  /** The resolved line's schema — what [[readOpt]] and [[lookup]]
+    * read with — or None iff nothing was ever written.
+    *
+    * Every write records it in `_meta.json` (`"schema"`, Spark's DDL
+    * form, every field nullable as parquet reads it) as the union of
+    * the stored schema and the landed generation's, computed from the
+    * two schemas without a read. The union only grows — the ES mapping
+    * contract above — and it is recorded BEFORE the generation's
+    * rename (an Append: before its data; an Overwrite drops the record
+    * first), so a crash leaves a superset whose extra columns read as
+    * null, never a subset that would hide a landed column.
+    *
+    * A store written before the schema was recorded has no field; for
+    * it the schema is inferred as the line was always read — the
+    * base's footer schema, then the delta generations' merged footers,
+    * unioned by name — and the store's next write records it. */
+  def lineSchema(spark: org.apache.spark.sql.SparkSession,
+                 path: String): Option[StructType] = {
+    val fs = hadoopFs(spark, path)
+    val bp = new org.apache.hadoop.fs.Path(s"$path/data")
     val dp = new org.apache.hadoop.fs.Path(s"$path/data_delta")
     val hasBase = fs.exists(bp)
     val hasDelta = deltaGens(fs, dp).nonEmpty
-    if (!hasBase && !hasDelta) return None
-    // a bucketed base carries its hash-partition column — an
-    // internal layout detail, never part of the document line
-    def baseDf = spark.read.parquet(bp.toString).drop("_bucket")
-    if (!hasDelta) return Some(baseDf)
-    // generations are request-sized and bounded by the compaction
-    // threshold — everything delta-side is SMALL
-    val deltas = spark.read.option("recursiveFileLookup", "true")
-      .option("mergeSchema", "true").parquet(dp.toString)
+    if (!hasBase && !hasDelta) None
+    else readMeta(path).flatMap(_.schema).orElse {
+      val base = Option.when(hasBase)(
+        spark.read.parquet(bp.toString).drop("_bucket").schema)
+      val delta = Option.when(hasDelta)(
+        spark.read.option("recursiveFileLookup", "true")
+          .option("mergeSchema", "true").parquet(dp.toString)
+          .drop("_op", "_seq").schema)
+      (base ++ delta).reduceOption(StoreSchemas.union(spark, _, _))
+    }
+  }
+
+  /** The delta generations `gens` read with the line's `schema` plus
+    * the log columns; a column a generation never carried reads as
+    * null. */
+  private def deltaFrame(spark: org.apache.spark.sql.SparkSession,
+                         path: String, gens: Seq[Long],
+                         schema: StructType): DataFrame =
+    spark.read.schema(schema.add("_op", StringType).add("_seq", LongType))
+      .parquet(gens.sorted.map(g => s"$path/data_delta/" + f"delta-$g%06d"): _*)
+
+  /** Latest generation wins per document_id (every row of the winning
+    * generation, as a batch repeating an id landed them) and
+    * tombstones drop; the log columns go. */
+  private def latest(rows: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("document_id"))
-    val winners = deltas
+    rows
       .withColumn("_wseq", max(col("_seq")).over(w))
       .filter(col("_seq") === col("_wseq") && col("_op") === "upsert")
       .drop("_op", "_seq", "_wseq")
-    val touched = deltas.select("document_id").distinct()
-    if (!hasBase) return Some(winners)
-    Some(baseDf
-      .join(broadcast(touched), Seq("document_id"), "left_anti")
-      .unionByName(winners, allowMissingColumns = true))
   }
 
   /** [[readOpt]] for a store known to exist. */
@@ -368,35 +438,54 @@ object DocumentSink {
     readOpt(spark, path).getOrElse(
       throw new IllegalStateException(s"no document store at $path"))
 
+  /** The `_meta.json` sidecar: the last writer's doc count and mode,
+    * and the line's schema (None on a store written before it was
+    * recorded — see [[lineSchema]]). */
+  private final case class Meta(docCount: Long, mode: String,
+                                schema: Option[StructType])
+
+  /** The store's `_meta.json`; a missing or unparsable one (a crash
+    * mid-write) is absent — counts and schema then come from the data. */
+  private def readMeta(path: String): Option[Meta] = {
+    val p = Paths.get(s"$path/_meta.json")
+    if (!Files.exists(p)) None
+    else scala.util.Try {
+      val n = Json.readTree(p.toFile)
+      Meta(n.get("doc_count").asLong, n.get("mode").asText,
+        Option(n.get("schema")).map(d => StructType.fromDDL(d.asText)))
+    }.toOption
+  }
+
+  private def writeMeta(path: String, m: Meta): Unit =
+    writeSidecar(s"$path/_meta.json",
+      s"""{"doc_count": ${m.docCount}, "mode": "${m.mode}"${
+        m.schema.fold("")(s => ", \"schema\": " +
+          Json.writeValueAsString(s.toDDL))}}""")
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** The store's current doc count as the LAST WRITER recorded it —
     * the arithmetic the O(request) write path maintains. A sidecar
     * written by an Append-mode batch sync records only that call's
     * rows, so it cannot seed the arithmetic — fall back to one
     * resolved count (and the next write re-records the total). */
   private def metaDocCount(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Long = {
-    val p = Paths.get(s"$path/_meta.json")
-    val parsed =
-      if (!Files.exists(p)) None
-      else {
-        val s = new String(Files.readAllBytes(p), "UTF-8")
-        if (!s.contains("\"mode\": \"overwrite\"")) None
-        else "\"doc_count\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-          .map(_.group(1).toLong)
-      }
-    parsed.getOrElse(read(spark, path).count())
-  }
+                           path: String): Long =
+    readMeta(path).filter(_.mode == "overwrite").map(_.docCount)
+      .getOrElse(read(spark, path).count())
 
-  /** Stage `df` (already carrying `_op`/`_seq`) and land it as delta
+  /** Stage `df` (already carrying `_op`/`_seq`), record `meta` (the
+    * line's schema grown by this generation) and land it as delta
     * generation `seq` with ONE atomic rename. Returns the row count
     * (from the staging write's own observe metric). */
   private def appendDelta(df: DataFrame, path: String,
-                          seq: Long): Long = {
+                          seq: Long, meta: Meta): Long = {
     val spark = df.sparkSession
     val fs = hadoopFs(spark, path)
     val tmp = new org.apache.hadoop.fs.Path(
       s"$path/.delta_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
     val n = writeCounted(df, tmp.toString, SaveMode.Overwrite)
+    writeMeta(path, meta)
     val root = new org.apache.hadoop.fs.Path(s"$path/data_delta")
     fs.mkdirs(root)
     val dest = new org.apache.hadoop.fs.Path(root, f"delta-$seq%06d")
@@ -416,10 +505,11 @@ object DocumentSink {
   /** Fold the delta generations into a new base once the threshold
     * accumulates: resolved line → staged write → [[Lake.swapIn]] →
     * clear deltas. The fold's own count re-records the exact total
-    * (healing any arithmetic lost to a crashed sidecar write). The
-    * new base is written BUCKETED on the id hash (preserving — or,
-    * for a pre-round-18 flat store, establishing — the layout the
-    * write-path probes prune against). */
+    * (healing any arithmetic lost to a crashed sidecar write); the
+    * schema is the line's, unchanged. The new base is written
+    * BUCKETED on the id hash (preserving — or, for a pre-round-18
+    * flat store, establishing — the layout the write-path probes
+    * prune against). */
   private def compactStoreIfNeeded(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val fs = hadoopFs(spark, path)
@@ -437,8 +527,7 @@ object DocumentSink {
       new org.apache.hadoop.fs.Path(s"$path/data"))
     fs.delete(dp, true)
     writeSidecar(s"$path/_layout.json", s"""{"buckets": $buckets}""")
-    writeSidecar(s"$path/_meta.json",
-      s"""{"doc_count": $n, "mode": "overwrite"}""")
+    writeMeta(path, Meta(n, "overwrite", Some(line.schema)))
   }
 
   /** Does ANY generation of the store exist (base or delta)? The
@@ -453,63 +542,60 @@ object DocumentSink {
         new org.apache.hadoop.fs.Path(s"$path/data_delta")).nonEmpty
   }
 
-  /** The probe frame behind [[idsInLineCount]] — exposed for the
-    * plan pin in DocumentSinkSpec: the store's document line bounded
-    * to delta generations strictly below `belowSeq`, RESTRICTED to
-    * `ids`. Request-bounded by construction (the id list came off a
-    * landed request-sized delta); on a BUCKETED base the probe adds
-    * the ids' hash-bucket partition predicate, so the scan prunes to
-    * the touched buckets at PLANNING time — a point lookup, not a
-    * base scan. On the flat layout the id predicate still pushes to
-    * the parquet scan (row-group pruning), just without directory
-    * pruning. */
+  /** The current line's rows of `ids` — the rows
+    * `read(spark, path).filter(document_id ∈ ids)` returns — or None
+    * iff nothing was ever written: the one id-lookup path of point
+    * reads ([[idsInLineFrame]] at the newest generation). */
+  def lookup(spark: org.apache.spark.sql.SparkSession, path: String,
+             ids: Seq[String]): Option[DataFrame] =
+    Option.when(storeExists(spark, path))(
+      idsInLineFrame(spark, path, ids, belowSeq = Long.MaxValue))
+
+  /** The store's line as of just BEFORE delta generation `belowSeq`,
+    * RESTRICTED to `ids`: the base rows of `ids` (as `_seq` 0) unioned
+    * with the delta rows of `ids`, both read with the line's schema,
+    * then the latest `_seq` wins and tombstones drop. Request-bounded
+    * by construction: the only shuffle carries id-filtered rows, never
+    * a base-wide anti-join. On a BUCKETED base the scan adds the ids'
+    * hash-bucket partition predicate, so it prunes to the touched
+    * buckets at PLANNING time — a point lookup, not a base scan; on
+    * the flat layout the id predicate still pushes to the parquet scan
+    * (row-group pruning), just without directory pruning. */
   private[graft] def idsInLineFrame(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: Seq[String], belowSeq: Long): DataFrame = {
     val fs = hadoopFs(spark, path)
-    val deltaRoot = new org.apache.hadoop.fs.Path(s"$path/data_delta")
-    val gens = deltaGens(fs, deltaRoot).filter(_ < belowSeq)
+    val gens = deltaGens(fs,
+      new org.apache.hadoop.fs.Path(s"$path/data_delta")).filter(_ < belowSeq)
     val bp = new org.apache.hadoop.fs.Path(s"$path/data")
+    val schema = lineSchema(spark, path).getOrElse(
+      throw new IllegalStateException(s"no document store at $path"))
     val idPred = col("document_id").isin(ids: _*)
-    val base: Option[DataFrame] =
-      if (!fs.exists(bp)) None
-      else {
-        val b0 = spark.read.parquet(bp.toString)
-        val b1 = (b0.columns.contains("_bucket"), storeBuckets(path)) match {
-          case (true, Some(n)) =>
-            // the ids' buckets, hashed with the SAME expression the
-            // writer used — a request-sized local job, never a guess
-            val bs = spark.createDataset(ids)(
-                org.apache.spark.sql.Encoders.STRING)
-              .select(pmod(hash(col("value")), lit(n)).as("b"))
-              .distinct().collect().map(_.getInt(0)).toSeq
-            b0.filter(col("_bucket").isInCollection(bs) && idPred)
-              .drop("_bucket")
-          case (true, None) =>
-            // layout sidecar lost: fall back to the unpruned (still
-            // pushdown-filtered) scan — correct, just not pruned
-            b0.filter(idPred).drop("_bucket")
-          case _ => b0.filter(idPred)
-        }
-        Some(b1.select("document_id"))
+    val base = Option.when(fs.exists(bp)) {
+      val b0 = spark.read.schema(schema).parquet(bp.toString)
+      val b1 = (b0.columns.contains("_bucket"), storeBuckets(path)) match {
+        case (true, Some(n)) =>
+          // the ids' buckets, hashed on the driver with the SAME
+          // expression the writer used (a projection of a local
+          // relation folds without a job)
+          val bs = spark.createDataset(ids)(
+              org.apache.spark.sql.Encoders.STRING)
+            .select(pmod(hash(col("value")), lit(n)))
+            .collect().map(_.getInt(0)).distinct.toSeq
+          b0.filter(col("_bucket").isInCollection(bs) && idPred)
+        // flat, or the layout sidecar lost: the unpruned (still
+        // pushdown-filtered) scan — correct, just not pruned
+        case _ => b0.filter(idPred)
       }
-    if (gens.isEmpty)
-      return base.getOrElse(
-        spark.emptyDataFrame.withColumn("document_id", lit("")).limit(0))
-    val deltas = spark.read.option("mergeSchema", "true")
-      .parquet(gens.map(g =>
-        s"$path/data_delta/" + f"delta-$g%06d"): _*)
-      .filter(idPred)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("document_id"))
-    val winners = deltas
-      .withColumn("_wseq", max(col("_seq")).over(w))
-      .filter(col("_seq") === col("_wseq") && col("_op") === "upsert")
-      .select("document_id")
-    val touched = deltas.select("document_id").distinct()
-    base.map(_.join(broadcast(touched), Seq("document_id"), "left_anti")
-        .unionByName(winners))
-      .getOrElse(winners)
+      b1.drop("_bucket")
+        .withColumn("_op", lit("upsert")).withColumn("_seq", lit(0L))
+    }
+    val deltas = Option.when(gens.nonEmpty)(
+      deltaFrame(spark, path, gens, schema).filter(idPred))
+    latest((base ++ deltas).reduceOption(_.unionByName(_)).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[
+        org.apache.spark.sql.Row](),
+        schema.add("_op", StringType).add("_seq", LongType))))
   }
 
   /** How many of `ids` exist in the store's line as of just BEFORE
@@ -529,22 +615,25 @@ object DocumentSink {
     * single `document_id` column) drop ids. O(request): both sides
     * land as ONE delta generation with mixed `_op` values, written as
     * one file when both are given (they are then one request's net
-    * effect, e.g. a `_bulk`'s for one entity) ([[appendDelta]] — which also EVALUATES a side that is a lazy
-    * plan over the current line, e.g. update_by_query's rewrite,
-    * before anything moves); [[readOpt]]'s latest-`_seq` rule resolves
+    * effect, e.g. a `_bulk`'s for one entity) ([[appendDelta]] — which
+    * also EVALUATES a side that is a lazy plan over the current line,
+    * e.g. update_by_query's rewrite, before anything moves, and
+    * records the line's schema grown by the generation's columns
+    * before the rename); [[readOpt]]'s latest-`_seq` rule resolves
     * it; an id on both sides is deleted. Then, once per call: one
     * id-list-bounded probe of the pre-append line over every landed
     * id ([[idsInLineFrame]] — on the hive-BUCKETED base written by
     * bootstrap/compaction it prunes to the ids' buckets at PLANNING
     * time, so the count costs O(request), plan-pinned in
     * DocumentSinkSpec), giving count = prev − |existing ∩ (U ∪ D)| +
-    * |U|; one mapping/meta sidecar rewrite; one delta update of the
-    * adjacent search index from the landed generation's stable files
-    * (a crash in between leaves the index one consistent snapshot
-    * behind, never ahead); one compaction check. Returns the store's
-    * doc count after the write. A store that does not exist yet is
-    * bootstrapped from the upserts (a BUCKETED base write — this
-    * store takes API writes by definition of this call). */
+    * |U|; one mapping/meta sidecar rewrite from the recorded schema;
+    * one delta update of the adjacent search index from the landed
+    * generation's stable files (a crash in between leaves the index
+    * one consistent snapshot behind, never ahead); one compaction
+    * check. Returns the store's doc count after the write. A store
+    * that does not exist yet is bootstrapped from the upserts (a
+    * BUCKETED base write — this store takes API writes by definition
+    * of this call). */
   def write(upserts: Option[DataFrame], deletes: Option[DataFrame],
             path: String): Long = {
     upserts.foreach(b => require(!b.columns.contains("_op") &&
@@ -569,17 +658,24 @@ object DocumentSink {
     val sides = ups.map(_.withColumn("_op", lit("upsert"))).toSeq ++
       deletes.map(_.select("document_id").distinct()
         .withColumn("_op", lit("delete")))
-    val gen = sides.reduce(_.unionByName(_, allowMissingColumns = true))
+    val stored = lineSchema(spark, path).get
+    val gen = coerced(
+      sides.reduce(_.unionByName(_, allowMissingColumns = true)), stored)
+    // the mapping contract: the line's schema only grows, by the
+    // generation's new columns (a structured column that conflicts
+    // fails here, before anything lands)
+    val schema = StoreSchemas.union(spark, stored,
+      StoreSchemas.asRead(gen.drop("_op").schema))
     // one file: the tombstones cost rows in it rather than a file of
     // their own, all-null but for the id
-    val rows = appendDelta(
-      (if (sides.size == 1) gen else gen.coalesce(1))
-        .withColumn("_seq", lit(seq)),
-      path, seq)
-    val landed = spark.read.parquet(
-      s"$path/data_delta/" + f"delta-$seq%06d")
-    val ops = landed.select("document_id", "_op").distinct().collect()
-      .map(r => (String.valueOf(r.get(0)), r.getString(1)))
+    val landing = (if (sides.size == 1) gen else gen.coalesce(1))
+      .withColumn("_seq", lit(seq))
+    val rows = appendDelta(landing, path, seq,
+      Meta(prevTotal, "overwrite", Some(schema)))
+    val landed = spark.read.schema(StoreSchemas.asRead(landing.schema))
+      .parquet(s"$path/data_delta/" + f"delta-$seq%06d")
+    val ops = landed.select("document_id", "_op").collect()
+      .map(r => (String.valueOf(r.get(0)), r.getString(1))).distinct
     val deleted = ops.collect { case (id, "delete") => id }.toSeq
     val written = ops.collect { case (id, "upsert") => id }.toSeq
     val existing = idsInLineCount(spark, path, written ++ deleted,
@@ -591,10 +687,8 @@ object DocumentSink {
     // per the union-by-name decision on [[readOpt]], RETAINS a
     // column whose last carrier was just deleted (ES: a mapping
     // never loses fields)
-    writeSidecar(s"$path/_mapping.json",
-      mappingJson(read(spark, path).schema))
-    writeSidecar(s"$path/_meta.json",
-      s"""{"doc_count": $n, "mode": "overwrite"}""")
+    writeSidecar(s"$path/_mapping.json", mappingJson(schema))
+    writeMeta(path, Meta(n, "overwrite", Some(schema)))
     val idxPath = s"$path/_search_index"
     if (SearchIndex.exists(idxPath))
       SearchIndex.upsert(
@@ -616,6 +710,43 @@ object DocumentSink {
     }
     compactStoreIfNeeded(spark, path)
     n
+  }
+
+  /** `gen` with each scalar column the line already maps at another
+    * type cast to that type — ES's mapping contract: a mapped field
+    * keeps its type and a document's value is coerced to it (a synced
+    * BIGINT id lands in a STRING-mapped store as its string). A value
+    * a narrowing cast would turn to null, or a type that cannot cast,
+    * rejects the write before anything lands. Structured columns are
+    * left to the schema union, which grows them or rejects a
+    * conflict. */
+  private def coerced(gen: DataFrame, stored: StructType): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    def scalar(t: DataType) = t match {
+      case _: StructType | _: ArrayType | _: MapType => false
+      case _ => true
+    }
+    val mapped = stored.fields.map(f => f.name -> f.dataType).toMap
+    val casts = gen.schema.fields.toSeq.collect {
+      case f if mapped.get(f.name).exists(t =>
+          t != f.dataType && scalar(t) && scalar(f.dataType)) =>
+        val to = mapped(f.name)
+        require(Cast.canCast(f.dataType, to), s"field '${f.name}': " +
+          s"${f.dataType.simpleString} cannot be coerced to its mapped " +
+          s"type ${to.simpleString}")
+        (f.name, f.dataType, to)
+    }
+    if (casts.isEmpty) return gen
+    val lost = casts.collect { case (c, from, to)
+        if !Cast.canUpCast(from, to) => col(c).isNotNull && col(c).cast(to).isNull }
+    if (lost.nonEmpty) {
+      val bad = gen.filter(lost.reduce(_ || _)).limit(1).collect()
+      require(bad.isEmpty, "a value does not coerce to its mapped type " +
+        casts.map { case (c, _, to) => s"$c ${to.simpleString}" }
+          .mkString("(", ", ", ")"))
+    }
+    gen.select(gen.columns.toSeq.map(c => casts.collectFirst {
+      case (`c`, _, to) => col(c).cast(to).as(c) }.getOrElse(col(c))): _*)
   }
 
   /** Upsert by `document_id` — [[write]] with no deletes. */
@@ -692,6 +823,13 @@ object DocumentSink {
     * delta files beside one base snapshot). */
   private[graft] val VersionsCompactThreshold = 16
 
+  /** The `_versions` base and delta files' one fixed schema — what
+    * [[writeVersions]] writes and [[versionLine]] reads with. */
+  private val VersionsSchema = StructType(Seq(
+    StructField("document_id", StringType, nullable = false),
+    StructField("version", LongType, nullable = false),
+    StructField("seq_no", LongType, nullable = false)))
+
   /** The CURRENT version line (base snapshot ∪ append-only deltas,
     * max seq_no winning per id), or None iff the store has never been
     * versioned. `pre` narrows BOTH sides BEFORE the latest-wins
@@ -707,7 +845,7 @@ object DocumentSink {
     val dp = new org.apache.hadoop.fs.Path(s"$path/_versions_delta")
     val fs = bp.getFileSystem(conf)
     val sides = Seq(bp, dp).filter(fs.exists)
-      .map(p => pre(spark.read.parquet(p.toString)))
+      .map(p => pre(spark.read.schema(VersionsSchema).parquet(p.toString)))
     if (sides.isEmpty) None
     else Some(sides.reduce(_.unionByName(_))
       .groupBy(col("document_id"))
@@ -736,14 +874,10 @@ object DocumentSink {
                     entries: Map[String, (Long, Long)],
                     nextSeq: Long): Unit = {
     if (entries.nonEmpty) {
-      val schema = StructType(Seq(
-        StructField("document_id", StringType, nullable = false),
-        StructField("version", LongType, nullable = false),
-        StructField("seq_no", LongType, nullable = false)))
       val rows = entries.toSeq.map { case (id, (v, s)) =>
         org.apache.spark.sql.Row(id, v, s) }
       val batch = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema)
+        java.util.Arrays.asList(rows: _*), VersionsSchema)
       val dp = new org.apache.hadoop.fs.Path(s"$path/_versions_delta")
       batch.coalesce(1).write.mode(SaveMode.Append).parquet(dp.toString)
       compactVersionsIfNeeded(spark, path)

@@ -513,4 +513,147 @@ class DocumentSinkSpec extends SparkSpec {
     assert(!folded.exists(r => Set(3L, 4L, 6L, 9L)(r._1)))
     assert(DocumentSink.count(spark, path) == 4 + more)
   }
+
+  /** The schema `_meta.json` records for the store's line. */
+  private def recorded(path: String): Option[org.apache.spark.sql.types.StructType] =
+    Option(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(new java.io.File(s"$path/_meta.json")).get("schema"))
+      .map(n => org.apache.spark.sql.types.StructType.fromDDL(n.asText))
+
+  /** The resolved line's schema as parquet footers infer it: every
+    * base and delta file's schema merged, then unioned by name. */
+  private def inferred(path: String): org.apache.spark.sql.types.StructType = {
+    def dir(d: String) = new java.io.File(s"$path/$d")
+    val base = Option.when(dir("data").isDirectory)(spark.read
+      .option("mergeSchema", "true").parquet(s"$path/data").drop("_bucket"))
+    val deltas = Option.when(Option(dir("data_delta").list()).exists(_.nonEmpty))(
+      spark.read.option("recursiveFileLookup", "true")
+        .option("mergeSchema", "true").parquet(s"$path/data_delta")
+        .drop("_op", "_seq"))
+    (base ++ deltas).reduce(_.unionByName(_, allowMissingColumns = true))
+      .schema
+  }
+
+  private def sameSchema(path: String, step: String): Unit = {
+    val rec = recorded(path)
+    assert(rec.isDefined, s"$step: no schema recorded")
+    def shape(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(shape(rec.get) == shape(inferred(path)),
+      s"$step: recorded ${rec.get.toDDL} vs inferred ${inferred(path).toDDL}")
+    assert(DocumentSink.read(spark, path).schema == rec.get, step)
+  }
+
+  test("_meta.json records the resolved line's schema — names, order " +
+    "and types as the footers infer it — after save, an Append with a " +
+    "new column, a write with a new column, a tombstone-only " +
+    "generation, compaction and on a bucketed base") {
+    val path = tmp()
+    val first = Seq((1L, "a", 1.5), (2L, "b", 2.5), (3L, "c", 3.5))
+      .toDF("id", "v", "score")
+      .withColumn("tags", array(col("v"), lit("t")))
+      .withColumn("label", struct(col("id").as("lid"), col("v").as("name")))
+      .withColumn("amount", col("score").cast("decimal(10,2)"))
+      .withColumn("at", lit("2024-01-05 10:00:00").cast("timestamp"))
+      .withColumn("document_id", col("id").cast("string"))
+    DocumentSink.save(first, path)
+    sameSchema(path, "save")
+    DocumentSink.save(first.filter(col("id") === 3L)
+      .withColumn("id", lit(4L)).withColumn("document_id", lit("4"))
+      .withColumn("extra", lit("x")), path, SaveMode.Append)
+    sameSchema(path, "Append with a new column")
+    assert(DocumentSink.read(spark, path).filter(col("id") === 4L)
+      .select("extra").as[String].collect().toSeq == Seq("x"))
+    DocumentSink.upsert(first.filter(col("id") === 1L)
+      .withColumn("more", lit(7)), path)
+    sameSchema(path, "write with a new column")
+    DocumentSink.deleteByIds(Seq("2").toDF("document_id"), path)
+    sameSchema(path, "tombstone-only generation")
+    // two generations exist: the loop's last write reaches the threshold
+    (5 to 2 + DocumentSink.StoreCompactThreshold).foreach { i =>
+      DocumentSink.upsert(first.filter(col("id") === 3L)
+        .withColumn("id", lit(i.toLong))
+        .withColumn("document_id", lit(i.toString)), path)
+    }
+    assert(!new java.io.File(s"$path/data_delta").exists,
+      "the threshold write must have compacted")
+    sameSchema(path, "compaction")
+    assert(DocumentSink.count(spark, path) ==
+      1 + DocumentSink.StoreCompactThreshold)
+    val bucketed = tmp()
+    DocumentSink.upsert(first, bucketed)
+    assert(DocumentSink.storeBuckets(bucketed).isDefined)
+    sameSchema(bucketed, "bucketed base")
+    DocumentSink.upsert(first.filter(col("id") === 2L)
+      .withColumn("more", lit(1)), bucketed)
+    sameSchema(bucketed, "write with a new column on a bucketed base")
+  }
+
+  test("a store without a recorded schema (the older layout) reads " +
+    "identically by inference and records the schema at its next write") {
+    val path = tmp()
+    def doc(rows: (Long, String)*) = DocumentSink.withDocId(
+      rows.toDF("id", "v"), BareId("id"))
+    DocumentSink.save(doc(1L -> "a", 2L -> "b", 3L -> "c"), path)
+    DocumentSink.upsert(doc(2L -> "B").withColumn("extra", lit(true)), path)
+    DocumentSink.deleteByIds(Seq("3").toDF("document_id"), path)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id").collect().map(_.toString).toSeq
+    val line = DocumentSink.read(spark, path)
+    val (schema, before) = (line.schema, rows(line))
+    val ids = Seq("1", "2", "3", "9")
+    val looked = rows(DocumentSink.lookup(spark, path, ids).get)
+    val meta = java.nio.file.Paths.get(s"$path/_meta.json")
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = om.readTree(meta.toFile)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("schema")
+    Files.write(meta, node.toString.getBytes("UTF-8"))
+    assert(recorded(path).isEmpty)
+    val old = DocumentSink.read(spark, path)
+    assert(old.schema == schema && rows(old) == before)
+    assert(rows(DocumentSink.lookup(spark, path, ids).get) == looked)
+    assert(DocumentSink.count(spark, path) == 2)
+    assert(DocumentSink.upsert(doc(4L -> "d"), path) == 3)
+    sameSchema(path, "the old store's next write")
+  }
+
+  test("model: lookup(ids) equals read(...).filter(ids) over generated " +
+    "upsert, delete and repeated-id sequences across generations and a " +
+    "compaction") {
+    val rnd = new scala.util.Random(20261019L)
+    val path = tmp()
+    val keys = 1L to 12L
+    def batch(ids: Seq[Long], step: Int): org.apache.spark.sql.DataFrame = {
+      val df = ids.map(i => (i, s"v$i-$step")).toDF("id", "v")
+        .withColumn("document_id", col("id").cast("string"))
+      // from step 5 on, upserts carry a column the base never had
+      if (step >= 5) df.withColumn("w", lit(step)) else df
+    }
+    DocumentSink.save(batch(keys.take(8), 0), path)
+    var compacted = false
+    (1 to DocumentSink.StoreCompactThreshold + 4).foreach { step =>
+      val ups = Seq.fill(1 + rnd.nextInt(3))(keys(rnd.nextInt(keys.size)))
+      // a repeated id: one batch landing two rows for one id
+      val upsRep = if (rnd.nextInt(4) == 0) ups :+ ups.head else ups
+      val dels = Seq.fill(rnd.nextInt(3))(keys(rnd.nextInt(keys.size)).toString)
+      rnd.nextInt(3) match {
+        case 0 => DocumentSink.upsert(batch(upsRep, step), path)
+        case 1 if dels.nonEmpty =>
+          DocumentSink.deleteByIds(dels.toDF("document_id"), path)
+        case _ => DocumentSink.write(Some(batch(upsRep, step)),
+          Option.when(dels.nonEmpty)(dels.toDF("document_id")), path)
+      }
+      compacted ||= !new java.io.File(s"$path/data_delta").exists
+      val probe = (Seq.fill(4)(keys(rnd.nextInt(keys.size))) :+ 99L)
+        .map(_.toString).distinct
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).toSeq.sorted
+      val expected = rows(DocumentSink.read(spark, path)
+        .filter(col("document_id").isin(probe: _*)))
+      assert(rows(DocumentSink.lookup(spark, path, probe).get) == expected,
+        s"step $step, ids $probe")
+    }
+    assert(compacted, "the sequence never reached a compaction")
+  }
 }

@@ -1630,29 +1630,8 @@ class HttpApiSpec extends SparkSpec
     assert(getAt(syncedPort, s"/supplier/$minted").statusCode() == 200)
   }
 
-  /** Counts Spark jobs; [[drained]] waits until every event posted
-    * before the call has been delivered (a marker job's start). */
-  private final class JobCounter
-      extends org.apache.spark.scheduler.SparkListener {
-    private val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    private val marks = new java.util.concurrent.atomic.AtomicInteger()
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      if (Option(e.properties).exists(_.getProperty("graft.spec.mark") != null))
-        marks.incrementAndGet()
-      else jobs.incrementAndGet()
-    def drained(): Int = {
-      val m = marks.get
-      val sc = spark.sparkContext
-      sc.setLocalProperty("graft.spec.mark", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.spec.mark", null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (marks.get == m && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(marks.get > m, "listener bus did not drain")
-      jobs.get
-    }
-  }
+  /** The shared [[JobLog]] listener, under this spec's name for it. */
+  private final class JobCounter extends JobLog(spark)
 
   test("_bulk runs a fixed number of Spark jobs per entity and document " +
     "schema: 40 index actions run no more jobs than 4") {
@@ -1681,6 +1660,60 @@ class HttpApiSpec extends SparkSpec
       info(s"Spark jobs: 4 index actions $four, 40 index actions $forty")
       assert(forty <= four, s"40 actions ran $forty jobs, 4 ran $four")
     } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
+  /** Lands `n` customer documents from `from` on the synced store as
+    * one `_bulk` (one delta generation). */
+  private def customerBulk(from: Int, n: Int): String =
+    (from until from + n).flatMap(i => Seq(
+      """{"index": {"_index": "customer"}}""",
+      s"""{"c_custkey": $i, "c_name": "c$i", "c_nationkey": 3, """ +
+        s""""c_acctbal": 1.5, "c_mktsegment": "X"}""")).mkString("\n")
+
+  test("a GET by id on a store with delta generations runs at most 2 " +
+    "Spark jobs: no schema inference, one id lookup") {
+    Seq(993000, 993100).foreach { from =>
+      val r = postAt(syncedPort, "/_bulk", customerBulk(from, 3))
+      assert(r.statusCode() == 200 && !r.body().contains("\"errors\": true"),
+        r.body())
+    }
+    val log = new JobLog(spark)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      // the first GET warms the route; the second is measured
+      assert(getAt(syncedPort, "/customer/993001").statusCode() == 200)
+      val before = log.drained()
+      val r = getAt(syncedPort, "/customer/993101")
+      val jobs = log.drained() - before
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body().contains("\"customer_c_name\":\"c993101\""), r.body())
+      info(s"Spark jobs of one GET: $jobs")
+      assert(jobs <= 2, s"one GET ran $jobs Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("every Spark job of a _bulk runs inside an SQL execution: no " +
+    "parquet footer reads outside one") {
+    val syncedId = s"2_${graft.operators.Denormalize.RunTs}"
+    val body = customerBulk(994000, 4) + "\n" + Seq(
+      s"""{"update": {"_index": "customer", "_id": "$syncedId"}}""",
+      """{"doc": {"customer_c_name": "bulk renamed"}}""",
+      """{"delete": {"_index": "customer", "_id": "993002"}}""")
+      .mkString("\n")
+    val log = new JobLog(spark)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val before = log.drained()
+      val bareBefore = log.withoutExecutionId
+      val r = postAt(syncedPort, "/_bulk", body)
+      val jobs = log.drained() - before
+      val bare = log.withoutExecutionId - bareBefore
+      assert(r.statusCode() == 200 && !r.body().contains("\"errors\": true"),
+        r.body())
+      info(s"Spark jobs of one _bulk: $jobs, outside an SQL execution: $bare")
+      assert(jobs > 0)
+      assert(bare == 0, s"$bare of $jobs _bulk jobs ran outside an SQL execution")
+    } finally spark.sparkContext.removeSparkListener(log)
   }
 
   test("stop() shuts down the request threads start() created") {
@@ -2012,6 +2045,51 @@ class HttpApiSpec extends SparkSpec
         s"""{"search_term": "the window", "index": "documents",
            | "type": "phrase", "slop": $slop}""".stripMargin)
         .statusCode() == 200)
+  }
+
+  test("DSL, /search limit and scroll size integer knobs answer 400 " +
+    "naming the knob on a non-integer — never a silent 0") {
+    def dsl(query: String): String =
+      s"""{"index": "documents", "query": $query}"""
+    val cases = Seq(
+      "slop" -> dsl(
+        """{"match_phrase": {"text": {"query": "the window", "slop": "two"}}}"""),
+      "slop" -> dsl("""{"match_phrase_prefix": {"text": """ +
+        """{"query": "the win", "slop": "two"}}}"""),
+      "max_expansions" -> dsl("""{"match_phrase_prefix": {"text": """ +
+        """{"query": "the win", "max_expansions": "many"}}}"""),
+      "slop" -> dsl("""{"multi_match": {"query": "the window", """ +
+        """"fields": ["text"], "type": "phrase", "slop": "two"}}"""),
+      "slop" -> dsl("""{"multi_match": {"query": "the win", """ +
+        """"fields": ["text"], "type": "phrase_prefix", "slop": "two"}}"""),
+      "max_expansions" -> dsl("""{"multi_match": {"query": "the win", """ +
+        """"fields": ["text"], "type": "phrase_prefix", """ +
+        """"max_expansions": "many"}}"""),
+      "prefix_length" -> dsl("""{"fuzzy": {"text": {"value": "windoq", """ +
+        """"prefix_length": "one"}}}"""),
+      "max_expansions" -> dsl("""{"fuzzy": {"text": {"value": "windoq", """ +
+        """"max_expansions": "many"}}}"""),
+      "prefix_length" -> ("""{"index": "documents", "suggest": {"ac": """ +
+        """{"prefix": "wimd", "completion": {"field": "text", """ +
+        """"fuzzy": {"prefix_length": "one"}}}}}"""),
+      "size" -> ("""{"index": "documents", "scroll": "1m", "size": "big", """ +
+        """"query": {"match": {"text": "window"}}}"""))
+    for ((knob, body) <- cases) {
+      val r = post("/search/advanced", body)
+      assert(r.statusCode() == 400, s"$body: ${r.body().take(300)}")
+      assert(r.body().contains(s"$knob must be an integer"), r.body())
+    }
+    for (index <- Seq("documents", "*")) {
+      val r = post("/search",
+        s"""{"search_term": "window", "index": "$index", "limit": "ten"}""")
+      assert(r.statusCode() == 400, s"$index: ${r.body().take(300)}")
+      assert(r.body().contains("limit must be an integer"), r.body())
+    }
+    // integers, also as JSON strings, still serve
+    assert(post("/search/advanced", dsl("""{"match_phrase": {"text": """ +
+      """{"query": "the window", "slop": "2"}}}""")).statusCode() == 200)
+    assert(post("/search", """{"search_term": "window", """ +
+      """"index": "documents", "limit": "3"}""").statusCode() == 200)
   }
 
   test("a request body declared past 100 MB is refused 413 with a JSON " +

@@ -48,4 +48,39 @@ class StageCacheSpec extends SparkSpec {
     assert((persistedIds -- baseline).isEmpty,
       "ingest cache survived the boundary release")
   }
+
+  test("two concurrent scopes: a scope releases only the stages it " +
+    "created, never a concurrent scope's or an unscoped one") {
+    import org.apache.spark.storage.StorageLevel
+    StageCache.releaseAll()
+    def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.storageLevel != StorageLevel.NONE
+    val unscoped = StageCache.stage(spark.range(50).selectExpr("id * 7 AS u"))
+    val staged = new java.util.concurrent.CountDownLatch(1)
+    val resume = new java.util.concurrent.CountDownLatch(1)
+    @volatile var held: org.apache.spark.sql.DataFrame = null
+    @volatile var heldWhileOpen = false
+    // scope A stages a frame and stays open while scope B runs and exits
+    val a = new Thread(() => StageCache.scoped {
+      held = StageCache.stage(spark.range(50).selectExpr("id * 3 AS a"))
+      staged.countDown()
+      resume.await()
+      heldWhileOpen = cached(held)
+    })
+    a.start()
+    assert(staged.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val b = StageCache.scoped {
+      StageCache.stage(spark.range(50).selectExpr("id * 5 AS b"))
+    }
+    assert(!cached(b), "scope B's own stage outlived its scope")
+    assert(cached(held), "scope B released scope A's stage")
+    assert(cached(unscoped), "scope B released an unscoped stage")
+    resume.countDown()
+    a.join(60000)
+    assert(heldWhileOpen, "scope A's stage was gone before A ended")
+    assert(!cached(held), "scope A's stage outlived its scope")
+    assert(cached(unscoped))
+    StageCache.releaseAll()
+    assert(!cached(unscoped) && StageCache.liveCount == 0)
+  }
 }
