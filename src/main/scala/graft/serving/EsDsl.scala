@@ -1471,11 +1471,11 @@ object EsDsl {
       if (!v.isNumber) bad("query_vector must be numeric")
       v.asDouble
     }
-    val k = Option(kn.get("k")).map(_.asInt)
+    val k = intOpt(kn, "k")
       .getOrElse(bad("knn needs \"k\""))
     if (k < 1 || k > MaxResultWindow)
       bad(s"knn k must be 1..$MaxResultWindow")
-    val nc = Option(kn.get("num_candidates")).map(_.asInt)
+    val nc = intOpt(kn, "num_candidates")
       .getOrElse(bad("knn needs \"num_candidates\""))
     if (nc < k || nc > MaxResultWindow)
       bad(s"num_candidates must be k..$MaxResultWindow")
@@ -1581,8 +1581,8 @@ object EsDsl {
     // inner_hits — reject by name, never drop the section
     if (ctx.innerHitCols.nonEmpty)
       bad("inner_hits is not supported inside a knn filter")
-    val size = Option(body.get("size")).map(_.asInt).getOrElse(10)
-    val from = Option(body.get("from")).map(_.asInt).getOrElse(0)
+    val size = intOpt(body, "size").getOrElse(10)
+    val from = intOpt(body, "from").getOrElse(0)
     if (size < 0 || from < 0 || from + size > MaxResultWindow)
       bad(s"from + size must stay within 0..$MaxResultWindow " +
         "(index.max_result_window)")
@@ -1619,15 +1619,15 @@ object EsDsl {
                        tieNames: Seq[String]): DataFrame = {
     val rrf = Option(body.get("rank").get("rrf"))
       .getOrElse(bad("rank supports only {\"rrf\": {...}}"))
-    val window = Option(rrf.get("rank_window_size")).map(_.asInt)
+    val window = intOpt(rrf, "rank_window_size")
       .getOrElse(100)
     if (window < 1 || window > MaxResultWindow)
       bad(s"rank_window_size must be 1..$MaxResultWindow")
-    val kConst = Option(rrf.get("rank_constant")).map(_.asInt)
+    val kConst = intOpt(rrf, "rank_constant")
       .getOrElse(60)
     if (kConst < 1) bad("rank_constant must be >= 1")
-    val size = Option(body.get("size")).map(_.asInt).getOrElse(10)
-    val from = Option(body.get("from")).map(_.asInt).getOrElse(0)
+    val size = intOpt(body, "size").getOrElse(10)
+    val from = intOpt(body, "from").getOrElse(0)
     if (size < 0 || from < 0 || from + size > MaxResultWindow)
       bad(s"from + size must stay within 0..$MaxResultWindow")
     // ES's rule: the page must fit the fusion window — a larger size
@@ -1819,8 +1819,8 @@ object EsDsl {
       case "best_fields" => true
       case other => bad(s"unsupported multi_match type '$other'")
     }
-    val size = Option(body.get("size")).map(_.asInt).getOrElse(10)
-    val from = Option(body.get("from")).map(_.asInt).getOrElse(0)
+    val size = intOpt(body, "size").getOrElse(10)
+    val from = intOpt(body, "from").getOrElse(0)
     if (size < 0 || from < 0 || from + size > MaxResultWindow)
       bad(s"from + size must stay within 0..$MaxResultWindow")
     // ROUTING IS ENGINE-SIDE: `indexRoot` names where the per-entity
@@ -2107,8 +2107,8 @@ object EsDsl {
     val postFilter: Option[Column] = Option(body.get("post_filter"))
       .map(pf => coalesce(ctx.inFilter { clause(pf, ctx) }.pred,
         lit(false)))
-    val size = Option(body.get("size")).map(_.asInt).getOrElse(10)
-    val from = Option(body.get("from")).map(_.asInt).getOrElse(0)
+    val size = intOpt(body, "size").getOrElse(10)
+    val from = intOpt(body, "from").getOrElse(0)
     if (size < 0 || from < 0 || from + size > MaxResultWindow)
       bad(s"from + size must stay within 0..$MaxResultWindow " +
         "(index.max_result_window)")

@@ -2,6 +2,8 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graft.StoreSchemas
@@ -22,9 +24,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     SQL-type→ES-type cascade, data_lake_sync.py:94-117 — except
   *     derived, so it can never drift),
   *   - `_meta.json` — doc count + write mode for count verification
-  *     (reference: src/es_connector.py:76-83), and the resolved line's
-  *     schema, which every store read uses instead of inferring one
-  *     (see [[lineSchema]]).
+  *     (reference: src/es_connector.py:76-83), stamped with the on-disk
+  *     line it counts so that [[count]] can answer from it, and the
+  *     resolved line's schema, which every store read uses instead of
+  *     inferring one (see [[lineSchema]]).
   *
   * Semantics preserved from the reference:
   *   - drop-and-recreate ⇒ `SaveMode.Overwrite` (src/es_connector.py:23-25
@@ -109,6 +112,22 @@ object DocumentSink {
     st.fields.map(f => s""""${f.name}": ${fieldMapping(f.dataType)}""")
       .mkString("{", ", ", "}")
 
+  /** The leaf types `_mapping.json` records per top-level field —
+    * what a rewrite keeps, as ES never changes a mapped field's type.
+    * Structured fields (with `properties`) are left to derivation,
+    * which grows them with the schema; a missing or unparsable sidecar
+    * records none. */
+  private def mappedTypes(path: String): Map[String, String] = {
+    val p = Paths.get(s"$path/_mapping.json")
+    if (!Files.exists(p)) Map.empty
+    else scala.util.Try {
+      Json.readTree(p.toFile).get("properties").fields.asScala
+        .collect { case e if !e.getValue.has("properties") &&
+            e.getValue.hasNonNull("type") =>
+          e.getKey -> e.getValue.get("type").asText }.toMap
+    }.getOrElse(Map.empty)
+  }
+
   /** ES-style mapping JSON for `schema`; `fieldTypes` overrides the
     * derived type per column name (the varchar→keyword / json→object
     * fidelity the schema alone cannot express). An override wins
@@ -163,7 +182,8 @@ object DocumentSink {
     * count written BY THIS CALL (`bulk_index`'s success count); for the
     * whole-index total under Append use [[count]]. `fieldTypes` refines
     * the sidecar mapping per column (keyword/text/object — see
-    * [[esType]]). */
+    * [[esType]]); an Append keeps every other mapped field's recorded
+    * type. */
   def save(df: DataFrame, path: String,
            mode: SaveMode = SaveMode.Overwrite,
            fieldTypes: Map[String, String] = Map.empty,
@@ -175,9 +195,11 @@ object DocumentSink {
     // the schema is recorded BEFORE the data lands, so a crash leaves
     // a superset (absent columns read as null): an Overwrite first
     // drops the old record (a crash then reads the inferred schema),
-    // an Append records the union of the stored schema and its own
+    // an Append records the union of the stored schema and its own,
+    // unstamped — the base is about to grow under the recorded count
     val spark = df.sparkSession
     val own = StoreSchemas.asRead(df.schema)
+    val prior = readMeta(path)
     val schema =
       if (mode == SaveMode.Overwrite) {
         val fs = hadoopFs(spark, path)
@@ -187,7 +209,8 @@ object DocumentSink {
       } else {
         val s = lineSchema(spark, path)
           .fold(own)(StoreSchemas.union(spark, _, own))
-        readMeta(path).foreach(m => writeMeta(path, m.copy(schema = Some(s))))
+        prior.foreach(m =>
+          writeMeta(path, m.copy(schema = Some(s), line = None)))
         s
       }
     // `_bucket` is the store's internal layout column — a document
@@ -225,8 +248,17 @@ object DocumentSink {
           s"""{"buckets": $buckets}""")
         c
       }
-    writeSidecar(s"$path/_mapping.json", mappingJson(df.schema, fieldTypes))
-    writeMeta(path, Meta(n, mode.name.toLowerCase, Some(schema)))
+    // an Append maps the whole line, keeping the recorded types; the
+    // call's own overrides win
+    val mapped =
+      if (mode == SaveMode.Append) mappedTypes(path) else Map.empty[String, String]
+    writeSidecar(s"$path/_mapping.json",
+      mappingJson(schema, mapped ++ fieldTypes))
+    // an Overwrite leaves exactly the base it just wrote; an Append's
+    // count is this call's rows, never a total, so it stays unstamped
+    writeMeta(path, Meta(n, mode.name.toLowerCase, Some(schema),
+      Option.when(mode == SaveMode.Overwrite)(Line(base = true, Nil)),
+      prior.fold(0L)(_.lastSeq)))
     // write-time search-index maintenance (ES builds its inverted index
     // inside bulk_index — src/es_connector.py:51-74): an adjacent index
     // previously built by SearchIndex.build stays in lockstep with the
@@ -322,12 +354,28 @@ object DocumentSink {
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** The live delta generations under `deltaRoot`, ascending — one
+    * `listStatus` (a missing directory has none). */
   private def deltaGens(fs: org.apache.hadoop.fs.FileSystem,
                         deltaRoot: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(deltaRoot)) Seq.empty
-    else fs.listStatus(deltaRoot).toSeq
+    (try fs.listStatus(deltaRoot).toSeq
+     catch { case _: java.io.FileNotFoundException => Seq.empty })
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta-"))
-      .map(_.getPath.getName.stripPrefix("delta-").toLong)
+      .map(_.getPath.getName.stripPrefix("delta-").toLong).sorted
+
+  /** What the store's line is made of on disk: whether a base exists,
+    * and its live delta generations, ascending. It is also the stamp a
+    * `_meta.json` count carries (see [[count]]). */
+  private final case class Line(base: Boolean, deltas: Seq[Long]) {
+    def isEmpty: Boolean = !base && deltas.isEmpty
+  }
+
+  /** The store's [[Line]] as the file system has it now: one `exists`
+    * of `data` and one `listStatus` of `data_delta`, both driver-side. */
+  private def lineOnDisk(fs: org.apache.hadoop.fs.FileSystem,
+                         path: String): Line =
+    Line(fs.exists(new org.apache.hadoop.fs.Path(s"$path/data")),
+      deltaGens(fs, new org.apache.hadoop.fs.Path(s"$path/data_delta")))
 
   /** The CURRENT document line of the store at `path` — base ∪ delta
     * generations with the latest generation winning per document_id
@@ -352,23 +400,20 @@ object DocumentSink {
     * DocumentSinkSpec ("refresh the mapping sidecar" test). */
   def readOpt(spark: org.apache.spark.sql.SparkSession,
               path: String): Option[DataFrame] = {
-    val fs = hadoopFs(spark, path)
-    val bp = new org.apache.hadoop.fs.Path(s"$path/data")
-    val hasBase = fs.exists(bp)
-    val gens = deltaGens(fs, new org.apache.hadoop.fs.Path(s"$path/data_delta"))
-    if (!hasBase && gens.isEmpty) return None
+    val on = lineOnDisk(hadoopFs(spark, path), path)
+    if (on.isEmpty) return None
     val schema = lineSchema(spark, path).get
     // a bucketed base carries its hash-partition column — an
     // internal layout detail, never part of the document line
     lazy val base =
-      spark.read.schema(schema).parquet(bp.toString).drop("_bucket")
-    if (gens.isEmpty) return Some(base)
+      spark.read.schema(schema).parquet(s"$path/data").drop("_bucket")
+    if (on.deltas.isEmpty) return Some(base)
     // generations are request-sized and bounded by the compaction
     // threshold — everything delta-side is SMALL
-    val deltas = deltaFrame(spark, path, gens, schema)
+    val deltas = deltaFrame(spark, path, on.deltas, schema)
     val winners = latest(deltas)
     val touched = deltas.select("document_id").distinct()
-    if (!hasBase) return Some(winners)
+    if (!on.base) return Some(winners)
     // an expression join keeps the base's column order, the schema's
     Some(base
       .join(broadcast(touched),
@@ -394,18 +439,14 @@ object DocumentSink {
     * unioned by name — and the store's next write records it. */
   def lineSchema(spark: org.apache.spark.sql.SparkSession,
                  path: String): Option[StructType] = {
-    val fs = hadoopFs(spark, path)
-    val bp = new org.apache.hadoop.fs.Path(s"$path/data")
-    val dp = new org.apache.hadoop.fs.Path(s"$path/data_delta")
-    val hasBase = fs.exists(bp)
-    val hasDelta = deltaGens(fs, dp).nonEmpty
-    if (!hasBase && !hasDelta) None
+    val on = lineOnDisk(hadoopFs(spark, path), path)
+    if (on.isEmpty) None
     else readMeta(path).flatMap(_.schema).orElse {
-      val base = Option.when(hasBase)(
-        spark.read.parquet(bp.toString).drop("_bucket").schema)
-      val delta = Option.when(hasDelta)(
+      val base = Option.when(on.base)(
+        spark.read.parquet(s"$path/data").drop("_bucket").schema)
+      val delta = Option.when(on.deltas.nonEmpty)(
         spark.read.option("recursiveFileLookup", "true")
-          .option("mergeSchema", "true").parquet(dp.toString)
+          .option("mergeSchema", "true").parquet(s"$path/data_delta")
           .drop("_op", "_seq").schema)
       (base ++ delta).reduceOption(StoreSchemas.union(spark, _, _))
     }
@@ -418,7 +459,7 @@ object DocumentSink {
                          path: String, gens: Seq[Long],
                          schema: StructType): DataFrame =
     spark.read.schema(schema.add("_op", StringType).add("_seq", LongType))
-      .parquet(gens.sorted.map(g => s"$path/data_delta/" + f"delta-$g%06d"): _*)
+      .parquet(gens.map(g => s"$path/data_delta/" + f"delta-$g%06d"): _*)
 
   /** Latest generation wins per document_id (every row of the winning
     * generation, as a batch repeating an id landed them) and
@@ -438,11 +479,15 @@ object DocumentSink {
     readOpt(spark, path).getOrElse(
       throw new IllegalStateException(s"no document store at $path"))
 
-  /** The `_meta.json` sidecar: the last writer's doc count and mode,
-    * and the line's schema (None on a store written before it was
-    * recorded — see [[lineSchema]]). */
+  /** The `_meta.json` sidecar: the last writer's doc count and mode;
+    * the [[Line]] the count describes (None: unstamped — an Append, a
+    * write in flight, or a store written before the stamp); the
+    * highest delta generation number ever landed, so numbers never
+    * repeat across compactions; and the line's schema (None on a store
+    * written before it was recorded — see [[lineSchema]]). */
   private final case class Meta(docCount: Long, mode: String,
-                                schema: Option[StructType])
+                                schema: Option[StructType],
+                                line: Option[Line], lastSeq: Long)
 
   /** The store's `_meta.json`; a missing or unparsable one (a crash
     * mid-write) is absent — counts and schema then come from the data. */
@@ -451,31 +496,35 @@ object DocumentSink {
     if (!Files.exists(p)) None
     else scala.util.Try {
       val n = Json.readTree(p.toFile)
+      val line = Option(n.get("line")).map(l => Line(l.get("base").asBoolean,
+        l.get("deltas").elements.asScala.map(_.asLong).toSeq))
       Meta(n.get("doc_count").asLong, n.get("mode").asText,
-        Option(n.get("schema")).map(d => StructType.fromDDL(d.asText)))
+        Option(n.get("schema")).map(d => StructType.fromDDL(d.asText)),
+        line, Option(n.get("last_seq")).fold(0L)(_.asLong))
     }.toOption
   }
 
   private def writeMeta(path: String, m: Meta): Unit =
     writeSidecar(s"$path/_meta.json",
       s"""{"doc_count": ${m.docCount}, "mode": "${m.mode}"${
+        m.line.fold("")(l => s""", "line": {"base": ${l.base}, """ +
+          s""""deltas": ${l.deltas.mkString("[", ", ", "]")}}""")
+      }, "last_seq": ${m.lastSeq}${
         m.schema.fold("")(s => ", \"schema\": " +
           Json.writeValueAsString(s.toDDL))}}""")
 
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** The store's current doc count as the LAST WRITER recorded it —
-    * the arithmetic the O(request) write path maintains. A sidecar
-    * written by an Append-mode batch sync records only that call's
-    * rows, so it cannot seed the arithmetic — fall back to one
-    * resolved count (and the next write re-records the total). */
-  private def metaDocCount(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Long =
-    readMeta(path).filter(_.mode == "overwrite").map(_.docCount)
-      .getOrElse(read(spark, path).count())
+  /** The count `meta` records, when it is exact for the line `on`: an
+    * overwrite-mode record stamped with exactly `on` (see [[count]]). */
+  private def recordedCount(meta: Option[Meta], on: Line): Option[Long] =
+    meta.filter(m => m.mode == "overwrite" && m.line.contains(on))
+      .map(_.docCount)
 
   /** Stage `df` (already carrying `_op`/`_seq`), record `meta` (the
-    * line's schema grown by this generation) and land it as delta
+    * line's schema grown by this generation, the count and stamp of
+    * the line BEFORE it — so the window between the rename and the
+    * caller's final record fails the stamp check) and land it as delta
     * generation `seq` with ONE atomic rename. Returns the row count
     * (from the staging write's own observe metric). */
   private def appendDelta(df: DataFrame, path: String,
@@ -504,17 +553,19 @@ object DocumentSink {
 
   /** Fold the delta generations into a new base once the threshold
     * accumulates: resolved line → staged write → [[Lake.swapIn]] →
-    * clear deltas. The fold's own count re-records the exact total
-    * (healing any arithmetic lost to a crashed sidecar write); the
-    * schema is the line's, unchanged. The new base is written
-    * BUCKETED on the id hash (preserving — or, for a pre-round-18
-    * flat store, establishing — the layout the write-path probes
-    * prune against). */
+    * clear deltas → record. The fold's own count is the exact total
+    * of the new base, stamped with it; the schema is the line's,
+    * unchanged, and so is the generation high-water mark (the next
+    * write does not restart at `delta-000001`). The new base is
+    * written BUCKETED on the id hash (preserving — or, for a
+    * pre-round-18 flat store, establishing — the layout the
+    * write-path probes prune against). */
   private def compactStoreIfNeeded(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val fs = hadoopFs(spark, path)
     val dp = new org.apache.hadoop.fs.Path(s"$path/data_delta")
-    if (deltaGens(fs, dp).size < StoreCompactThreshold) return
+    val gens = deltaGens(fs, dp)
+    if (gens.size < StoreCompactThreshold) return
     val line = read(spark, path)
     val buckets = storeBuckets(path).getOrElse(StoreBuckets)
     val tmp =
@@ -527,19 +578,8 @@ object DocumentSink {
       new org.apache.hadoop.fs.Path(s"$path/data"))
     fs.delete(dp, true)
     writeSidecar(s"$path/_layout.json", s"""{"buckets": $buckets}""")
-    writeMeta(path, Meta(n, "overwrite", Some(line.schema)))
-  }
-
-  /** Does ANY generation of the store exist (base or delta)? The
-    * cheap existence test [[write]]'s bootstrap decision needs —
-    * [[readOpt]] answers the same question but builds the whole
-    * resolved-line plan to do it. */
-  private def storeExists(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Boolean = {
-    val fs = hadoopFs(spark, path)
-    fs.exists(new org.apache.hadoop.fs.Path(s"$path/data")) ||
-      deltaGens(fs,
-        new org.apache.hadoop.fs.Path(s"$path/data_delta")).nonEmpty
+    writeMeta(path, Meta(n, "overwrite", Some(line.schema),
+      Some(Line(base = true, Nil)), gens.max))
   }
 
   /** The current line's rows of `ids` — the rows
@@ -548,7 +588,7 @@ object DocumentSink {
     * reads ([[idsInLineFrame]] at the newest generation). */
   def lookup(spark: org.apache.spark.sql.SparkSession, path: String,
              ids: Seq[String]): Option[DataFrame] =
-    Option.when(storeExists(spark, path))(
+    Option.unless(lineOnDisk(hadoopFs(spark, path), path).isEmpty)(
       idsInLineFrame(spark, path, ids, belowSeq = Long.MaxValue))
 
   /** The store's line as of just BEFORE delta generation `belowSeq`,
@@ -564,15 +604,13 @@ object DocumentSink {
   private[graft] def idsInLineFrame(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: Seq[String], belowSeq: Long): DataFrame = {
-    val fs = hadoopFs(spark, path)
-    val gens = deltaGens(fs,
-      new org.apache.hadoop.fs.Path(s"$path/data_delta")).filter(_ < belowSeq)
-    val bp = new org.apache.hadoop.fs.Path(s"$path/data")
+    val on = lineOnDisk(hadoopFs(spark, path), path)
+    val gens = on.deltas.filter(_ < belowSeq)
     val schema = lineSchema(spark, path).getOrElse(
       throw new IllegalStateException(s"no document store at $path"))
     val idPred = col("document_id").isin(ids: _*)
-    val base = Option.when(fs.exists(bp)) {
-      val b0 = spark.read.schema(schema).parquet(bp.toString)
+    val base = Option.when(on.base) {
+      val b0 = spark.read.schema(schema).parquet(s"$path/data")
       val b1 = (b0.columns.contains("_bucket"), storeBuckets(path)) match {
         case (true, Some(n)) =>
           // the ids' buckets, hashed on the driver with the SAME
@@ -626,7 +664,10 @@ object DocumentSink {
     * bootstrap/compaction it prunes to the ids' buckets at PLANNING
     * time, so the count costs O(request), plan-pinned in
     * DocumentSinkSpec), giving count = prev − |existing ∩ (U ∪ D)| +
-    * |U|; one mapping/meta sidecar rewrite from the recorded schema;
+    * |U| (prev is the recorded count when its stamp holds, else one
+    * resolved count — so a count left stale by a crash heals at the
+    * next write); one mapping/meta sidecar rewrite from the recorded
+    * schema, keeping every mapped field's recorded type;
     * one delta update of the adjacent search index from the landed
     * generation's stable files (a crash in between leaves the index
     * one consistent snapshot behind, never ahead); one compaction
@@ -646,15 +687,19 @@ object DocumentSink {
     // the landed generation never holds two ops for one id
     val ups = upserts.map(u => deletes.fold(u)(d => u.join(
       broadcast(d.select("document_id")), Seq("document_id"), "left_anti")))
-    if (!storeExists(spark, path)) ups match {
+    val before = lineOnDisk(hadoopFs(spark, path), path)
+    if (before.isEmpty) ups match {
       case Some(b) => return save(b, path, bucketByDocId = true)
       case None =>
         throw new IllegalStateException(s"no document store at $path")
     }
-    val fs = hadoopFs(spark, path)
-    val deltaRoot = new org.apache.hadoop.fs.Path(s"$path/data_delta")
-    val prevTotal = metaDocCount(spark, path)
-    val seq = (deltaGens(fs, deltaRoot) :+ 0L).max + 1
+    val prior = readMeta(path)
+    val prevTotal = recordedCount(prior, before)
+      .getOrElse(read(spark, path).count())
+    // past every live generation and every one ever recorded: a
+    // compaction clears the deltas, and a number landed again would
+    // make the line match a stale stamp
+    val seq = (before.deltas ++ prior.map(_.lastSeq) :+ 0L).max + 1
     val sides = ups.map(_.withColumn("_op", lit("upsert"))).toSeq ++
       deletes.map(_.select("document_id").distinct()
         .withColumn("_op", lit("delete")))
@@ -671,7 +716,7 @@ object DocumentSink {
     val landing = (if (sides.size == 1) gen else gen.coalesce(1))
       .withColumn("_seq", lit(seq))
     val rows = appendDelta(landing, path, seq,
-      Meta(prevTotal, "overwrite", Some(schema)))
+      Meta(prevTotal, "overwrite", Some(schema), Some(before), seq))
     val landed = spark.read.schema(StoreSchemas.asRead(landing.schema))
       .parquet(s"$path/data_delta/" + f"delta-$seq%06d")
     val ops = landed.select("document_id", "_op").collect()
@@ -687,8 +732,10 @@ object DocumentSink {
     // per the union-by-name decision on [[readOpt]], RETAINS a
     // column whose last carrier was just deleted (ES: a mapping
     // never loses fields)
-    writeSidecar(s"$path/_mapping.json", mappingJson(schema))
-    writeMeta(path, Meta(n, "overwrite", Some(schema)))
+    writeSidecar(s"$path/_mapping.json",
+      mappingJson(schema, mappedTypes(path)))
+    writeMeta(path, Meta(n, "overwrite", Some(schema),
+      Some(before.copy(deltas = before.deltas :+ seq)), seq))
     val idxPath = s"$path/_search_index"
     if (SearchIndex.exists(idxPath))
       SearchIndex.upsert(
@@ -761,10 +808,37 @@ object DocumentSink {
   def deleteByIds(ids: DataFrame, path: String): Long =
     write(None, Some(ids), path)
 
-  /** Count verification (reference: src/es_connector.py:76-83) —
-    * counts the RESOLVED line (base ∪ deltas). */
+  /** Count verification (reference: src/es_connector.py:76-83): the
+    * RESOLVED line's (base ∪ deltas) doc count. Like ES's `_count`,
+    * which answers from index metadata rather than scanning documents,
+    * it answers from `_meta.json` — no Spark job, no footer read —
+    * whenever the recorded count can be trusted, and otherwise counts
+    * the resolved line.
+    *
+    * The STAMP: every total a writer records names the on-disk [[Line]]
+    * it counts (`"line": {"base": …, "deltas": […]}`). The count is
+    * trusted iff the record's mode is `overwrite` and its stamp equals
+    * the line on disk now (one `exists` of `data`, one `listStatus` of
+    * `data_delta`). An Append's count is that call's rows, and a store
+    * written before the stamp (or an unparsable record) has none: those
+    * are counted, and the store's next overwrite or write stamps it.
+    *
+    * CRASH ORDERING — every window fails the check, none misleads:
+    *   - [[save]] Overwrite deletes the deltas, then the record, then
+    *     writes the base and the stamped record; an Append first
+    *     unstamps the record, then grows the base;
+    *   - [[write]] records the PRE-write count with the pre-write stamp
+    *     before its rename, so from the rename until its final record
+    *     the new generation is a mismatch;
+    *   - compaction swaps the base in and deletes the deltas before it
+    *     records; between the swap and the delete the old record still
+    *     counts right (the deltas replay idempotently over the fold);
+    *   - generation numbers never repeat ([[Meta]]'s `lastSeq`), so a
+    *     record that outlived a compaction cannot match a later
+    *     generation landed under the same name. */
   def count(spark: org.apache.spark.sql.SparkSession, path: String): Long =
-    read(spark, path).count()
+    recordedCount(readMeta(path), lineOnDisk(hadoopFs(spark, path), path))
+      .getOrElse(read(spark, path).count())
 
   // ---- per-document version metadata (ES `_version`/`_seq_no` wire) ----
   //

@@ -656,4 +656,207 @@ class DocumentSinkSpec extends SparkSpec {
     }
     assert(compacted, "the sequence never reached a compaction")
   }
+
+  private def metaFile(path: String) =
+    java.nio.file.Paths.get(s"$path/_meta.json")
+
+  /** `count` agrees with the resolved line, counted from scratch. */
+  private def exact(path: String, step: String): Unit = {
+    val line = DocumentSink.read(spark, path).count()
+    assert(DocumentSink.count(spark, path) == line, step)
+  }
+
+  test("a count left stale between a write's rename and its final " +
+    "record heals: the next write and count answer the resolved line") {
+    val path = tmp()
+    def doc(rows: (Long, String)*) = DocumentSink.withDocId(
+      rows.toDF("id", "v"), BareId("id"))
+    DocumentSink.save(doc(1L -> "a", 2L -> "b", 3L -> "c"), path)
+    assert(DocumentSink.upsert(doc(4L -> "d"), path) == 4)
+    // the crash window: the generation landed, its record did not
+    val pre = Files.readAllBytes(metaFile(path))
+    assert(DocumentSink.upsert(doc(5L -> "e"), path) == 5)
+    Files.write(metaFile(path), pre)
+    exact(path, "after the emulated crash")
+    assert(DocumentSink.upsert(doc(6L -> "f"), path) ==
+      DocumentSink.read(spark, path).count())
+    exact(path, "after the healing write")
+    // the same window under a delete
+    val pre2 = Files.readAllBytes(metaFile(path))
+    assert(DocumentSink.deleteByIds(Seq("1").toDF("document_id"), path) == 5)
+    Files.write(metaFile(path), pre2)
+    exact(path, "after the emulated crash of a delete")
+    assert(DocumentSink.deleteByIds(Seq("2").toDF("document_id"), path) ==
+      DocumentSink.read(spark, path).count())
+    exact(path, "after the healing delete")
+  }
+
+  test("a record that outlived a compaction never matches a later " +
+    "generation: numbers do not restart at delta-000001") {
+    val path = tmp()
+    def doc(rows: (Long, String)*) = DocumentSink.withDocId(
+      rows.toDF("id", "v"), BareId("id"))
+    DocumentSink.save(doc(0L -> "base"), path)
+    DocumentSink.upsert(doc(1L -> "v1"), path)
+    val stale = Files.readAllBytes(metaFile(path))
+    (2 to DocumentSink.StoreCompactThreshold).foreach { i =>
+      DocumentSink.upsert(doc(i.toLong -> s"v$i"), path)
+    }
+    assert(!new java.io.File(s"$path/data_delta").exists,
+      "the threshold write must have compacted")
+    // the compaction window: the deltas are gone, its record is not
+    // written, an older one (stamped with generation 1) is on disk
+    Files.write(metaFile(path), stale)
+    exact(path, "after the emulated compaction crash")
+    assert(DocumentSink.upsert(doc(100L -> "x"), path) ==
+      DocumentSink.read(spark, path).count())
+    val gens = new java.io.File(s"$path/data_delta").list().toSeq
+    assert(!gens.contains("delta-000001"), gens.mkString(", "))
+    // and that write's own rename-to-record window
+    Files.write(metaFile(path), stale)
+    exact(path, "after the emulated crash of the next write")
+    assert(DocumentSink.upsert(doc(101L -> "y"), path) ==
+      DocumentSink.read(spark, path).count())
+    exact(path, "after the healing write")
+  }
+
+  test("model: count equals read(...).count() after every step of " +
+    "generated save, validatedWrite, write and compaction sequences, " +
+    "stamped or not, across crashed writes") {
+    val rnd = new scala.util.Random(20261020L)
+    val path = tmp()
+    val keys = 1L to 12L
+    def batch(ids: Seq[Long], step: Int): org.apache.spark.sql.DataFrame = {
+      val df = ids.map(i => (i, s"v$i-$step")).toDF("id", "v")
+        .withColumn("document_id", col("id").cast("string"))
+      if (step % 3 == 0) df.withColumn("w", lit(step)) else df
+    }
+    def some(n: Int) = Seq.fill(n)(keys(rnd.nextInt(keys.size)))
+    var compactions = 0
+    var step = 0
+    def check(what: String): Unit = {
+      step += 1
+      exact(path, s"step $step: $what")
+    }
+    for (round <- 0 until 3) {
+      round match {
+        case 0 => DocumentSink.save(batch(some(6).distinct, 0), path)
+        case 1 =>
+          // rejected rows (a null id) go to the side-channel
+          val rows = some(5).distinct.map(i => Option(i)) :+ None
+          DocumentSink.validatedWrite(rows.toDF("id")
+            .withColumn("v", lit("vw"))
+            .withColumn("document_id", col("id").cast("string")),
+            path, Seq("id"))
+        case _ =>
+          DocumentSink.save(batch(some(6).distinct, 0), path,
+            bucketByDocId = true)
+      }
+      check(s"round $round base")
+      (1 to DocumentSink.StoreCompactThreshold + 8).foreach { i =>
+        val ups = some(1 + rnd.nextInt(3))
+        // a batch repeating an id lands two rows for it
+        val upsRep = if (rnd.nextInt(4) == 0) ups :+ ups.head else ups
+        // an id on both sides is deleted
+        val dels = (some(rnd.nextInt(3)) ++
+          Option.when(rnd.nextInt(4) == 0)(upsRep.head)).map(_.toString)
+        val before = Option(new java.io.File(s"$path/data_delta").list())
+          .map(_.length).getOrElse(0)
+        val what = rnd.nextInt(9) match {
+          case 0 => DocumentSink.upsert(batch(upsRep, i), path); "upsert"
+          case 1 =>
+            // a tombstone-only generation
+            DocumentSink.deleteByIds(dels.toDF("document_id"), path)
+            "delete"
+          case 2 =>
+            DocumentSink.save(batch(some(2), i), path, SaveMode.Append)
+            "Append"
+          case 3 =>
+            // a store whose record lacks the stamp (written before it)
+            val node = new com.fasterxml.jackson.databind.ObjectMapper()
+              .readTree(metaFile(path).toFile)
+              .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+            node.remove("line")
+            Files.write(metaFile(path), node.toString.getBytes("UTF-8"))
+            "unstamped"
+          case 4 =>
+            // a crash between the generation's rename and its final
+            // record: the pre-write record stays on disk
+            val pre = Files.readAllBytes(metaFile(path))
+            DocumentSink.upsert(batch(upsRep, i), path)
+            Files.write(metaFile(path), pre)
+            "crashed upsert"
+          case _ =>
+            val n = DocumentSink.write(Some(batch(upsRep, i)),
+              Option.when(dels.nonEmpty)(dels.toDF("document_id")), path)
+            assert(n == DocumentSink.read(spark, path).count(),
+              s"write's own count at step $step")
+            "write"
+        }
+        if (before > 0 && !new java.io.File(s"$path/data_delta").exists)
+          compactions += 1
+        check(s"round $round, $what")
+      }
+    }
+    assert(compactions > 0, "the sequence never reached a compaction")
+  }
+
+  test("a trusted count runs no Spark job — on a synced store and on a " +
+    "store with delta generations; an Append's count still scans") {
+    def doc(rows: (Long, String)*) = DocumentSink.withDocId(
+      rows.toDF("id", "v"), BareId("id"))
+    val synced = tmp()
+    DocumentSink.validatedWrite(doc(1L -> "a", 2L -> "b"), synced, Seq("id"))
+    val deltas = tmp()
+    DocumentSink.upsert(doc(1L -> "a", 2L -> "b", 3L -> "c"), deltas)
+    DocumentSink.upsert(doc(4L -> "d"), deltas)
+    DocumentSink.deleteByIds(Seq("1").toDF("document_id"), deltas)
+    val appended = tmp()
+    DocumentSink.save(doc(1L -> "a"), appended)
+    DocumentSink.save(doc(2L -> "b"), appended, SaveMode.Append)
+    val log = new JobLog(spark)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val j0 = log.drained()
+      assert(DocumentSink.count(spark, synced) == 2)
+      assert(DocumentSink.count(spark, deltas) == 3)
+      val j1 = log.drained()
+      assert(j1 == j0, s"a trusted count ran ${j1 - j0} Spark jobs")
+      assert(DocumentSink.count(spark, appended) == 2)
+      assert(log.drained() > j1, "an Append's record was trusted")
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("an API write and an Append keep _mapping.json's recorded field " +
+    "types and derive types only for new columns") {
+    val path = tmp()
+    val synced = Seq((1L, "Acme", "free text"))
+      .toDF("customer_c_custkey", "customer_c_name", "customer_c_comment")
+      .withColumn("document_id", col("customer_c_custkey").cast("string"))
+    DocumentSink.validatedWrite(synced, path, Seq("customer_c_custkey"),
+      fieldTypes = Map("customer_c_name" -> "keyword",
+        "document_id" -> "keyword", "customer_c_comment" -> "text"))
+    DocumentSink.write(Some(Seq((2L, "Beta", "more", 7))
+      .toDF("customer_c_custkey", "customer_c_name", "customer_c_comment",
+        "customer_c_rank")
+      .withColumn("document_id", col("customer_c_custkey").cast("string"))),
+      None, path)
+    // an Append whose batch lacks a mapped column keeps it too
+    DocumentSink.save(Seq((3L, "Gamma")).toDF("customer_c_custkey",
+        "customer_c_name")
+      .withColumn("document_id", col("customer_c_custkey").cast("string")),
+      path, SaveMode.Append)
+    val mapping = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$path/_mapping.json")))
+    assert(mapping.contains("\"customer_c_name\": {\"type\": \"keyword\"}"),
+      mapping)
+    assert(mapping.contains("\"document_id\": {\"type\": \"keyword\"}"),
+      mapping)
+    assert(mapping.contains("\"customer_c_comment\": {\"type\": \"text\"}"),
+      mapping)
+    assert(mapping.contains("\"customer_c_custkey\": {\"type\": \"long\"}"),
+      mapping)
+    assert(mapping.contains("\"customer_c_rank\": {\"type\": \"integer\"}"),
+      mapping)
+  }
 }

@@ -2092,6 +2092,43 @@ class HttpApiSpec extends SparkSpec
       """"index": "documents", "limit": "3"}""").statusCode() == 200)
   }
 
+  test("search-level size/from, knn k/num_candidates and rrf knobs " +
+    "answer 400 naming the knob on a non-integer") {
+    val vec = queries.PipelineQueries.knnQueryVec.mkString("[", ", ", "]")
+    def knn(k: String, nc: String): String =
+      s""""knn": {"field": "embedding", "query_vector": $vec, """ +
+        s""""k": $k, "num_candidates": $nc}"""
+    val cases = Seq(
+      "size" -> ("""{"index": "documents", "query": {"match": """ +
+        """{"text": "window"}}, "size": "ten"}"""),
+      "from" -> ("""{"index": "documents", "query": {"match": """ +
+        """{"text": "window"}}, "from": "two"}"""),
+      "size" -> ("""{"query": {"multi_match": {"query": "small error"}}, """ +
+        """"size": "five"}"""),
+      "k" -> s"""{"index": "embeddings", ${knn("\"fifty\"", "100")}}""",
+      "num_candidates" ->
+        s"""{"index": "embeddings", ${knn("50", "\"many\"")}}""",
+      "size" -> (s"""{"index": "embeddings", ${knn("50", "100")}, """ +
+        """"size": "ten"}"""),
+      "rank_window_size" -> (s"""{"index": "embeddings", """ +
+        s"""${knn("5", "10")}, "query": {"match_all": {}}, """ +
+        """"rank": {"rrf": {"rank_window_size": "wide"}}}"""),
+      "rank_constant" -> (s"""{"index": "embeddings", """ +
+        s"""${knn("5", "10")}, "query": {"match_all": {}}, """ +
+        """"rank": {"rrf": {"rank_constant": "sixty"}}}"""),
+      "size" -> (s"""{"index": "embeddings", ${knn("5", "10")}, """ +
+        """"query": {"match_all": {}}, "rank": {"rrf": {}}, """ +
+        """"size": "ten"}"""))
+    for ((knob, body) <- cases) {
+      val r = post("/search/advanced", body)
+      assert(r.statusCode() == 400, s"$body: ${r.body().take(300)}")
+      assert(r.body().contains(s"$knob must be an integer"), r.body())
+    }
+    // integers, also as JSON strings, still serve
+    assert(post("/search/advanced", """{"index": "documents", "query": """ +
+      """{"match": {"text": "window"}}, "size": "3"}""").statusCode() == 200)
+  }
+
   test("a request body declared past 100 MB is refused 413 with a JSON " +
     "error before it is read") {
     val sock = new java.net.Socket("127.0.0.1", port)
