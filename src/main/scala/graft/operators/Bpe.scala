@@ -482,7 +482,14 @@ object Bpe {
     * distinct-word table) and the per-word subword count joins back
     * onto the token stream — at 100 TB that join is (word, small-int)
     * against an explode, both shuffled on the word key, while the
-    * k-deep merge projection runs over the comparatively tiny vocab. */
+    * k-deep merge projection runs over the comparatively tiny vocab.
+    *
+    * The returned plan reads a persisted token stage
+    * ([[graft.StageCache.stage]]) that stays cached after the caller's
+    * action. `Bench`, `BenchSome`, `Verify`, `ExplainDump` and
+    * `HttpApi` release it at their query boundary; any other caller
+    * must call [[graft.StageCache.releaseAll]] once its action is done,
+    * or run the call and the action inside [[graft.StageCache.scoped]]. */
   def encodeTokenCounts(docs: DataFrame, idCol: String, textCol: String,
                         merges: Seq[(String, String)]): DataFrame = {
     val encoded = encodedSymbols(col("word"), merges)

@@ -545,7 +545,14 @@ object Dedup {
     * shingle, one per-doc re-agg. No pairwise work anywhere; the
     * shingle key would be xxhash64-narrowed at 100 TB (the string key
     * keeps the DuckDB oracle exact — same trade the jaccard tier
-    * documents). */
+    * documents).
+    *
+    * The returned plan reads a persisted shingle stage
+    * ([[graft.StageCache.stage]]) that stays cached after the caller's
+    * action. `Bench`, `BenchSome`, `Verify`, `ExplainDump` and
+    * `HttpApi` release it at their query boundary; any other caller
+    * must call [[graft.StageCache.releaseAll]] once its action is done,
+    * or run the call and the action inside [[graft.StageCache.scoped]]. */
   def substringDupStats(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 8): DataFrame = {
     import graft.functions.ArrayExpressions.distinctShingles

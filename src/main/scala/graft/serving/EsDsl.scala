@@ -802,9 +802,9 @@ object EsDsl {
         unknownT.mkString(", "))
     val f = Option(term.get("field")).map(_.asText)
       .getOrElse(bad("term suggester needs \"field\""))
-    val size = Option(term.get("size")).map(_.asInt).getOrElse(5)
+    val size = intOpt(term, "size").getOrElse(5)
     if (size <= 0 || size > 100) bad("suggest size must be 1..100")
-    val maxEdits = Option(term.get("max_edits")).map(_.asInt).getOrElse(2)
+    val maxEdits = intOpt(term, "max_edits").getOrElse(2)
     if (maxEdits < 1 || maxEdits > 2) bad("max_edits must be 1 or 2")
     // all three ES modes: `missing` stays silent for in-vocabulary
     // tokens, `always` suggests regardless, `popular` suggests only
@@ -925,9 +925,9 @@ object EsDsl {
         unknownP.mkString(", "))
     val f = Option(ph.get("field")).map(_.asText)
       .getOrElse(bad("phrase suggester needs \"field\""))
-    val size = Option(ph.get("size")).map(_.asInt).getOrElse(5)
+    val size = intOpt(ph, "size").getOrElse(5)
     if (size <= 0 || size > 100) bad("suggest size must be 1..100")
-    val maxEdits = Option(ph.get("max_edits")).map(_.asInt).getOrElse(2)
+    val maxEdits = intOpt(ph, "max_edits").getOrElse(2)
     if (maxEdits < 1 || maxEdits > 2) bad("max_edits must be 1 or 2")
     Option(ph.get("max_errors")).foreach { me =>
       if (!me.isNumber || me.asDouble != 1.0)
@@ -1114,7 +1114,7 @@ object EsDsl {
         s"${unknownC.mkString(", ")}")
     val f = Option(cp.get("field")).map(_.asText)
       .getOrElse(bad("completion suggester needs \"field\""))
-    val size = Option(cp.get("size")).map(_.asInt).getOrElse(5)
+    val size = intOpt(cp, "size").getOrElse(5)
     if (size <= 0 || size > 100) bad("suggest size must be 1..100")
     val skip = Option(cp.get("skip_duplicates")).map { n =>
       if (!n.isBoolean) bad("skip_duplicates must be a boolean")
@@ -2073,7 +2073,7 @@ object EsDsl {
           if (rn.size != 1) bad("exactly one rescore window is supported")
           rn.get(0)
         } else rn
-        val window = Option(r.get("window_size")).map(_.asInt).getOrElse(10)
+        val window = intOpt(r, "window_size").getOrElse(10)
         if (window <= 0 || window > MaxResultWindow)
           bad(s"rescore window_size must be 1..$MaxResultWindow")
         val q2 = Option(r.get("query"))
@@ -4784,10 +4784,9 @@ object EsDsl {
         }
         else bad("only text \"like\" items are supported (no document " +
           "references)")
-      val minTf = Option(b.get("min_term_freq")).map(_.asInt).getOrElse(2)
-      val minDf = Option(b.get("min_doc_freq")).map(_.asInt).getOrElse(5)
-      val maxTerms = Option(b.get("max_query_terms")).map(_.asInt)
-        .getOrElse(25)
+      val minTf = intOpt(b, "min_term_freq").getOrElse(2)
+      val minDf = intOpt(b, "min_doc_freq").getOrElse(5)
+      val maxTerms = intOpt(b, "max_query_terms").getOrElse(25)
       if (maxTerms <= 0 || maxTerms > 500)
         bad("max_query_terms must be 1..500")
       val mltMsm = Option(b.get("minimum_should_match")).map(msmSpec)

@@ -2563,18 +2563,24 @@ final class HttpApi(
     }
 
   /** The entity store's current rows of `ids` — the one id-lookup
-    * path of point reads ([[graft.sinks.DocumentSink.lookup]]); None
-    * if no sync has run. */
+    * path of point reads ([[graft.sinks.DocumentSink.lookup]]), as a
+    * local frame whose `collect()` runs no job; None if no sync has
+    * run. */
   private def lookup(entity: String, ids: Seq[String]): Option[DataFrame] =
     DocumentSink.lookup(spark, s"$outDir/$entity", ids)
 
-  /** GET /{entity}/{id} — point read by document_id from the index. */
+  /** GET /{entity}/{id} — point read by document_id from the index.
+    * The lookup's one scan job is the request's only job: its rows
+    * are a local frame, so the `to_json` projection (the same
+    * generator, options and column order `toJSON` uses) folds on the
+    * driver. */
   private def getDoc(ex: HttpExchange, entity: String, id: String): Unit =
     lookup(entity, Seq(id)) match {
       case None =>
         notFound(ex, "no synced index for", entity)
       case Some(df) =>
-        val rows = df.toJSON.collect()
+        val rows = df.select(to_json(struct(col("*"))))
+          .collect().map(_.getString(0))
         if (rows.isEmpty)
           respond(ex, 404, mapper.createObjectNode()
             .put("error", s"document '$id' not found").toString)

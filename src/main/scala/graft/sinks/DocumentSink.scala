@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.graft.StoreSchemas
 import org.apache.spark.sql.functions._
@@ -463,7 +463,8 @@ object DocumentSink {
 
   /** Latest generation wins per document_id (every row of the winning
     * generation, as a batch repeating an id landed them) and
-    * tombstones drop; the log columns go. */
+    * tombstones drop; the log columns go. [[latestRows]] is the same
+    * rule on the driver, for request-bounded candidates. */
   private def latest(rows: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("document_id"))
@@ -585,26 +586,43 @@ object DocumentSink {
   /** The current line's rows of `ids` — the rows
     * `read(spark, path).filter(document_id ∈ ids)` returns — or None
     * iff nothing was ever written: the one id-lookup path of point
-    * reads ([[idsInLineFrame]] at the newest generation). */
+    * reads. The candidates are collected in one scan job and resolved
+    * on the driver ([[latestRows]]); the result is a local frame, so
+    * collecting it, or projecting it and collecting that, runs no
+    * further job. */
   def lookup(spark: org.apache.spark.sql.SparkSession, path: String,
-             ids: Seq[String]): Option[DataFrame] =
-    Option.unless(lineOnDisk(hadoopFs(spark, path), path).isEmpty)(
-      idsInLineFrame(spark, path, ids, belowSeq = Long.MaxValue))
+             ids: Seq[String]): Option[DataFrame] = {
+    val on = lineOnDisk(hadoopFs(spark, path), path)
+    Option.unless(on.isEmpty) {
+      val (schema, rows) =
+        latestRows(idCandidates(spark, path, on, ids, Long.MaxValue))
+      spark.createDataFrame(rows.asJava, schema)
+    }
+  }
 
   /** The store's line as of just BEFORE delta generation `belowSeq`,
-    * RESTRICTED to `ids`: the base rows of `ids` (as `_seq` 0) unioned
-    * with the delta rows of `ids`, both read with the line's schema,
-    * then the latest `_seq` wins and tombstones drop. Request-bounded
-    * by construction: the only shuffle carries id-filtered rows, never
-    * a base-wide anti-join. On a BUCKETED base the scan adds the ids'
-    * hash-bucket partition predicate, so it prunes to the touched
+    * RESTRICTED to `ids`, resolved by Spark: [[latest]] over
+    * [[idCandidates]]. */
+  private[graft] def idsInLineFrame(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      ids: Seq[String], belowSeq: Long): DataFrame =
+    latest(idCandidates(spark, path, lineOnDisk(hadoopFs(spark, path), path),
+      ids, belowSeq))
+
+  /** The candidate rows of `ids` in the line `on` as of just BEFORE
+    * delta generation `belowSeq`: the base rows of `ids` (as `_seq` 0)
+    * unioned with the delta rows of `ids`, both read with the line's
+    * schema and carrying the log columns. Request-bounded by
+    * construction: only the ids' rows of the base and of each live
+    * generation (at most [[StoreCompactThreshold]]), never a base-wide
+    * anti-join, and no shuffle. On a BUCKETED base the scan adds the
+    * ids' hash-bucket partition predicate, so it prunes to the touched
     * buckets at PLANNING time — a point lookup, not a base scan; on
     * the flat layout the id predicate still pushes to the parquet scan
     * (row-group pruning), just without directory pruning. */
-  private[graft] def idsInLineFrame(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+  private def idCandidates(
+      spark: org.apache.spark.sql.SparkSession, path: String, on: Line,
       ids: Seq[String], belowSeq: Long): DataFrame = {
-    val on = lineOnDisk(hadoopFs(spark, path), path)
     val gens = on.deltas.filter(_ < belowSeq)
     val schema = lineSchema(spark, path).getOrElse(
       throw new IllegalStateException(s"no document store at $path"))
@@ -630,10 +648,30 @@ object DocumentSink {
     }
     val deltas = Option.when(gens.nonEmpty)(
       deltaFrame(spark, path, gens, schema).filter(idPred))
-    latest((base ++ deltas).reduceOption(_.unionByName(_)).getOrElse(
+    (base ++ deltas).reduceOption(_.unionByName(_)).getOrElse(
       spark.createDataFrame(java.util.Collections.emptyList[
         org.apache.spark.sql.Row](),
-        schema.add("_op", StringType).add("_seq", LongType))))
+        schema.add("_op", StringType).add("_seq", LongType)))
+  }
+
+  /** [[latest]] on the driver: `candidates` collected in one job (a
+    * union of scans, no shuffle), then the max `_seq` per document_id
+    * wins — every row of the winning generation, as a batch repeating
+    * an id landed them — and tombstones drop. Returns the rows without
+    * the log columns, and their schema. The candidates must be
+    * request-bounded ([[idCandidates]]): nothing corpus-sized is
+    * collected. */
+  private def latestRows(candidates: DataFrame): (StructType, Seq[Row]) = {
+    val s = candidates.schema
+    val (id, op, sq) = (s.fieldIndex("document_id"), s.fieldIndex("_op"),
+      s.fieldIndex("_seq"))
+    val keep = s.fields.indices.filterNot(i => i == op || i == sq)
+    val rows = candidates.collect().toSeq
+    val top = rows.groupMapReduce(_.get(id))(_.getLong(sq))(math.max)
+    (StructType(keep.map(s.fields)),
+      rows.filter(r => r.getLong(sq) == top(r.get(id)) &&
+          r.getString(op) == "upsert")
+        .map(r => Row.fromSeq(keep.map(r.get))))
   }
 
   /** How many of `ids` exist in the store's line as of just BEFORE
@@ -641,11 +679,14 @@ object DocumentSink {
     * contract needs, computed AFTER the new generation landed (a
     * side may be a lazy plan over the line, so nothing can be counted
     * before the append evaluates it) by reading only the PRIOR
-    * generations plus the id-restricted base. */
-  private def idsInLineCount(
+    * generations plus the id-restricted base: the candidates' id and
+    * log columns, resolved on the driver. */
+  private[graft] def idsInLineCount(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: Seq[String], belowSeq: Long): Long =
-    idsInLineFrame(spark, path, ids, belowSeq).count()
+    latestRows(idCandidates(spark, path,
+        lineOnDisk(hadoopFs(spark, path), path), ids, belowSeq)
+      .select("document_id", "_op", "_seq"))._2.size
 
   /** Land one request's net effect on the store at `path`: `upserts`
     * replace-or-insert by `document_id` (REST per-record re-sync
@@ -660,13 +701,14 @@ object DocumentSink {
     * before the rename); [[readOpt]]'s latest-`_seq` rule resolves
     * it; an id on both sides is deleted. Then, once per call: one
     * id-list-bounded probe of the pre-append line over every landed
-    * id ([[idsInLineFrame]] — on the hive-BUCKETED base written by
-    * bootstrap/compaction it prunes to the ids' buckets at PLANNING
-    * time, so the count costs O(request), plan-pinned in
-    * DocumentSinkSpec), giving count = prev − |existing ∩ (U ∪ D)| +
-    * |U| (prev is the recorded count when its stamp holds, else one
-    * resolved count — so a count left stale by a crash heals at the
-    * next write); one mapping/meta sidecar rewrite from the recorded
+    * id ([[idsInLineCount]]: one scan job, resolved on the driver —
+    * on the hive-BUCKETED base written by bootstrap/compaction it
+    * prunes to the ids' buckets at PLANNING time, so the count costs
+    * O(request), plan-pinned in DocumentSinkSpec), giving
+    * count = prev − |existing ∩ (U ∪ D)| + |U| (prev is the recorded
+    * count when its stamp holds, else one resolved count — so a
+    * count left stale by a crash heals at the next write); one
+    * mapping/meta sidecar rewrite from the recorded
     * schema, keeping every mapped field's recorded type;
     * one delta update of the adjacent search index from the landed
     * generation's stable files (a crash in between leaves the index
@@ -855,8 +897,9 @@ object DocumentSink {
   // `index.gc_deletes`, default 60 s; here: until the next sync
   // rebuild), so a re-created id continues its version line instead of
   // restarting at 1. A doc written by the batch sync with no sidecar
-  // row is version 1. Reads are request-bounded (filter by the
-  // request's id list — a semi-join, never a corpus collect).
+  // row is version 1. Reads are request-bounded (the request's id
+  // list filters both sides' scan, and the few rows it keeps resolve
+  // on the driver — never a corpus collect).
   //
   // The sidecar is LOG-STRUCTURED (ES's translog-then-merge shape):
   // each write request APPENDS one request-sized parquet file to
@@ -881,13 +924,16 @@ object DocumentSink {
     // (corrupt parquet, transient IO) must propagate — silently
     // restarting version lines at the base would answer wrong
     // _version values instead of failing the request.
-    versionLine(spark, path,
-        df => df.filter(col("document_id").isin(ids: _*))) match {
+    versionSides(spark, path) match {
       case None => Map.empty
       case Some(df) =>
-        df.collect()
-          .map(r => String.valueOf(r.getAs[Any]("document_id")) ->
-            ((r.getAs[Long]("version"), r.getAs[Long]("seq_no")))).toMap
+        // the id-filtered base and delta rows come back in one scan
+        // job; the max (seq_no, version) per id is taken on the driver
+        df.filter(col("document_id").isin(ids: _*)).collect().toSeq
+          .groupMapReduce(r => String.valueOf(r.getAs[Any]("document_id")))(
+            r => (r.getAs[Long]("seq_no"), r.getAs[Long]("version")))(
+            Ordering[(Long, Long)].max)
+          .map { case (id, (s, v)) => id -> ((v, s)) }
     }
   }
 
@@ -904,30 +950,31 @@ object DocumentSink {
     StructField("version", LongType, nullable = false),
     StructField("seq_no", LongType, nullable = false)))
 
-  /** The CURRENT version line (base snapshot ∪ append-only deltas,
-    * max seq_no winning per id), or None iff the store has never been
-    * versioned. `pre` narrows BOTH sides BEFORE the latest-wins
-    * reduce — the id-list pushdown that keeps reads request-bounded. */
-  private def versionLine(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          pre: org.apache.spark.sql.DataFrame =>
-                               org.apache.spark.sql.DataFrame =
-                            identity): Option[
-      org.apache.spark.sql.DataFrame] = {
+  /** The `_versions` base snapshot ∪ its append-only deltas, unresolved
+    * (an id may have several rows), or None iff the store has never
+    * been versioned. */
+  private def versionSides(spark: org.apache.spark.sql.SparkSession,
+                           path: String): Option[DataFrame] = {
     val conf = spark.sessionState.newHadoopConf()
     val bp = new org.apache.hadoop.fs.Path(s"$path/_versions")
     val dp = new org.apache.hadoop.fs.Path(s"$path/_versions_delta")
     val fs = bp.getFileSystem(conf)
-    val sides = Seq(bp, dp).filter(fs.exists)
-      .map(p => pre(spark.read.schema(VersionsSchema).parquet(p.toString)))
-    if (sides.isEmpty) None
-    else Some(sides.reduce(_.unionByName(_))
+    Seq(bp, dp).filter(fs.exists)
+      .map(p => spark.read.schema(VersionsSchema).parquet(p.toString))
+      .reduceOption(_.unionByName(_))
+  }
+
+  /** The CURRENT version line (base snapshot ∪ append-only deltas,
+    * max seq_no winning per id), or None iff the store has never been
+    * versioned: the whole-sidecar fold compaction writes. */
+  private[graft] def versionLine(spark: org.apache.spark.sql.SparkSession,
+                                 path: String): Option[DataFrame] =
+    versionSides(spark, path).map(_
       .groupBy(col("document_id"))
       .agg(max(struct(col("seq_no"), col("version"))).as("_vs"))
       .select(col("document_id"),
         col("_vs.version").as("version"),
         col("_vs.seq_no").as("seq_no")))
-  }
 
   /** The index's next `_seq_no` (monotonic per index, like ES's
     * per-shard sequence). 0 for a never-versioned index. */

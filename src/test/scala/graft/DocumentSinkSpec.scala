@@ -657,6 +657,70 @@ class DocumentSinkSpec extends SparkSpec {
     assert(compacted, "the sequence never reached a compaction")
   }
 
+  test("model: readVersions(ids) equals the versionLine fold filtered " +
+    "to ids over generated writeVersions sequences, ids repeated " +
+    "across delta files, stale replays and a compaction") {
+    val rnd = new scala.util.Random(20261021L)
+    val path = tmp()
+    val keys = (1 to 10).map(i => s"k$i")
+    var seq = 0L
+    var folded = false
+    (1 to DocumentSink.VersionsCompactThreshold + 8).foreach { step =>
+      val entries = Seq.fill(1 + rnd.nextInt(4))(keys(rnd.nextInt(keys.size)))
+        .distinct.map { id =>
+          // one in four is a stale replay: an older (or equal) seq_no
+          // at any version, as a delta left over a compaction is
+          val s = if (rnd.nextInt(4) == 0) rnd.nextLong(seq + 1) else seq
+          seq += 1
+          id -> ((1L + rnd.nextInt(6), s))
+        }.toMap
+      DocumentSink.writeVersions(spark, path, entries, seq)
+      folded ||= new java.io.File(s"$path/_versions").isDirectory
+      val probe =
+        (Seq.fill(4)(keys(rnd.nextInt(keys.size))) :+ "absent").distinct
+      val expected = DocumentSink.versionLine(spark, path).get
+        .filter(col("document_id").isin(probe: _*)).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(DocumentSink.readVersions(spark, path, probe) == expected,
+        s"step $step, ids $probe")
+    }
+    assert(folded, "the sequence never reached a compaction")
+  }
+
+  test("lookup and the write-path existence count each run one Spark " +
+    "job and no shuffle stage on a bucketed store with deltas and an " +
+    "id repeated in one generation") {
+    val path = tmp()
+    def doc(rows: (Long, String)*) = DocumentSink.withDocId(
+      rows.toDF("id", "v"), BareId("id"))
+    DocumentSink.upsert(doc((1L to 200L).map(i => i -> s"v$i"): _*), path)
+    DocumentSink.upsert(doc(5L -> "a", 5L -> "b", 300L -> "c"), path)
+    DocumentSink.deleteByIds(Seq("7").toDF("document_id"), path)
+    assert(DocumentSink.storeBuckets(path).isDefined)
+    val ids = Seq("5", "7", "9", "300", "999")
+    def rows(rs: Array[org.apache.spark.sql.Row]) =
+      rs.map(_.toString).toSeq.sorted
+    val expected = rows(DocumentSink.read(spark, path)
+      .filter(col("document_id").isin(ids: _*)).collect())
+    assert(expected.size == 4, expected)
+    val log = new JobLog(spark)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val j0 = log.drained()
+      val s0 = log.shuffleStages
+      val looked = rows(DocumentSink.lookup(spark, path, ids).get.collect())
+      val j1 = log.drained()
+      assert(j1 - j0 == 1, s"lookup ran ${j1 - j0} Spark jobs")
+      assert(log.shuffleStages == s0, "lookup ran a shuffle stage")
+      assert(looked == expected)
+      val n = DocumentSink.idsInLineCount(spark, path, ids, Long.MaxValue)
+      val j2 = log.drained()
+      assert(j2 - j1 == 1, s"the existence count ran ${j2 - j1} Spark jobs")
+      assert(log.shuffleStages == s0, "the existence count ran a shuffle stage")
+      assert(n == 4)
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
   private def metaFile(path: String) =
     java.nio.file.Paths.get(s"$path/_meta.json")
 

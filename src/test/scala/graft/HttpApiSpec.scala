@@ -1568,6 +1568,7 @@ class HttpApiSpec extends SparkSpec
     assert(updated.statusCode() == 200, updated.body())
     assert(updated.body().contains("\"customer_c_name\":\"renamed\""))
     val base = spark.read.parquet(s"$syncedOut/customer/data").schema
+    import org.apache.spark.sql.functions.col
     val line = graft.sinks.DocumentSink.read(spark, s"$syncedOut/customer")
     Seq("customer_c_custkey", "customer_c_nationkey").foreach { c =>
       assert(line.schema(c).dataType == base(c).dataType, c)
@@ -1690,6 +1691,52 @@ class HttpApiSpec extends SparkSpec
       info(s"Spark jobs of one GET: $jobs")
       assert(jobs <= 2, s"one GET ran $jobs Spark jobs")
     } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("a GET by id on a store with delta generations runs exactly 1 " +
+    "Spark job and no shuffle stage, and answers the resolved line's " +
+    "toJSON row") {
+    val updatedId = s"7_${graft.operators.Denormalize.RunTs}"
+    val body = customerBulk(995000, 3) + "\n" + Seq(
+      s"""{"update": {"_index": "customer", "_id": "$updatedId"}}""",
+      """{"doc": {"customer_c_name": "renamed in a delta"}}""",
+      """{"index": {"_index": "customer"}}""",
+      """{"c_custkey": 995200, "c_name": "sparse", "c_nationkey": 3}""")
+      .mkString("\n")
+    Seq(body, customerBulk(995100, 3)).foreach { b =>
+      val r = postAt(syncedPort, "/_bulk", b)
+      assert(r.statusCode() == 200 && !r.body().contains("\"errors\": true"),
+        r.body())
+    }
+    val log = new JobLog(spark)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      // the first GET warms the route; the second is measured
+      assert(getAt(syncedPort, "/customer/995001").statusCode() == 200)
+      val before = log.drained()
+      val shuffles = log.shuffleStages
+      val r = getAt(syncedPort, "/customer/995101")
+      val jobs = log.drained() - before
+      assert(r.statusCode() == 200, r.body())
+      assert(jobs == 1, s"one GET ran $jobs Spark jobs")
+      assert(log.shuffleStages == shuffles,
+        s"one GET ran ${log.shuffleStages - shuffles} shuffle stages")
+    } finally spark.sparkContext.removeSparkListener(log)
+    // the body is byte for byte the resolved line's toJSON row: a
+    // synced document in the base, one updated in a delta, and one
+    // with null fields (a _bulk document that leaves fields out)
+    import org.apache.spark.sql.functions.col
+    val line = graft.sinks.DocumentSink.read(spark, s"$syncedOut/customer")
+    val liveId = s"11_${graft.operators.Denormalize.RunTs}"
+    assert(line.filter(col("document_id") === "995200").head().anyNull)
+    for (id <- Seq(liveId, updatedId, "995200")) {
+      val expected = line.filter(col("document_id") === id).toJSON.collect()
+      val r = getAt(syncedPort, s"/customer/$id")
+      assert(r.statusCode() == 200, r.body())
+      assert(expected.toSeq == Seq(r.body()), s"$id: ${r.body()}")
+    }
+    assert(getAt(syncedPort, s"/customer/$updatedId").body()
+      .contains("\"customer_c_name\":\"renamed in a delta\""))
   }
 
   test("every Spark job of a _bulk runs inside an SQL execution: no " +
@@ -2127,6 +2174,41 @@ class HttpApiSpec extends SparkSpec
     // integers, also as JSON strings, still serve
     assert(post("/search/advanced", """{"index": "documents", "query": """ +
       """{"match": {"text": "window"}}, "size": "3"}""").statusCode() == 200)
+  }
+
+  test("suggester size/max_edits, rescore window_size and " +
+    "more_like_this knobs answer 400 naming the knob on a non-integer") {
+    def suggest(s: String): String =
+      s"""{"index": "documents", "suggest": {"fix": $s}}"""
+    def mlt(knob: String): String =
+      """{"index": "documents", "query": {"more_like_this": """ +
+        s"""{"fields": ["text"], "like": "the window", "$knob": "two"}}}"""
+    val cases = Seq(
+      "size" -> suggest(
+        """{"text": "windoq", "term": {"field": "text", "size": "five"}}"""),
+      "max_edits" -> suggest("""{"text": "windoq", "term": """ +
+        """{"field": "text", "max_edits": "one"}}"""),
+      "size" -> suggest("""{"text": "windoq bath", "phrase": """ +
+        """{"field": "text", "size": "five"}}"""),
+      "max_edits" -> suggest("""{"text": "windoq bath", "phrase": """ +
+        """{"field": "text", "max_edits": "one"}}"""),
+      "size" -> suggest("""{"prefix": "wind", "completion": """ +
+        """{"field": "text", "size": "five"}}"""),
+      "window_size" -> ("""{"index": "documents", "query": {"match": """ +
+        """{"text": "window"}}, "rescore": {"window_size": "wide", """ +
+        """"query": {"rescore_query": {"match_phrase": """ +
+        """{"text": "the window"}}}}}"""),
+      "min_term_freq" -> mlt("min_term_freq"),
+      "min_doc_freq" -> mlt("min_doc_freq"),
+      "max_query_terms" -> mlt("max_query_terms"))
+    for ((knob, body) <- cases) {
+      val r = post("/search/advanced", body)
+      assert(r.statusCode() == 400, s"$body: ${r.body().take(300)}")
+      assert(r.body().contains(s"$knob must be an integer"), r.body())
+    }
+    // integers, also as JSON strings, still serve
+    assert(post("/search/advanced", suggest("""{"text": "windoq", """ +
+      """"term": {"field": "text", "size": "3"}}""")).statusCode() == 200)
   }
 
   test("a request body declared past 100 MB is refused 413 with a JSON " +
